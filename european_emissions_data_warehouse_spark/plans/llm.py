@@ -143,10 +143,9 @@ FROM inter WHERE n_inter / (n_a + n_b - n_inter) >= 0.4
 
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup *clusters*: exact n-gram Jaccard pairs (threshold 0.4) fed
-    into iterative min-label connected components
-    (operators/dedup.py connected_components) — the step that turns pair
-    evidence into dedup groups.  The one genuinely iterative algorithm in
-    the engine; the oracle replays it as a DuckDB recursive CTE."""
+    into connected components (operators/dedup.py connected_components) —
+    the step that turns pair evidence into dedup groups.  The oracle
+    replays it as a DuckDB recursive CTE."""
     from european_emissions_data_warehouse_spark.operators.dedup import connected_components
 
     docs = load_table(spark, sf_dir, "documents")
@@ -182,23 +181,6 @@ WITH RECURSIVE base AS (
 SELECT a AS doc_id, LEAST(a, MIN(b)) AS component
 FROM reach GROUP BY a ORDER BY doc_id
 """
-
-
-def q_dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The trillion-edge variant of q_dedup_components: identical pair
-    evidence, clustered by alternating large-star/small-star contraction
-    (operators/dedup.py connected_components_star) instead of min-label
-    flooding — O(log n) rounds independent of graph diameter.  Same oracle
-    (the labeling is identical by construction; equality also
-    property-tested on random graphs in tests/test_components.py)."""
-    from european_emissions_data_warehouse_spark.operators.dedup import (
-        connected_components_star,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(docs, k=5, unit="word", threshold=0.4)
-    comps = connected_components_star(pairs)
-    return comps.select(F.col("id").alias("doc_id"), "component").orderBy("doc_id")
 
 
 def q_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2827,7 +2809,9 @@ QUERIES = {
     "ngram_jaccard": q_ngram_jaccard,
     "ngram_jaccard_capped": q_ngram_jaccard_capped,
     "dedup_components": q_dedup_components,
-    "dedup_components_star": q_dedup_components_star,
+    # both names run the one clustering function; the star name stays
+    # registered so driver-contract consumers of it keep working
+    "dedup_components_star": q_dedup_components,
     "minhash_neardup": q_minhash_neardup,
     "simhash_neardup": q_simhash_neardup,
     "ann_topk": q_ann_topk,

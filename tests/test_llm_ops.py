@@ -798,6 +798,40 @@ def test_minhash_survives_docs_shorter_than_k(spark):
     )
 
 
+def test_minhash_signature_values_are_pinned(spark):
+    """Signatures are a fixed function of the text: stores written by
+    minhash_store_init are probed with freshly computed signatures, so any
+    drift in the signature expression (operator precedence, int vs long
+    literals under ANSI) would silently stop stored duplicates matching.
+    Every slot is checked against a pure-Python evaluation of the
+    (a_i, b_i) universal-hash family over the engine's own gram hashes,
+    and a few slot values are pinned outright."""
+    from european_emissions_data_warehouse_spark.operators.dedup import (
+        _rolling_grams,
+        minhash_signatures,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog"), (2, "tiny doc"),
+         (3, "Zürich grüßt δ λόγος 漢字 tokens here")],
+        "doc_id long, text string",
+    )
+    mask = 2**31 - 1
+    family = [
+        (((2 * i + 1) * 0x9E3779B9) & mask | 1, (i * 0x85EBCA6B) & mask)
+        for i in range(32)
+    ]
+    grams = {r.id: r.hs for r in _rolling_grams(docs, "doc_id", "text", 5, "word").collect()}
+    sigs = {r.id: list(r.sig) for r in minhash_signatures(docs, "doc_id", "text", k=5).collect()}
+    assert sigs.keys() == grams.keys() == {1, 2, 3}
+    for doc_id, hs in grams.items():
+        assert sigs[doc_id] == [min((h * a + b) & mask for h in hs) for a, b in family]
+    assert sigs[1][:4] == [67650615, 302290704, 464503154, 414592444]
+    assert sigs[2][:4] == [492759132, 1577616255, 514989730, 1599846853]
+    assert sigs[3][:4] == [228158726, 783815037, 6497589, 458461126]
+    assert (sigs[1][31], sigs[2][31], sigs[3][31]) == (438834945, 1911075225, 228538274)
+
+
 def test_incremental_minhash_rejects_mismatched_params(spark, sf_dir, tmp_path):
     """Probing a store with a different num_hashes/bands convention must
     fail loudly: mismatched bucket hashes silently match NOTHING, admitting
