@@ -8,16 +8,16 @@ so one file ≈ one scan split), optionally sorted so downstream predicate
 columns cluster into row groups (min/max pruning — the parquet-native
 analogue of Z-ordering on one dimension).
 
-The rewrite uses the same staging-then-swap protocol as the streaming merge:
-write to `<path>__compact`, then publish by renaming the OLD directory to
-`<path>__trash` and the staging dir over the final path — never
-delete-then-rename (a crash in that window left no copy at the published
-path; code-review r4).  Every rename's boolean return is checked, a failed
-promote restores the old directory, and a crash between the two renames
-leaves the previous data intact under `__trash` (recover by renaming it
-back).  A reader racing the swap can still see a missing path for an
-instant — for log-committed publishes use SnapshotTable.optimize, which
-this module's in-place form complements for plain directories.
+The rewrite is staging-then-swap: write to `<path>__compact` (or
+`__zorder`), then publish by renaming the OLD directory to `<path>__trash`
+and the staging dir over the final path — never delete-then-rename, so no
+crash leaves the published path without a copy.  Every rename's boolean
+return is checked, a failed promote restores the old directory, and a
+crash between the two renames leaves the previous data intact under
+`__trash`, which the next run restores before it reads.  A reader racing
+the swap can still see a missing path for an instant — for log-committed
+publishes use SnapshotTable.optimize, which this module's in-place form
+complements for plain directories.
 """
 
 from __future__ import annotations
@@ -117,8 +117,7 @@ def _recover_interrupted_swap(spark: SparkSession, final: str) -> None:
     """Heal a crash between _swap_into's two renames: the data then lives
     only under ``{final}__trash`` and ``final`` is missing — restore it so
     the next maintenance run (or reader) sees the full table instead of
-    crashing on a nonexistent path (code-review r4; the streaming merge's
-    recover_interrupted_swap does the same for its __trash_N convention)."""
+    crashing on a nonexistent path."""
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
     path_cls = jvm.org.apache.hadoop.fs.Path

@@ -5,7 +5,7 @@ Reference parity for the Postgres load path (SURVEY.md §2.1 O13–O17):
 - O16 upsert  — ``INSERT ... ON CONFLICT (key) DO UPDATE SET value = EXCLUDED``
   (reference scripts/lambda_handler_warehouse.py:95-101): last write wins on
   the logical key.  Spark has no constraints and no in-place update, so the
-  merge is expressed relationally, in two equivalent forms.
+  merge is expressed relationally, as an anti join plus a union.
 - O13 surrogate key — ``id SERIAL PRIMARY KEY``
   (reference scripts/lambda_handler_warehouse.py:54): the reference's ids are
   arrival-ordered and unstable across rebuilds (SURVEY.md §2.1), so we
@@ -14,13 +14,11 @@ Reference parity for the Postgres load path (SURVEY.md §2.1 O13–O17):
   becomes a validation operator, since the merge guarantees key uniqueness by
   construction.
 
-Scale notes (100 TB): the anti-join form shuffles both sides on the key once —
+Scale notes (100 TB): the anti join shuffles both sides on the key once —
 with the incoming batch typically small relative to the warehouse, AQE turns
-the anti join into a broadcast and the only shuffle left is the final write.
-The window form shuffles the union once on the key; prefer it when old/new are
-comparable in size.  With a transactional table format (Delta/Iceberg) this
-operator maps 1:1 onto MERGE INTO; the relational forms here are
-format-agnostic.
+it into a broadcast and the only shuffle left is the final write.  With a
+transactional table format (Delta/Iceberg) this operator maps 1:1 onto
+MERGE INTO; the relational form here is format-agnostic.
 """
 
 from __future__ import annotations
@@ -39,11 +37,9 @@ def upsert_anti_join(old: DataFrame, new: DataFrame, key: Sequence[str]) -> Data
     batch may contain key collisions — the reference gets the same effect
     from sequential per-file imports, lambda_handler_warehouse.py:79).
 
-    The anti join is NULL-SAFE on the key: a plain equality never matches a
-    NULL key, so an old NULL-key row survived alongside every new one and
-    the two upsert forms disagreed (upsert_window's partitionBy groups
-    nulls; code-review r4).  EqualNullSafe is still a hash-join key, so the
-    plan shape is unchanged.
+    The anti join is NULL-SAFE on the key: a NULL-key row in ``new``
+    replaces the NULL-key row in ``old``, as any other key would.
+    EqualNullSafe is still a hash-join key, so the plan shape is unchanged.
     """
     key = list(key)
     nk = new.select(*[F.col(k).alias(f"__nk_{k}") for k in key]).distinct()
@@ -53,26 +49,6 @@ def upsert_anti_join(old: DataFrame, new: DataFrame, key: Sequence[str]) -> Data
         cond = c if cond is None else cond & c
     survivors = old.join(nk, on=cond, how="left_anti")
     return survivors.unionByName(new).select(*old.columns)
-
-
-def upsert_window(old: DataFrame, new: DataFrame, key: Sequence[str]) -> DataFrame:
-    """Last-write-wins merge, window-dedup form: union old and new with a
-    precedence tag, keep rank-1 per key (new beats old).
-
-    Same precondition as upsert_anti_join: ``new`` must be key-unique
-    (feed through dedupe_last first).  With an intra-batch duplicate key
-    the rank-1 pick ties on __prec and keeps a NONDETERMINISTIC winner
-    here, while the anti-join form keeps BOTH rows — the documented
-    equivalence of the two forms holds only on clean input (code-review
-    r4, operators pass)."""
-    key = list(key)
-    tagged = old.withColumn("__prec", F.lit(0)).unionByName(new.withColumn("__prec", F.lit(1)))
-    w = Window.partitionBy(*key).orderBy(F.col("__prec").desc())
-    return (
-        tagged.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__prec")
-    )
 
 
 def dedupe_last(df: DataFrame, key: Sequence[str], order_by: Sequence[str]) -> DataFrame:
@@ -220,13 +196,11 @@ def check_unique(df: DataFrame, key: Sequence[str]) -> int:
     """MERGE-contract uniqueness: the number of keys holding >1 row
     (0 == the upsert precondition holds).  NULL keys GROUP TOGETHER here
     — deliberately stricter than Postgres UNIQUE (which admits multiple
-    NULLs), because the null-safe merge forms (upsert_anti_join's
-    eqNullSafe, upsert_window's partitionBy) also treat NULL keys as one
-    identity, so two NULL-key rows really would collide at merge time.
-    For Postgres-parity UNIQUE validation (NULLs never conflict) use
-    expectations.table_expectations' unique rule, which skips NULLs —
-    the two checks answer different questions (code-review r4, operators
-    pass: the disagreement is intentional, now documented on both)."""
+    NULLs), because upsert_anti_join's null-safe key match also treats
+    NULL keys as one identity, so two NULL-key rows really would collide
+    at merge time.  For Postgres-parity UNIQUE validation (NULLs never
+    conflict) use expectations.table_expectations' unique rule, which
+    skips NULLs — the two checks answer different questions."""
     return (
         df.groupBy(*key).agg(F.count(F.lit(1)).alias("n")).filter(F.col("n") > 1).count()
     )

@@ -238,16 +238,6 @@ class SnapshotTable:
             out.add(int(b))
         return out
 
-    def commit_generations(self) -> set[str]:
-        """Distinct ``ckpt_gen`` stamps across streaming commits (absent
-        stamps excluded) — lets additive-state streams refuse to merge a
-        NEW checkpoint generation into state built by an old one."""
-        return {
-            g
-            for v in self.history()
-            if (g := self.commit_meta(v).get("ckpt_gen")) is not None
-        }
-
     def last_applied_batch(
         self, gen: str | None = None, history: list[int] | None = None
     ) -> int | None:
@@ -277,9 +267,9 @@ class SnapshotTable:
         """The ``ckpt_gen`` stamp of the newest stamped commit (None when
         no commit carries one).  For tables whose stream REFUSES foreign
         generations (the CMS sketch), the newest stamp is the only one that
-        can exist, so this replaces a full-history commit_generations scan
-        in the per-batch guard.  ``history``: optional pre-listed history,
-        as in last_applied_batch."""
+        can exist, so the per-batch guard reads one manifest, not the whole
+        history.  ``history``: optional pre-listed history, as in
+        last_applied_batch."""
         for v in reversed(self.history() if history is None else history):
             g = self.commit_meta(v).get("ckpt_gen")
             if g is not None:

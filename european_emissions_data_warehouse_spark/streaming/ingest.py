@@ -12,17 +12,21 @@ drop-a-file-and-it-ingests semantics — each new file becomes a micro-batch,
 processed then committed to the checkpoint, and the query drains and stops
 (so it composes with batch orchestration).  The warehouse upsert runs in
 `foreachBatch` via the same merge operator the batch path uses (O16 parity:
-last write wins on the logical key).
+last write wins on the logical key), and every batch lands as one commit of
+a versioned :class:`SnapshotTable` (:func:`run_snapshot_ingest`).
 
 Exactly-once story: the file-source checkpoint deduplicates *inputs* across
-restarts; the merge makes re-processing *idempotent* on the key — together
-they match the reference's at-least-once delivery + idempotent upsert
+restarts; each commit records its micro-batch id and checkpoint generation
+in the manifest, so a batch replayed after a crash between the table commit
+and the checkpoint commit is recognised and skipped
+(:func:`_run_ledgered_stream`).  The merge is also idempotent on the key,
+which matches the reference's at-least-once delivery + idempotent upsert
 (SURVEY.md §2.2 streaming row).
 
 At scale: maxFilesPerTrigger bounds micro-batch size; the merge's anti-join
 broadcasts the (small) incoming batch against the warehouse, so steady-state
-cost is one warehouse scan per trigger — switch the sink to a transactional
-format (Delta/Iceberg MERGE) to avoid even that rewrite."""
+cost is one snapshot scan and rewrite per trigger — switch the sink to a
+transactional format (Delta/Iceberg MERGE) to avoid even that rewrite."""
 
 from __future__ import annotations
 
@@ -61,160 +65,13 @@ def stream_from_directory(
     schema: StructType,
     fmt: str = "parquet",
     max_files_per_trigger: int | None = None,
-    clean_source: str | None = None,
-    source_archive_dir: str | None = None,
-    max_file_age: str | None = None,
 ) -> DataFrame:
     """File-source stream over a landing directory (the raw-bucket stand-in).
-
-    Production knobs (code-review r4, streaming scale pass): without
-    ``clean_source`` ('archive'/'delete') the landing directory and the
-    source's seen-files map grow forever, and every trigger's driver-side
-    listing is O(all files ever landed) — minutes per trigger within weeks
-    at 100 TB/day.  ``max_file_age`` bounds the seen-files map instead
-    when files are cleaned externally."""
+    ``max_files_per_trigger`` bounds each micro-batch to that many files."""
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    if clean_source is not None:
-        reader = reader.option("cleanSource", clean_source)
-    if source_archive_dir is not None:
-        reader = reader.option("sourceArchiveDir", source_archive_dir)
-    if max_file_age is not None:
-        reader = reader.option("maxFileAge", max_file_age)
     return reader.format(fmt).load(src_dir)
-
-
-def run_incremental_upsert(
-    stream: DataFrame,
-    warehouse_path: str,
-    checkpoint_path: str,
-    key: Sequence[str],
-    order_by: Sequence[str],
-    output_mode: str = "append",
-) -> None:
-    """Drain all currently-available files into the warehouse with
-    last-write-wins merge semantics, then stop (availableNow).
-
-    Each micro-batch: collapse intra-batch key collisions (later-file-wins,
-    mirroring the reference's sequential per-file imports), then merge into
-    the existing warehouse parquet.  The read-modify-overwrite footgun
-    (SURVEY.md §7.4: mode('overwrite') deletes the input it is still lazily
-    reading) is avoided by writing the merged result to a staging directory
-    and swapping it in — never a driver-side collect, so the pattern holds
-    at any warehouse size.
-
-    The swap parks the previous table in a trash directory BEFORE renaming
-    the staging dir over the final path (never delete-then-rename): at no
-    instant do the only bytes live under a path a crash would strand.
-    Every rename's boolean return is checked (Hadoop FileSystem.rename
-    reports failure by returning false, not raising) so a failed swap
-    aborts the batch instead of committing the checkpoint with the merged
-    data stranded in staging; and a crash BETWEEN the two renames is
-    healed on replay — merge_batch restores the newest ``__trash_N`` dir
-    as the table before reading, so the replayed merge sees the full
-    warehouse, never a truncated one.  The swap is still two renames, not
-    one atomic publish — a reader racing the swap can see a missing path
-    for an instant.  For the log-committed guarantee (readers pin a
-    version, concurrent writers conflict cleanly, crash-replayed batches
-    are skipped) use :func:`run_snapshot_ingest`, which this function
-    predates and which supersedes it wherever history is wanted."""
-    spark = stream.sparkSession
-    key = list(key)
-
-    def _fs(for_path: str):
-        # resolve the PATH's filesystem, not the default one — a warehouse
-        # on s3a:// with an hdfs:// default otherwise dies with "Wrong FS"
-        # on the first swap (code-review r4)
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(for_path)
-        return jvm, p.getFileSystem(conf)
-
-    def _rename_or_raise(fs, src, dst) -> None:
-        if not fs.rename(src, dst):
-            raise IOError(
-                f"run_incremental_upsert: rename {src} -> {dst} failed "
-                "(FileSystem.rename returned false); aborting the batch so "
-                "the checkpoint does not commit past unmerged data"
-            )
-
-    def recover_interrupted_swap(final: str) -> None:
-        """If a prior swap crashed between its two renames the table lives
-        under ``{final}__trash_N`` and ``final`` is missing — restore the
-        newest trash dir so the replayed merge reads the full warehouse."""
-        jvm, fs = _fs(final)
-        final_p = jvm.org.apache.hadoop.fs.Path(final)
-        if fs.exists(final_p):
-            return
-        parent = final_p.getParent()
-        if parent is None or not fs.exists(parent):
-            return
-        prefix = final_p.getName() + "__trash_"
-        stranded = [
-            st.getPath()
-            for st in fs.listStatus(parent)
-            if st.getPath().getName().startswith(prefix)
-        ]
-        if not stranded:
-            return
-        newest = max(stranded, key=lambda p: int(p.getName().rsplit("_", 1)[1]))
-        _rename_or_raise(fs, newest, final_p)
-
-    def swap_dirs(staging: str, final: str, batch_id: int) -> None:
-        jvm, fs = _fs(final)
-        final_p = jvm.org.apache.hadoop.fs.Path(final)
-        staging_p = jvm.org.apache.hadoop.fs.Path(staging)
-        trash_p = jvm.org.apache.hadoop.fs.Path(f"{final}__trash_{batch_id}")
-        if fs.exists(trash_p):
-            fs.delete(trash_p, True)  # leftover from a crashed prior swap
-        had_final = fs.exists(final_p)
-        if had_final:
-            _rename_or_raise(fs, final_p, trash_p)
-        try:
-            _rename_or_raise(fs, staging_p, final_p)
-        except IOError:
-            if had_final:  # put the old table back before surfacing
-                fs.rename(trash_p, final_p)
-            raise
-        if had_final:
-            fs.delete(trash_p, True)
-
-    def merge_batch(batch: DataFrame, batch_id: int) -> None:
-        # materialized: upsert_anti_join references `cleaned` twice
-        # (distinct-key frame + union) — without this the batch input
-        # re-scans and the dedupe window re-runs per trigger (code-review
-        # r4, streaming scale pass)
-        cleaned = dedupe_last(batch, key, order_by).localCheckpoint(eager=False)
-        recover_interrupted_swap(warehouse_path)
-        # existence is probed with the FS API, never inferred from a read
-        # failure: a transient read error (throttle, permission blip) used
-        # to flip this into the bootstrap branch and OVERWRITE the whole
-        # warehouse with one micro-batch (code-review r4)
-        jvm, fs = _fs(warehouse_path)
-        exists = fs.exists(jvm.org.apache.hadoop.fs.Path(warehouse_path))
-        staging = f"{warehouse_path}__staging_{batch_id}"
-        if exists:
-            old = spark.read.parquet(warehouse_path)
-            upsert_anti_join(old, cleaned, key).write.mode("overwrite").parquet(staging)
-        else:
-            # bootstrap goes through the SAME staging+swap path: writing
-            # straight to warehouse_path left a partial directory on a
-            # mid-write crash, and the replay's exists-probe then took the
-            # merge branch against an unreadable table — permanently wedged
-            # (code-review r4, second pass).  The swap's rename is atomic,
-            # so the warehouse either doesn't exist yet or is complete.
-            cleaned.write.mode("overwrite").parquet(staging)
-        swap_dirs(staging, warehouse_path, batch_id)
-
-    (
-        stream.writeStream.foreachBatch(merge_batch)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
 
 
 def run_snapshot_ingest(
@@ -230,15 +87,13 @@ def run_snapshot_ingest(
     time-travelable snapshot per micro-batch, with rollback and vacuum from
     operators/snapshots.py for free.
 
-    This replaces run_incremental_upsert's destructive rename-swap with the
-    commit log's atomic rename-CAS publish: concurrent writers conflict
-    cleanly (ConcurrentCommitError) instead of clobbering, readers pin a
-    version and never observe a half-written table, and the exactly-once
-    story is the file-source checkpoint (input ledger) plus batch-id-stamped
-    commits: each commit records its micro-batch id in the manifest, so a
-    batch replayed after a crash between snapshot commit and checkpoint
-    commit is recognized and skipped — the version history is identical
-    across failure replays, not merely content-identical (ADVICE r2)."""
+    Publish is the commit log's rename-CAS: concurrent writers conflict
+    cleanly (ConcurrentCommitError) instead of clobbering, and readers pin
+    a version and never observe a half-written table.  Each commit records
+    its micro-batch id in the manifest, so a batch replayed after a crash
+    between snapshot commit and checkpoint commit is recognized and
+    skipped — the version history is identical across failure replays,
+    not merely content-identical."""
     key = list(key)
     _run_ledgered_stream(
         stream,

@@ -87,14 +87,16 @@ def running_totals(events_stream: DataFrame) -> DataFrame:
 
 def run_totals_drain(totals: DataFrame, warehouse_path: str, checkpoint_path: str) -> None:
     """Drain available input and upsert each batch's refreshed totals into a
-    parquet view keyed by user (later batch wins — totals are monotone in
-    n_events, which doubles as the precedence column).
+    versioned :class:`SnapshotTable` keyed by user, one version per batch
+    (later batch wins — totals are monotone in n_events, which doubles as
+    the precedence column).  Read it with ``SnapshotTable(spark,
+    warehouse_path).read()``.
 
     transformWithState requires the RocksDB state store provider; it is set
     for this query and restored afterwards so batch-oriented tests sharing
     the session are unaffected."""
     from european_emissions_data_warehouse_spark.streaming.ingest import (
-        run_incremental_upsert,
+        run_snapshot_ingest,
     )
 
     spark = totals.sparkSession
@@ -102,13 +104,12 @@ def run_totals_drain(totals: DataFrame, warehouse_path: str, checkpoint_path: st
     prior = spark.conf.get(conf_key, None)
     spark.conf.set(conf_key, _ROCKSDB)
     try:
-        run_incremental_upsert(
+        run_snapshot_ingest(
             totals,
             warehouse_path,
             checkpoint_path,
             key=["user_id"],
             order_by=["n_events"],
-            output_mode="update",
         )
     finally:
         if prior is None:

@@ -12,7 +12,6 @@ import pytest
 from european_emissions_data_warehouse_spark.operators.merge import (
     check_unique,
     upsert_anti_join,
-    upsert_window,
     with_surrogate_key,
 )
 from european_emissions_data_warehouse_spark.plans.emissions import (
@@ -88,7 +87,7 @@ def test_types_match_warehouse_ddl(spark, fixture_rows):
     assert dtypes["Country"] == "string"
 
 
-@pytest.mark.parametrize("merge", [upsert_anti_join, upsert_window])
+@pytest.mark.parametrize("merge", [upsert_anti_join])
 def test_upsert_last_write_wins(spark, fixture_rows, merge):
     old = clean_emissions(raw_df(spark, fixture_rows))
     # re-ingest with a changed value for the GOOD key (FIXTURES.md F3 check)
@@ -101,7 +100,7 @@ def test_upsert_last_write_wins(spark, fixture_rows, merge):
     assert check_unique(merged, WAREHOUSE_KEY) == 0
 
 
-@pytest.mark.parametrize("merge", [upsert_anti_join, upsert_window])
+@pytest.mark.parametrize("merge", [upsert_anti_join])
 def test_upsert_idempotent(spark, fixture_rows, merge):
     cleaned = clean_emissions(raw_df(spark, fixture_rows))
     twice = merge(cleaned, cleaned, WAREHOUSE_KEY)

@@ -3,7 +3,8 @@
 The reference's ON CONFLICT upsert has three laws worth pinning beyond
 example tests (reference scripts/lambda_handler_warehouse.py:95-101):
 
-1. form equivalence — the anti-join and window merge strategies agree;
+1. model agreement — the anti-join merge equals a pure-Python dict model
+   of last write wins;
 2. idempotence — merging the same batch twice changes nothing;
 3. key uniqueness — any merge output satisfies the UNIQUE constraint.
 """
@@ -21,7 +22,6 @@ from european_emissions_data_warehouse_spark.operators.merge import (
     dedupe_last,
     scd2_from_changelog,
     upsert_anti_join,
-    upsert_window,
 )
 
 # rows: (key, value).  Small key space forces collisions; value carries
@@ -40,13 +40,20 @@ def _df(spark, rows):
 class TestMergeLaws:
     @given(old=frame, new=frame)
     @settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
-    def test_forms_agree_and_unique(self, spark, old, new):
+    def test_anti_join_matches_model_and_unique(self, spark, old, new):
         old_df = dedupe_last(_df(spark, old), ["k"], ["v"])
         new_df = dedupe_last(_df(spark, new), ["k"], ["v"])
-        a = sorted(map(tuple, upsert_anti_join(old_df, new_df, ["k"]).collect()))
-        w = sorted(map(tuple, upsert_window(old_df, new_df, ["k"]).collect()))
-        assert a == w
-        assert check_unique(upsert_anti_join(old_df, new_df, ["k"]), ["k"]) == 0
+        merged = upsert_anti_join(old_df, new_df, ["k"])
+        # model: dedupe_last keeps the largest v per key within a side,
+        # then every key present in `new` replaces the one in `old`
+        model = {}
+        for side in (old, new):
+            batch = {}
+            for k, v in side:
+                batch[k] = max(batch.get(k, v), v)
+            model.update(batch)
+        assert sorted(map(tuple, merged.collect())) == sorted(model.items())
+        assert check_unique(merged, ["k"]) == 0
 
     @given(old=frame, new=frame)
     @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
@@ -160,19 +167,17 @@ def test_time_weighted_value_matches_reference(spark, events, tmp_path_factory):
     assert got == want
 
 
-def test_upsert_forms_agree_on_null_keys(spark):
-    """A NULL-key row updated by a NULL-key row: the anti-join form used a
-    null-unsafe equality, so the old row survived alongside the new one
-    while the window form kept exactly one — the documented equivalence
-    was broken (code-review r4)."""
+def test_upsert_replaces_null_key_row(spark):
+    """A NULL-key row updated by a NULL-key row: the null-safe anti join
+    keeps exactly the new row, as for any other key (a null-unsafe
+    equality would let the old row survive alongside it)."""
     old = spark.createDataFrame(
         [(None, 1.0), ("a", 2.0)], "k string, v double"
     )
     new = spark.createDataFrame([(None, 9.0)], "k string, v double")
     aj = upsert_anti_join(old, new, ["k"])
-    wn = upsert_window(old, new, ["k"])
     key = lambda df: sorted(((r["k"] or ""), r["v"]) for r in df.collect())
-    assert key(aj) == key(wn) == [("", 9.0), ("a", 2.0)]
+    assert key(aj) == [("", 9.0), ("a", 2.0)]
     assert check_unique(aj, ["k"]) == 0
 
 

@@ -13,7 +13,6 @@ from european_emissions_data_warehouse_spark.sources.readers import load_table
 from european_emissions_data_warehouse_spark.streaming.ingest import (
     dedup_stream,
     purchase_view_stream_join,
-    run_incremental_upsert,
     run_windowed_counts,
     stream_from_directory,
 )
@@ -32,150 +31,6 @@ EVENT_SCHEMA = (
 def events_batch(spark, sf_dir):
     # materialized with µs timestamps (the nanos parquet needs load_table)
     return load_table(spark, sf_dir, "events")
-
-
-def test_file_drop_ingest_with_upsert(spark, events_batch, tmp_path):
-    """Drop file 1, drain; drop file 2 with overlapping keys, drain —
-    the warehouse must show last-write-wins on event_id, like the
-    reference's re-ingest path (lambda_handler_warehouse.py:95-101)."""
-    landing = str(tmp_path / "landing")
-    warehouse = str(tmp_path / "warehouse")
-    ckpt = str(tmp_path / "ckpt")
-
-    first = events_batch.filter(F.col("event_id") < 100)
-    first.coalesce(1).write.mode("overwrite").parquet(landing)
-
-    def drain():
-        stream = stream_from_directory(
-            spark, landing, spark.read.parquet(landing).schema
-        )
-        run_incremental_upsert(
-            stream, warehouse, ckpt, key=["event_id"], order_by=["ts", "value"]
-        )
-
-    drain()
-    wh1 = spark.read.parquet(warehouse)
-    assert wh1.count() == first.count()
-
-    # second drop: 50 updated events (value bumped) + 20 new ones
-    updates = (
-        events_batch.filter(F.col("event_id") < 50)
-        .withColumn("value", F.lit(12345.0))
-    )
-    news = events_batch.filter(
-        (F.col("event_id") >= 100) & (F.col("event_id") < 120)
-    )
-    updates.unionByName(news).coalesce(1).write.mode("append").parquet(landing)
-    drain()
-
-    wh2 = spark.read.parquet(warehouse)
-    assert wh2.count() == first.count() + 20
-    assert check_unique(wh2, ["event_id"]) == 0
-    assert (
-        wh2.filter((F.col("event_id") < 50) & (F.col("value") != 12345.0)).count() == 0
-    )
-    shutil.rmtree(str(tmp_path), ignore_errors=True)
-
-
-def test_interrupted_swap_recovers_stranded_table(spark, events_batch, tmp_path):
-    """A crash between swap_dirs' two renames leaves the table under
-    ``warehouse__trash_N`` with the final path missing.  The next drain
-    must restore it before merging — NOT silently reinitialize the
-    warehouse with only the replayed batch's rows (code-review r4)."""
-    import os
-
-    landing = str(tmp_path / "landing")
-    warehouse = str(tmp_path / "warehouse")
-    ckpt = str(tmp_path / "ckpt")
-
-    first = events_batch.filter(F.col("event_id") < 100)
-    first.coalesce(1).write.mode("overwrite").parquet(landing)
-    schema = spark.read.parquet(landing).schema
-
-    def drain():
-        run_incremental_upsert(
-            stream_from_directory(spark, landing, schema),
-            warehouse,
-            ckpt,
-            key=["event_id"],
-            order_by=["ts", "value"],
-        )
-
-    drain()
-    n_first = spark.read.parquet(warehouse).count()
-    assert n_first == first.count()
-
-    # Simulate the crash window: final renamed to trash, staging never
-    # promoted (an older leftover trash must lose to the newest).
-    os.rename(warehouse, warehouse + "__trash_3")
-    os.makedirs(warehouse + "__trash_1")
-
-    news = events_batch.filter(
-        (F.col("event_id") >= 100) & (F.col("event_id") < 120)
-    )
-    news.coalesce(1).write.mode("append").parquet(landing)
-    drain()
-
-    wh = spark.read.parquet(warehouse)
-    assert wh.count() == n_first + 20  # old rows survived the crash
-    assert check_unique(wh, ["event_id"]) == 0
-    shutil.rmtree(str(tmp_path), ignore_errors=True)
-
-
-def test_bootstrap_goes_through_staging_swap(spark, events_batch, tmp_path):
-    """A crash mid-bootstrap-write must leave warehouse_path ABSENT, not a
-    partial directory: the old direct write wedged every replay (exists
-    probe -> merge branch -> unreadable read) with no self-heal.  Bootstrap
-    now stages and promotes by atomic rename, so a replay over the crashed
-    attempt's staging garbage must still bootstrap cleanly (code-review
-    r4, second pass)."""
-    import os
-
-    landing = str(tmp_path / "landing")
-    warehouse = str(tmp_path / "warehouse")
-    ckpt = str(tmp_path / "ckpt")
-
-    first = events_batch.filter(F.col("event_id") < 100)
-    first.coalesce(1).write.mode("overwrite").parquet(landing)
-    schema = spark.read.parquet(landing).schema
-
-    # leftover staging dir from a crashed first-bootstrap attempt
-    os.makedirs(warehouse + "__staging_0")
-    with open(warehouse + "__staging_0/garbage", "w") as fh:
-        fh.write("partial")
-
-    run_incremental_upsert(
-        stream_from_directory(spark, landing, schema),
-        warehouse,
-        ckpt,
-        key=["event_id"],
-        order_by=["ts", "value"],
-    )
-    wh = spark.read.parquet(warehouse)
-    assert wh.count() == first.count()
-    assert not os.path.exists(warehouse + "__staging_0"), "staging must be promoted"
-    shutil.rmtree(str(tmp_path), ignore_errors=True)
-
-
-def test_checkpoint_no_reprocess(spark, events_batch, tmp_path):
-    """Draining twice without new files must not change the warehouse
-    (file-source checkpoint = the exactly-once input ledger)."""
-    landing = str(tmp_path / "landing")
-    warehouse = str(tmp_path / "warehouse")
-    ckpt = str(tmp_path / "ckpt")
-    events_batch.limit(50).coalesce(1).write.mode("overwrite").parquet(landing)
-    schema = spark.read.parquet(landing).schema
-
-    for _ in range(2):
-        run_incremental_upsert(
-            stream_from_directory(spark, landing, schema),
-            warehouse,
-            ckpt,
-            key=["event_id"],
-            order_by=["ts"],
-        )
-    assert spark.read.parquet(warehouse).count() == 50
-    shutil.rmtree(str(tmp_path), ignore_errors=True)
 
 
 def test_windowed_counts_match_batch(spark, events_batch, tmp_path):
@@ -282,23 +137,41 @@ def test_streaming_dedup_drops_in_horizon_duplicates(spark, events_batch, tmp_pa
 
 def test_rate_limited_ingest_batches(spark, events_batch, tmp_path):
     """maxFilesPerTrigger=1 over 3 landed files: three micro-batches drain
-    sequentially, and the merged warehouse equals the all-at-once result."""
+    sequentially into three versions, and the head equals the all-at-once
+    result."""
+    from european_emissions_data_warehouse_spark.operators.snapshots import SnapshotTable
+    from european_emissions_data_warehouse_spark.streaming.ingest import (
+        run_snapshot_ingest,
+    )
+
     landing = str(tmp_path / "landing")
-    warehouse = str(tmp_path / "warehouse")
-    ckpt = str(tmp_path / "ckpt")
     for i in range(3):
         events_batch.filter(F.col("event_id") % 3 == i).coalesce(1).write.mode(
             "append"
         ).parquet(landing)
     schema = spark.read.parquet(landing).schema
 
-    stream = stream_from_directory(
-        spark, landing, schema, max_files_per_trigger=1
-    )
-    run_incremental_upsert(stream, warehouse, ckpt, key=["event_id"], order_by=["ts"])
-    wh = spark.read.parquet(warehouse)
-    assert wh.count() == events_batch.count()
-    assert check_unique(wh, ["event_id"]) == 0
+    def drain(name, max_files):
+        run_snapshot_ingest(
+            stream_from_directory(
+                spark, landing, schema, max_files_per_trigger=max_files
+            ),
+            str(tmp_path / name),
+            str(tmp_path / f"{name}_ckpt"),
+            key=["event_id"],
+            order_by=["ts"],
+        )
+        return SnapshotTable(spark, str(tmp_path / name))
+
+    limited = drain("limited", 1)
+    at_once = drain("at_once", None)
+    assert limited.history() == [0, 1, 2]
+    assert at_once.history() == [0]
+    head, want = limited.read(), at_once.read()
+    assert head.count() == events_batch.count()
+    assert head.exceptAll(want).count() == 0 and want.exceptAll(head).count() == 0
+    assert check_unique(head, ["event_id"]) == 0
+    shutil.rmtree(str(tmp_path), ignore_errors=True)
 
 
 def test_stream_static_enrichment(spark, events_batch, tmp_path):
@@ -398,6 +271,7 @@ def test_transform_with_state_totals_match_batch(spark, events_batch, tmp_path):
     maintained across 3 rate-limited micro-batches must equal the batch
     groupBy — the streaming-materialized-view contract.  Skips where the
     protobuf channel dependency is absent (state.py state_v2_available)."""
+    from european_emissions_data_warehouse_spark.operators.snapshots import SnapshotTable
     from european_emissions_data_warehouse_spark.streaming.state import (
         running_totals,
         run_totals_drain,
@@ -424,9 +298,10 @@ def test_transform_with_state_totals_match_batch(spark, events_batch, tmp_path):
     totals = running_totals(stream)
     run_totals_drain(totals, warehouse, ckpt)
 
+    head = SnapshotTable(spark, warehouse).read()
     got = {
         r["user_id"]: (r["n_events"], round(r["total_value"], 6))
-        for r in spark.read.parquet(warehouse).collect()
+        for r in head.collect()
     }
     want = {
         r["user_id"]: (r["n"], round(r["tv"], 6))
@@ -435,7 +310,40 @@ def test_transform_with_state_totals_match_batch(spark, events_batch, tmp_path):
         .collect()
     }
     assert got == want
-    assert check_unique(spark.read.parquet(warehouse), ["user_id"]) == 0
+    assert check_unique(head, ["user_id"]) == 0
+
+
+def test_totals_drain_commits_one_snapshot_version_per_batch(spark, tmp_path):
+    """run_totals_drain over a plain file stream of totals rows (no
+    transformWithState, so no protobuf worker): each drop lands as one
+    SnapshotTable version, and per user the row with the larger n_events
+    wins — within a batch and across batches."""
+    from european_emissions_data_warehouse_spark.operators.snapshots import SnapshotTable
+    from european_emissions_data_warehouse_spark.streaming.state import (
+        TOTALS_SCHEMA,
+        run_totals_drain,
+    )
+
+    landing = str(tmp_path / "landing")
+    tbl = str(tmp_path / "totals")
+    ckpt = str(tmp_path / "ckpt")
+    drops = [
+        [(1, 2, 10.0), (2, 1, 5.0), (3, 4, 8.0)],
+        [(2, 2, 7.0), (2, 3, 9.0), (3, 5, 11.0), (4, 1, 1.0)],
+    ]
+    for drop in drops:
+        spark.createDataFrame(drop, TOTALS_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(landing)
+        schema = spark.read.parquet(landing).schema
+        run_totals_drain(stream_from_directory(spark, landing, schema), tbl, ckpt)
+
+    t = SnapshotTable(spark, tbl)
+    assert t.history() == [0, 1]
+    rows = lambda df: sorted(map(tuple, df.collect()))
+    assert rows(t.read(0)) == sorted(drops[0])
+    assert rows(t.read()) == [(1, 2, 10.0), (2, 3, 9.0), (3, 5, 11.0), (4, 1, 1.0)]
+    shutil.rmtree(str(tmp_path), ignore_errors=True)
 
 
 def test_stateful_sessions_match_batch(spark, events_batch, tmp_path):
