@@ -1,28 +1,16 @@
-"""Lake maintenance: small-file compaction and layout rewrite.
+"""Lake maintenance: the z-order key, output sizing, and the batch-store fold.
 
-Streaming ingest (streaming/ingest.py) and frequent merges leave parquet
-directories with many small files; at 100 TB, scan cost becomes dominated by
-file-open overhead and the driver's listing.  Compaction rewrites a
-directory into right-sized files (aiming at `spark.sql.files.maxPartitionBytes`
-so one file ≈ one scan split), optionally sorted so downstream predicate
-columns cluster into row groups (min/max pruning — the parquet-native
-analogue of Z-ordering on one dimension).
-
-The rewrite is staging-then-swap: write to `<path>__compact` (or
-`__zorder`), then publish by renaming the OLD directory to `<path>__trash`
-and the staging dir over the final path — never delete-then-rename, so no
-crash leaves the published path without a copy.  Every rename's boolean
-return is checked, a failed promote restores the old directory, and a
-crash between the two renames leaves the previous data intact under
-`__trash`, which the next run restores before it reads.  A reader racing
-the swap can still see a missing path for an instant — for log-committed
-publishes use SnapshotTable.optimize, which this module's in-place form
-complements for plain directories.
+Committed tables compact and z-order through ``SnapshotTable.optimize``
+(operators/snapshots.py), which commits the rewrite as a new version behind
+the same log readers pin, so no reader ever sees a half-rewritten layout.
+This module supplies what optimize uses — ``z_value``, the bit-interleaved
+clustering key, and ``_target_file_count``, the one output-sizing rule — plus
+``compact_batch_store``, the retention fold for the ``batch_id=N`` store of
+streaming/ingest.run_neardup_dedup_stream, a layout a SnapshotTable cannot
+hold without a whole-store rewrite per batch.
 """
 
 from __future__ import annotations
-
-from collections.abc import Sequence
 
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
@@ -32,35 +20,27 @@ def z_value(c1: Column, c2: Column, bits: int = 16) -> Column:
     """Bit-interleaved Z-order key for two non-negative integer columns
     (c1's bit i lands at 2i+1, c2's at 2i).  Sorting by this key clusters
     rows that are close in *both* dimensions, so parquet row-group min/max
-    stats prune scans filtered on either column — the multi-dimensional
-    extension of compact_parquet's single-key range clustering.  Pure
-    shift/and/or expressions: whole-stage codegen, no UDF; 2*bits ≤ 62 keeps
-    the key in a signed long under ANSI mode."""
-    # domain guard: bits above `bits` are silently DISCARDED by the
-    # interleave, so ids beyond 2^bits collide on their low bits and rows
-    # far apart in the column co-locate — min/max pruning quietly stops
-    # working with no error; negative inputs likewise produce garbage
-    # keys.  Fail loudly instead (code-review r4).
+    stats prune scans filtered on either column.  Pure shift/and/or
+    expressions: whole-stage codegen, no UDF; 2*bits ≤ 62 keeps the key in
+    a signed long under ANSI mode."""
+    # at bits >= 32 the interleave shifts into the sign bit: those rows get
+    # negative keys that range-sort first and pruning silently breaks
     if not 1 <= bits <= 31:
-        # the invariant the docstring states, now enforced: at bits >= 32
-        # the interleave shifts into the SIGN bit, rows with that bit set
-        # get negative z keys that range-sort FIRST, and min/max pruning is
-        # silently destroyed — the exact silent-garbage failure the value
-        # guard below exists to prevent (code-review r4, operators pass)
         raise ValueError(f"z_value: bits must be in [1, 31] (2*bits <= 62), got {bits}")
     bound = 1 << bits
+
+    # domain guard: bits above `bits` would be silently discarded, so
+    # far-apart values would collide on their low bits; negatives and NULLs
+    # would yield garbage keys — fail loudly instead
     def checked(c: Column) -> Column:
         v = c.cast("long")
         return (
-            # explicit NULL branch: a NULL fell into the otherwise() whose
-            # concat message was itself NULL, so the job died with 'null'
-            # as the entire diagnostic (code-review r4, operators pass)
             F.when(
                 v.isNull(),
                 F.raise_error(
                     F.lit(
                         "z_value: NULL in a z-order column — fill or filter "
-                        "nulls before clustering (code-review r4)"
+                        "nulls before clustering"
                     )
                 ).cast("long"),
             )
@@ -72,7 +52,7 @@ def z_value(c1: Column, c2: Column, bits: int = 16) -> Column:
                         v.cast("string"),
                         F.lit(
                             f" outside [0, 2^{bits}) — raise `bits` (2*bits <= 62)"
-                            " or pre-scale the column (code-review r4)"
+                            " or pre-scale the column"
                         ),
                     )
                 )
@@ -90,164 +70,17 @@ def z_value(c1: Column, c2: Column, bits: int = 16) -> Column:
     return z
 
 
-def _swap_into(spark: SparkSession, staging: str, final: str) -> None:
-    """Publish ``staging`` over ``final`` via rename-to-trash (module
-    docstring): checked renames, restore-on-failure, previous data never
-    deleted before the new data is in place."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    path_cls = jvm.org.apache.hadoop.fs.Path
-    fs = path_cls(final).getFileSystem(conf)  # the path's FS, not the default
-    final_p, staging_p = path_cls(final), path_cls(staging)
-    trash_p = path_cls(f"{final}__trash")
-    if fs.exists(trash_p):
-        fs.delete(trash_p, True)  # leftover from a crashed prior swap
-    had_final = fs.exists(final_p)
-    if had_final and not fs.rename(final_p, trash_p):
-        raise IOError(f"swap: rename {final} -> {final}__trash failed")
-    if not fs.rename(staging_p, final_p):
-        if had_final:
-            fs.rename(trash_p, final_p)  # put the old data back
-        raise IOError(f"swap: rename {staging} -> {final} failed")
-    if had_final:
-        fs.delete(trash_p, True)
-
-
-def _recover_interrupted_swap(spark: SparkSession, final: str) -> None:
-    """Heal a crash between _swap_into's two renames: the data then lives
-    only under ``{final}__trash`` and ``final`` is missing — restore it so
-    the next maintenance run (or reader) sees the full table instead of
-    crashing on a nonexistent path."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    path_cls = jvm.org.apache.hadoop.fs.Path
-    final_p = path_cls(final)
-    fs = final_p.getFileSystem(conf)
-    if fs.exists(final_p):
-        return
-    trash_p = path_cls(f"{final}__trash")
-    if fs.exists(trash_p) and not fs.rename(trash_p, final_p):
-        raise IOError(f"recover: rename {final}__trash -> {final} failed")
-
-
-def _dir_stats(spark: SparkSession, path: str) -> tuple[int, int]:
-    """(n_data_files, total_bytes) of a FLAT parquet directory.
-
-    Hive-partitioned layouts (``col=value`` subdirectories) are refused:
-    the whole-directory rewrite reads every partition but writes ONE flat
-    directory — silently destroying partition pruning for every reader —
-    and the old top-level-only listing measured them as 0 bytes, funneling
-    the entire table through a single task (code-review r4).  Compact each
-    partition directory individually, or use SnapshotTable.optimize."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
-    if not fs.exists(p):
-        raise FileNotFoundError(
-            f"compact: {path} does not exist (a crashed prior swap is "
-            "auto-healed from __trash at entry; anything else is a caller bug)"
-        )
-    n, total = 0, 0
-    for status in fs.listStatus(p):
-        name = status.getPath().getName()
-        if status.isDirectory() and "=" in name:
-            raise ValueError(
-                f"compact: {path} is hive-partitioned ({name}/ ...); a flat "
-                "rewrite would flatten the partition layout and destroy "
-                "partition pruning — compact each partition directory, or "
-                "use SnapshotTable.optimize (code-review r4)"
-            )
-        if name.endswith(".parquet"):
-            n += 1
-            total += status.getLen()
-    return n, total
-
-
-def _rewrite(
-    spark: SparkSession,
-    path: str,
-    staging_suffix: str,
-    shape,
-    target_file_mb: int,
-    skip_if_sized: bool = False,
-) -> tuple[int, int]:
-    """THE recover → stat → read → reshape → stage → swap → re-stat
-    skeleton shared by compact_parquet and cluster_zorder — previously two
-    hand-synced copies of the crash-safety sequence (code-review r4,
-    operators pass).  ``shape(df, n_target) -> DataFrame`` supplies the
-    layout; ``skip_if_sized`` makes an already-at-target directory a free
-    no-op instead of a full-table rewrite (a re-run maintenance job at
-    100 TB otherwise re-wrote every byte for zero benefit)."""
-    _recover_interrupted_swap(spark, path)
-    n_before, total_bytes = _dir_stats(spark, path)
-    n_target = max(1, round(total_bytes / (target_file_mb * 1024 * 1024)))
-    if skip_if_sized and n_before == n_target:
-        return n_before, n_before
-
-    out = shape(spark.read.parquet(path), n_target)
-    staging = f"{path}{staging_suffix}"
-    out.write.mode("overwrite").parquet(staging)
-    _swap_into(spark, staging, path)
-
-    n_after, _ = _dir_stats(spark, path)
-    return n_before, n_after
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_file_mb: int = 128,
-    sort_by: Sequence[str] | None = None,
-) -> tuple[int, int]:
-    """Rewrite a parquet directory into ~target_file_mb files.
-
-    Returns (files_before, files_after).  With `sort_by`, rows are
-    range-sorted across and within files so min/max row-group stats prune
-    scans on those columns.  Without `sort_by`, a directory already at the
-    target file count returns immediately (no layout promise to re-make);
-    sorted/z-ordered rewrites always run, since file COUNT says nothing
-    about clustering."""
-
-    def shape(df, n_target):
-        if sort_by:
-            # repartitionByRange + sortWithinPartitions: global clustering
-            # on the sort key, one shuffle, each output file covers a
-            # disjoint key range
-            return df.repartitionByRange(n_target, *sort_by).sortWithinPartitions(
-                *sort_by
-            )
-        return df.repartition(n_target)
-
-    return _rewrite(
-        spark, path, "__compact", shape, target_file_mb,
-        skip_if_sized=not sort_by,
+def _target_file_count(fs, dirs, target_file_mb: int) -> int:
+    """Output file count for a rewrite of ``dirs`` (Hadoop Paths on ``fs``):
+    their ``.parquet`` bytes over ``target_file_mb``, rounded, at least one.
+    Only data files count — ``.crc`` and ``_SUCCESS`` siblings do not."""
+    parquet_bytes = sum(
+        st.getLen()
+        for d in dirs
+        for st in fs.listStatus(d)
+        if st.getPath().getName().endswith(".parquet")
     )
-
-
-def cluster_zorder(
-    spark: SparkSession,
-    path: str,
-    col1: str,
-    col2: str,
-    target_file_mb: int = 128,
-    bits: int = 16,
-) -> tuple[int, int]:
-    """Rewrite a parquet directory Z-order-clustered on two integer columns:
-    compute the interleaved key, range-partition and sort by it, write, and
-    atomically swap — data-skipping then works for filters on either column
-    (compact_parquet's staging/swap protocol, same crash safety).  Returns
-    (files_before, files_after)."""
-
-    def shape(df, n_target):
-        zed = df.withColumn("__z", z_value(F.col(col1), F.col(col2), bits))
-        return (
-            zed.repartitionByRange(n_target, "__z")
-            .sortWithinPartitions("__z")
-            .drop("__z")
-        )
-
-    return _rewrite(spark, path, "__zorder", shape, target_file_mb)
+    return max(1, round(parquet_bytes / (target_file_mb * 1024 * 1024)))
 
 
 # --- batch-partitioned store compaction (streaming ingest layout) -----------
@@ -264,9 +97,9 @@ def cluster_zorder(
 # folded id as right-sized files.  New triggers keep appending fresh
 # batch_id partitions above the mark; ids never collide.
 #
-# Crash safety mirrors this module's swap protocol, extended to the
-# multi-directory case with a root-level manifest so every window is
-# resumable (roll forward once sources start moving, roll back before):
+# Crash safety: stage, then swap by renames, with a root-level manifest so
+# every window is resumable (roll forward once sources start moving, roll
+# back before):
 #   1. write the folded data to `_compact_stage/` (underscore-prefixed —
 #      invisible to partition discovery), copy the store's `_minhash_params`
 #      convention file in if present;
@@ -275,10 +108,9 @@ def cluster_zorder(
 #   3. rename each folded `batch_id=N/` into `_compact_trash/`;
 #   4. rename the stage over `batch_id=<lo>/`;
 #   5. delete the trash, then the manifest.
-# recover_interrupted_compaction heals any window at the next entry.  Like
-# compact_parquet's swap, a reader racing steps 3-4 can see missing rows
-# for an instant — this is a single-writer maintenance op, run between
-# triggers.
+# recover_interrupted_compaction heals any window at the next entry.  A
+# reader racing steps 3-4 can see missing rows for an instant — this is a
+# single-writer maintenance op, run between triggers.
 
 _COMPACT_STAGE = "_compact_stage"
 _COMPACT_TRASH = "_compact_trash"
@@ -286,8 +118,8 @@ _COMPACT_MANIFEST = "_compact_manifest"
 
 
 def _store_fs(spark: SparkSession, store_path: str):
-    # snapshots._fs is THE consolidated jvm+path-aware FS resolver
-    # (code-review r4); this only adds the Path class handle callers need
+    # snapshots._fs is the one jvm+path-aware FS resolver; this only adds
+    # the Path class handle callers need
     from european_emissions_data_warehouse_spark.operators.snapshots import _fs
 
     jvm, fs = _fs(spark, store_path)
@@ -411,13 +243,7 @@ def compact_batch_store(
             "folded": 0,
         }
     lo = fold[0]
-    fold_bytes = sum(
-        st.getLen()
-        for n in fold
-        for st in fs.listStatus(parts[n])
-        if st.getPath().getName().endswith(".parquet")
-    )
-    n_target = max(1, round(fold_bytes / (target_file_mb * 1024 * 1024)))
+    n_target = _target_file_count(fs, [parts[n] for n in fold], target_file_mb)
 
     # 1. stage: one read over exactly the folded partition dirs (no
     # batch_id column in the data files, so the fold is schema-neutral)

@@ -446,13 +446,15 @@ class SnapshotTable:
         micro-batch accretes many small snapshots whose final one still
         carries per-batch file sizing; a periodic optimize folds the
         current state into ~``target_file_mb`` files (sized from the
-        snapshot's actual on-disk bytes, AQE-coalesced by repartition).
-        With ``zorder_by``, rows are range-partitioned on the interleaved
-        z-value of the named columns first (operators/maintenance.z_value),
-        so min/max footer stats turn multi-column predicates into file
-        skips — same layout contract as cluster_zorder, but transactional.
+        snapshot's parquet bytes, operators/maintenance._target_file_count).
+        With ``zorder_by``, rows are range-partitioned and sorted on the
+        interleaved z-value of the two named non-negative integer columns
+        (operators/maintenance.z_value, over its full 31-bit domain), so
+        each output file covers a disjoint z range and min/max footer stats
+        turn predicates on either column into file skips.
         Returns the new version number."""
         from european_emissions_data_warehouse_spark.operators.maintenance import (
+            _target_file_count,
             z_value,
         )
 
@@ -460,18 +462,15 @@ class SnapshotTable:
         if current is None:
             raise ValueError(f"no commits yet at {self.path}")
         data_dir = f"{self.path}/{self._manifest(current)}"
-        jvm, fs = _fs(self.spark, data_dir)
-        summary = fs.getContentSummary(self._jpath(data_dir))
-        n_files = max(
-            1, int(summary.getLength() / (target_file_mb * 1024 * 1024)) + 1
-        )
+        _jvm, fs = _fs(self.spark, data_dir)
+        n_files = _target_file_count(fs, [self._jpath(data_dir)], target_file_mb)
         df = self.read(current)
         if zorder_by is not None:
             cols = list(zorder_by)
             if len(cols) != 2:
                 raise ValueError("zorder_by takes exactly two columns")
             df = (
-                df.withColumn("_z", z_value(F.col(cols[0]), F.col(cols[1])))
+                df.withColumn("_z", z_value(F.col(cols[0]), F.col(cols[1]), bits=31))
                 .repartitionByRange(n_files, "_z")
                 .sortWithinPartitions("_z")
                 .drop("_z")

@@ -6,13 +6,10 @@ The chain is a single narrow (shuffle-free) DataFrame pipeline:
     scan -> project(6) -> null-drop -> filter(eq + isin) -> derive Unit
          -> recode Gas -> rename -> dim-decode -> final project -> sink
 
-Dim decode (O9, reference scripts/etl_process.py:67,92) is offered in both
-forms with hash-identical output:
-
-- ``decode_via_map``  — the reference's literal ``create_map(...)[col]``;
-- ``decode_via_join`` — the idiomatic broadcast left join against a real
-  dimension DataFrame (what a 100 TB pipeline should do: the dim stays a
-  table, the join never shuffles because the dim side broadcasts).
+Dim decode (O9, reference scripts/etl_process.py:67,92) is the reference's
+literal ``create_map(...)[col]`` lookup: the dimension is the 30-entry
+``COUNTRY_CODE_MAP``, which the optimizer folds into one map literal, so the
+decode adds no join, no broadcast build and no Python-worker task.
 
 Differences from the reference, on purpose (SURVEY.md §1.2):
 - explicit typed schema at ingest instead of all-strings;
@@ -27,12 +24,11 @@ from __future__ import annotations
 
 from itertools import chain
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # The 30-entry country code -> name dimension, hard-coded in the reference
-# (scripts/etl_process.py:33-64) with a TODO to make it a real table — here it
-# IS a real dimension table (FIXTURES.md F2).
+# (scripts/etl_process.py:33-64; FIXTURES.md F2).
 COUNTRY_CODE_MAP: dict[str, str] = {
     "AT": "Austria", "BE": "Belgium", "BG": "Bulgaria", "HR": "Croatia",
     "CY": "Cyprus", "CZ": "Czechia", "DK": "Denmark", "EE": "Estonia",
@@ -51,30 +47,17 @@ UNIT_KT_CO2E = "kt CO2 equivalent"
 OUTPUT_COLUMNS = ["Country", "Year", "Scenario", "Category", "Gas", "ReportedValue", "Unit"]
 
 
-def country_dim(spark: SparkSession) -> DataFrame:
-    """The code->name dimension as a DataFrame (FIXTURES.md F2)."""
-    rows = [(code, name) for code, name in COUNTRY_CODE_MAP.items()]
-    return spark.createDataFrame(rows, "CountryCode string, Country string")
-
-
-def clean_emissions(raw: DataFrame, decode: str = "join") -> DataFrame:
+def clean_emissions(raw: DataFrame) -> DataFrame:
     """O2..O10: the transformation chain of the Glue job
-    (reference scripts/etl_process.py:81-93), typed.
-
-    ``decode`` selects the O9 strategy: 'join' (broadcast dim join) or 'map'
-    (literal map lookup).  Outputs are identical; the join form is the one
-    that scales when the dim outgrows a literal.  Typing uses plain casts
-    under ANSI deliberately: a malformed Year/ReportedValue ABORTS the job,
-    the same behavior as the reference's Postgres COPY
+    (reference scripts/etl_process.py:81-93), typed, with the O9 country
+    decode as a map-literal lookup.  Typing uses plain casts under ANSI
+    deliberately: a malformed Year/ReportedValue ABORTS the job, the same
+    behavior as the reference's Postgres COPY
     (lambda_handler_warehouse.py:85-92) — use analytics' try_cast pattern
     when lenient import is wanted.
     """
-    if decode not in ("join", "map"):
-        raise ValueError(
-            f"clean_emissions: decode={decode!r} is not a strategy; use "
-            "'join' (broadcast dim) or 'map' (literal lookup)"
-        )
-    df = (
+    mapping = F.create_map([F.lit(x) for x in chain(*COUNTRY_CODE_MAP.items())])
+    return (
         raw.select(*RAW_COLUMNS)  # O2 projection
         .na.drop(how="any", subset=RAW_COLUMNS)  # O3 null-drop (etl_process.py:83)
         .filter(  # O4 equality + IN-list (etl_process.py:84-85)
@@ -100,19 +83,10 @@ def clean_emissions(raw: DataFrame, decode: str = "join") -> DataFrame:
         # lambda_handler_warehouse.py:85-92; we type here)
         .withColumn("Year", F.col("Year").cast("int"))
         .withColumn("ReportedValue", F.col("ReportedValue").cast("double"))
+        # O9 dim decode: the reference's literal expression (etl_process.py:67,92)
+        .withColumn("Country", mapping[F.col("CountryCode")])
+        .select(*OUTPUT_COLUMNS)  # O10 final projection / column order
     )
-
-    if decode == "map":
-        # O9a: the reference's literal expression (etl_process.py:67,92)
-        mapping = F.create_map([F.lit(x) for x in chain(*COUNTRY_CODE_MAP.items())])
-        df = df.withColumn("Country", mapping[F.col("CountryCode")])
-    else:
-        # O9b: broadcast left join against the dim table — post-O4 every code
-        # is in the dim, so 'left' keeps row counts identical to O9a.
-        dim = F.broadcast(country_dim(df.sparkSession))
-        df = df.join(dim, "CountryCode", "left")
-
-    return df.select(*OUTPUT_COLUMNS)  # O10 final projection / column order
 
 
 def write_warehouse(df: DataFrame, path: str) -> None:
@@ -156,7 +130,7 @@ def write_warehouse_jdbc(
     )
 
 
-def clean_emissions_observed(raw: DataFrame, decode: str = "join"):
+def clean_emissions_observed(raw: DataFrame):
     """``clean_emissions`` plus free pipeline telemetry: an ``Observation``
     rides the existing job, so the warehouse write that runs anyway also
     yields row counts, null counts, and value bounds — the data-quality
@@ -174,7 +148,7 @@ def clean_emissions_observed(raw: DataFrame, decode: str = "join"):
     from pyspark.sql import Observation
 
     obs = Observation("emissions_etl")
-    df = clean_emissions(raw, decode).observe(
+    df = clean_emissions(raw).observe(
         obs,
         F.count(F.lit(1)).alias("rows_out"),
         F.sum(F.col("ReportedValue").isNull().cast("long")).alias("null_values"),

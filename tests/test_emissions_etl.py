@@ -1,7 +1,7 @@
 """Golden tests for the flagship emissions ETL (reference O1..O11 + O16).
 
 Covers what the reference never tested (SURVEY.md §5.2): null-drop, filter,
-recode, decode, both O9 decode forms, upsert idempotency and last-write-wins.
+recode, decode and its plan shape, upsert idempotency and last-write-wins.
 Fixture rows implement FIXTURES.md F1's required edge cases.
 """
 
@@ -60,7 +60,7 @@ def fixture_rows():
 
 
 def test_clean_golden(spark, fixture_rows):
-    out = clean_emissions(raw_df(spark, fixture_rows), decode="join")
+    out = clean_emissions(raw_df(spark, fixture_rows))
     assert out.columns == OUTPUT_COLUMNS
     rows = {tuple(r) for r in out.collect()}
     assert rows == {
@@ -71,11 +71,22 @@ def test_clean_golden(spark, fixture_rows):
     }
 
 
-def test_decode_forms_identical(spark, fixture_rows):
-    raw = raw_df(spark, fixture_rows)
-    via_join = sorted(map(tuple, clean_emissions(raw, decode="join").collect()))
-    via_map = sorted(map(tuple, clean_emissions(raw, decode="map").collect()))
-    assert via_join == via_map
+def test_clean_plan_has_no_join_or_python_rows(spark, fixture_rows, tmp_path):
+    """The country decode is a map literal: over a CSV file source the
+    optimized plan holds no Join and no LogicalRDD (a Python-list dimension
+    would run Python-worker tasks on every drop)."""
+    import csv
+
+    src = tmp_path / "drop.csv"
+    with open(src, "w", newline="") as f:
+        w = csv.writer(f)
+        w.writerow(EMISSIONS_RAW_SCHEMA.fieldNames())
+        w.writerows(fixture_rows)
+    raw = spark.read.csv(str(src), schema=EMISSIONS_RAW_SCHEMA, header=True)
+    out = clean_emissions(raw)
+    plan = out._jdf.queryExecution().optimizedPlan().treeString()
+    assert "Join" not in plan and "LogicalRDD" not in plan, plan
+    assert len(out.collect()) == 3
 
 
 def test_types_match_warehouse_ddl(spark, fixture_rows):

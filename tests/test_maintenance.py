@@ -1,30 +1,11 @@
-"""Compaction: fewer files, identical data, clustered layout when sorted."""
+"""Maintenance: the z-order key, z-ordered optimize layout, and the
+batch-store fold."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from european_emissions_data_warehouse_spark.operators.maintenance import compact_parquet
 from european_emissions_data_warehouse_spark.sources.readers import load_table
-
-
-def test_compaction_preserves_data_and_reduces_files(spark, sf_dir, tmp_path):
-    out = str(tmp_path / "frag")
-    ev = load_table(spark, sf_dir, "events")
-    # simulate streaming debris: 20 small files
-    ev.repartition(20).write.mode("overwrite").parquet(out)
-    want = sorted(map(tuple, spark.read.parquet(out).collect()))
-
-    before, after = compact_parquet(spark, out, target_file_mb=128, sort_by=["user_id", "ts"])
-    assert before == 20
-    assert after < before
-    got = sorted(map(tuple, spark.read.parquet(out).collect()))
-    assert got == want
-
-    # clustered layout: each file covers a disjoint user_id range, so a
-    # single-user filter reads a bounded subset of rows across row groups
-    one_user = spark.read.parquet(out).filter(F.col("user_id") == 3)
-    assert one_user.count() == ev.filter(F.col("user_id") == 3).count()
 
 
 def test_z_value_bit_interleaving(spark):
@@ -36,37 +17,6 @@ def test_z_value_bit_interleaving(spark):
     got = [r.z for r in df.select(z_value(F.col("a"), F.col("b")).alias("z")).collect()]
     # a's bit i -> position 2i+1, b's bit i -> position 2i
     assert got == [0b1010, 0b0101, 0b0011, 0b1101]
-
-
-def test_compaction_refuses_hive_partitioned_layout(spark, sf_dir, tmp_path):
-    """A flat rewrite of a partitionBy() directory would read every
-    partition but publish ONE unpartitioned dir — partition pruning
-    silently destroyed for every reader, and the old top-level-only byte
-    count measured it as 0 bytes -> repartition(1) (code-review r4)."""
-    import pytest
-
-    out = str(tmp_path / "parts")
-    ev = load_table(spark, sf_dir, "events").limit(200)
-    ev.withColumn("day", F.dayofmonth("ts")).write.partitionBy("day").mode(
-        "overwrite"
-    ).parquet(out)
-    with pytest.raises(ValueError, match="hive-partitioned"):
-        compact_parquet(spark, out)
-
-
-def test_compaction_heals_interrupted_swap(spark, sf_dir, tmp_path):
-    """A crash between _swap_into's renames leaves the table only under
-    __trash; the next run must restore it instead of crashing on a
-    missing path (code-review r4)."""
-    import os
-
-    out = str(tmp_path / "tbl")
-    ev = load_table(spark, sf_dir, "events").limit(100)
-    ev.repartition(4).write.mode("overwrite").parquet(out)
-    want = spark.read.parquet(out).count()
-    os.rename(out, out + "__trash")  # simulate the crash window
-    before, after = compact_parquet(spark, out)
-    assert before == 4 and spark.read.parquet(out).count() == want
 
 
 def test_z_value_rejects_out_of_domain(spark):
@@ -88,33 +38,43 @@ def test_z_value_rejects_out_of_domain(spark):
     assert ok.select(z_value(F.col("a"), F.col("b"), bits=20)).collect()
 
 
-def test_zorder_cluster_preserves_data_with_disjoint_file_ranges(spark, sf_dir, tmp_path):
-    from european_emissions_data_warehouse_spark.operators.maintenance import (
-        cluster_zorder,
-        z_value,
+def test_zorder_cluster_preserves_data_with_disjoint_file_ranges(spark, tmp_path):
+    """SnapshotTable.optimize(zorder_by=...) keeps every row and lays the
+    new version out so each file covers a disjoint z range."""
+    import os
+
+    from european_emissions_data_warehouse_spark.operators.maintenance import z_value
+    from european_emissions_data_warehouse_spark.operators.snapshots import (
+        SnapshotTable,
     )
 
-    out = str(tmp_path / "zfrag")
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", F.dayofyear("ts").cast("long").alias("day")
+    t = SnapshotTable(spark, str(tmp_path / "zfrag"))
+    # hashed columns compress poorly, so the table spans several 1 MB files;
+    # user_id reaches past 2^16
+    ev = spark.range(0, 200_000).select(
+        F.col("id").alias("event_id"),
+        F.pmod(F.xxhash64("id"), F.lit(1 << 20)).alias("user_id"),
+        F.pmod(F.hash("id"), F.lit(366)).cast("long").alias("day"),
     )
-    ev.repartition(12).write.mode("overwrite").parquet(out)
+    t.commit(ev.repartition(12))
     want = sorted(map(tuple, ev.collect()))
 
-    before, after = cluster_zorder(spark, out, "user_id", "day", target_file_mb=1)
-    assert before == 12
-    got_df = spark.read.parquet(out)
+    v = t.optimize(target_file_mb=1, zorder_by=["user_id", "day"])
+    out_dir = str(tmp_path / "zfrag" / t._manifest(v))
+    assert len([f for f in os.listdir(out_dir) if f.endswith(".parquet")]) >= 2
+    got_df = t.read(v)
     assert sorted(map(tuple, got_df.collect())) == want
 
     # clustering contract: per-file z ranges are pairwise disjoint
     spans = (
-        got_df.withColumn("z", z_value(F.col("user_id"), F.col("day")))
+        got_df.withColumn("z", z_value(F.col("user_id"), F.col("day"), bits=31))
         .withColumn("f", F.input_file_name())
         .groupBy("f")
         .agg(F.min("z").alias("lo"), F.max("z").alias("hi"))
         .collect()
     )
     spans = sorted((r.lo, r.hi) for r in spans)
+    assert len(spans) >= 2
     assert all(prev_hi <= lo for (_, prev_hi), (lo, _) in zip(spans, spans[1:]))
 
 
@@ -134,27 +94,6 @@ def test_z_value_rejects_bad_bits_and_null_inputs(spark):
     df = spark.createDataFrame([(1, None)], "a long, b long")
     with pytest.raises(Exception, match="NULL in a z-order column"):
         df.select(z_value(F.col("a"), F.col("b"), bits=8)).collect()
-
-
-def test_compact_rerun_is_a_noop_at_target(spark, tmp_path):
-    """An unsorted compaction re-run on an already-at-target directory must
-    not rewrite the table (code-review r4, operators pass)."""
-    import os
-
-    from european_emissions_data_warehouse_spark.operators.maintenance import (
-        compact_parquet,
-    )
-
-    path = str(tmp_path / "tbl")
-    spark.range(1000).repartition(8).write.parquet(path)
-    b1, a1 = compact_parquet(spark, path, target_file_mb=128)
-    assert b1 == 8 and a1 == 1
-    mtimes = {f: os.path.getmtime(os.path.join(path, f)) for f in os.listdir(path)}
-    b2, a2 = compact_parquet(spark, path, target_file_mb=128)
-    assert (b2, a2) == (1, 1)
-    assert mtimes == {
-        f: os.path.getmtime(os.path.join(path, f)) for f in os.listdir(path)
-    }, "re-run rewrote an already-compacted directory"
 
 
 # --- compact_batch_store: the streaming store's commit-count retention lever

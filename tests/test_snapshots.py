@@ -282,6 +282,15 @@ def test_optimize_compacts_into_new_version(spark, tmp_path):
     assert t._manifest(0) in removed and t.read(v2).count() == 2000
 
 
+def test_optimize_zorders_values_past_16_bits(spark, tmp_path):
+    """optimize(zorder_by=...) clusters over z_value's full 31-bit domain:
+    a value of 2^20 must z-order, not fail the 16-bit domain guard."""
+    t = SnapshotTable(spark, str(tmp_path / "tbl"))
+    t.commit(spark.createDataFrame([(1 << 20, 1), (3, 1 << 20), (0, 0)], "a long, b long"))
+    v = t.optimize(zorder_by=["a", "b"])
+    assert sorted(map(tuple, t.read(v).collect())) == [(0, 0), (3, 1 << 20), (1 << 20, 1)]
+
+
 def test_losing_concurrent_writer_cannot_clobber_winner(spark, nation, tmp_path):
     """Two writers race to the same version: the loser must get a clean
     ConcurrentCommitError AND leave the winner's published bytes intact —
