@@ -8,20 +8,39 @@ data.
 
 Layout:
 
-    <table>/_commits/00000042        text file naming the snapshot's data dir
+    <table>/_commits/00000042        the manifest of version 42
     <table>/data_v00000042_ab12cd34/ immutable parquet snapshot (per-writer
                                      random suffix — racing writers never
                                      share a dir; the manifest is the only
                                      name readers follow)
 
-A commit writes its data dir, then publishes a manifest via
-write-temp + rename-without-overwrite.  On HDFS-compatible filesystems that
-rename is atomic and fails if the destination exists — which makes the
-commit a compare-and-swap: two writers racing to the same version number
-produce one winner and one clean ``ConcurrentCommitError`` (optimistic
-concurrency, the same protocol as a Delta/Iceberg log commit).  Readers
-resolve the max committed version; a reader never sees a half-written
-snapshot because data dirs are immutable once their manifest exists.
+A manifest is text: line 1 is the snapshot's data dir, and every later
+line is ``key=value`` metadata (``commit_meta``).  Every publisher records
+``schema=<the snapshot's schema as one line of JSON>``, so ``read`` hands
+Spark the schema and reading a version runs no schema-inference job;
+manifests written before the schema line existed still read, by
+inference.  Streaming ingest adds ``batch_id`` and ``ckpt_gen``.
+
+A commit writes its data dir, then publishes its manifest by creating the
+version's name only if it does not exist yet — a compare-and-swap: two
+writers racing to the same version number produce one winner and one
+clean ``ConcurrentCommitError`` (optimistic concurrency, the same protocol
+as a Delta/Iceberg log commit).  The manifest is staged under a
+per-writer temp name, then made visible with the filesystem's atomic
+create-if-absent primitive, one per scheme:
+
+- ``file:`` — ``java.nio.file.Files.createLink`` (``link(2)``), which
+  fails atomically with ``FileAlreadyExistsException`` if the name exists.
+  (Hadoop's local ``rename`` is check-then-rename: two racing renames can
+  both return true, the later silently replacing the earlier manifest.)
+- ``hdfs:`` — ``FileSystem.rename``, which is atomic and fails if the
+  destination exists.
+- any other scheme raises ``NotImplementedError`` naming it, rather than
+  claim a compare-and-swap it does not have.
+
+Readers resolve the max committed version; a reader never sees a
+half-written snapshot because data dirs are immutable once their manifest
+exists.
 
 Rollback re-publishes an old snapshot as a *new* version (history is never
 rewritten); vacuum deletes data dirs no commit in the retained window
@@ -32,10 +51,14 @@ just remain until vacuumed).
 
 from __future__ import annotations
 
+import json
+import uuid
 from collections.abc import Sequence
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -71,12 +94,9 @@ def read_small_text(spark: SparkSession, path: str) -> str | None:
 def write_small_text(spark: SparkSession, path: str, body: str) -> None:
     """Driver-side overwrite-write of one small text file through the
     path's Hadoop filesystem — read_small_text's write twin.  THE shared
-    helper for manifest/marker/metadata writes: the create + bytearray +
-    close-in-finally sequence had re-accumulated as four hand-synced
-    copies across snapshots/ingest/dedup/maintenance, the same drift the
-    read side consolidated in r4 (code-review r9, second pass).  Callers
-    that need atomic visibility write to a temp name and rename — this
-    helper only writes."""
+    helper for manifest/marker/metadata writes.  Callers that need atomic
+    visibility write to a temp name and publish it (SnapshotTable._publish)
+    — this helper only writes."""
     jvm, fs = _fs(spark, path)
     out = fs.create(jvm.org.apache.hadoop.fs.Path(path), True)
     try:
@@ -122,37 +142,66 @@ class SnapshotTable:
             raise ValueError(f"version {version} does not exist at {self.path}")
         return text.strip()
 
+    def _entry(self, version: int) -> tuple[str, dict[str, str]]:
+        """A commit's data dir and its key=value metadata, from one
+        manifest read (layout in the module docstring)."""
+        first, *lines = self._manifest_text(version).splitlines()
+        return first, dict(ln.split("=", 1) for ln in lines if "=" in ln)
+
     def _manifest(self, version: int) -> str:
-        """The snapshot data dir named by a commit (manifest line 1; later
-        lines are key=value metadata, see commit_meta)."""
-        return self._manifest_text(version).splitlines()[0]
+        """The snapshot data dir named by a commit (manifest line 1)."""
+        return self._entry(version)[0]
 
     def commit_meta(self, version: int) -> dict[str, str]:
         """key=value metadata recorded with a commit (e.g. the streaming
-        batch_id that produced it); empty for metadata-less commits."""
-        lines = self._manifest_text(version).splitlines()[1:]
-        return dict(ln.split("=", 1) for ln in lines if "=" in ln)
+        batch_id that produced it, and the snapshot ``schema``); empty for
+        metadata-less commits."""
+        return self._entry(version)[1]
+
+    def _cas_fs(self):
+        """The table's JVM handle, filesystem and scheme; raises for a
+        scheme without an atomic create-if-absent (module docstring)."""
+        jvm, fs = _fs(self.spark, self.path)
+        scheme = fs.getScheme()
+        if scheme not in ("file", "hdfs"):
+            raise NotImplementedError(
+                f"SnapshotTable publishes manifests with an atomic "
+                f"create-if-absent, which exists here only for file: and "
+                f"hdfs:; cannot commit to {self.path!r} on scheme "
+                f"{scheme!r} — use a local or HDFS table path"
+            )
+        return jvm, fs, scheme
 
     def _publish(self, version: int, data_dir: str, meta: dict[str, str] | None = None) -> None:
-        """Atomically publish a manifest via rename-without-overwrite (CAS
-        on HDFS-compatible FS).  The tmp file carries a PER-WRITER random
-        suffix: a shared deterministic tmp name let a racing writer
-        fs.create(..., overwrite=True) over the first writer's staged body,
-        so the CAS winner could publish a manifest naming the LOSER's data
-        dir — which the loser then deletes on ConcurrentCommitError,
-        leaving the committed version permanently unreadable (code-review
-        r4; same uniqueness fix as commit()'s data dirs)."""
-        import uuid
-
-        jvm, fs = _fs(self.spark, self.path)
-        fs.mkdirs(self._jpath(self.commits_dir))
-        tmp = f"{self.commits_dir}/.tmp_{version:08d}_{uuid.uuid4().hex[:8]}"
+        """Publish ``version``'s manifest as a compare-and-swap: stage the
+        body under a per-writer temp name, then create the version's name
+        only if it is absent (``link(2)`` on ``file:``, ``rename`` on
+        ``hdfs:``).  The loser of a race gets ConcurrentCommitError.  The
+        temp name is unique per writer, so a racing writer can never
+        overwrite the winner's staged body."""
+        jvm, fs, scheme = self._cas_fs()
+        Path = jvm.org.apache.hadoop.fs.Path
+        fs.mkdirs(Path(self.commits_dir))
+        tmp = Path(f"{self.commits_dir}/.tmp_{version:08d}_{uuid.uuid4().hex[:8]}")
+        final = Path(f"{self.commits_dir}/{version:08d}")
         body = data_dir + "".join(f"\n{k}={v}" for k, v in (meta or {}).items())
-        write_small_text(self.spark, tmp, body)
-        final = self._jpath(f"{self.commits_dir}/{version:08d}")
-        # rename-without-overwrite = atomic CAS on HDFS-compatible FS
-        if not fs.rename(self._jpath(tmp), final):
-            fs.delete(self._jpath(tmp), False)
+        write_small_text(self.spark, tmp.toString(), body)
+        if scheme == "hdfs":
+            won = fs.rename(tmp, final)
+        else:
+            try:
+                jvm.java.nio.file.Files.createLink(
+                    fs.pathToFile(final).toPath(), fs.pathToFile(tmp).toPath()
+                )
+                won = True
+            except Py4JJavaError as exc:
+                cls = exc.java_exception.getClass().getName()
+                if cls != "java.nio.file.FileAlreadyExistsException":
+                    raise
+                won = False
+        # the staged body and, on the local checksummed FS, its .crc
+        fs.delete(tmp, False)
+        if not won:
             raise ConcurrentCommitError(
                 f"version {version} of {self.path} was committed concurrently"
             )
@@ -169,40 +218,35 @@ class SnapshotTable:
         key=value pairs are recorded in the commit manifest — streaming
         ingest stamps the micro-batch id there so a crash-replayed batch can
         be recognized and skipped (version-level idempotence, not just
-        content-level).
+        content-level).  The manifest also records ``df``'s schema, so
+        ``schema`` is a reserved key and passing it raises.
 
         ``expected_base``: the version ``df`` was DERIVED from (-1 for an
         empty table), for read-modify-write callers.  The commit then
-        publishes at exactly ``expected_base + 1`` so the rename-CAS itself
+        publishes at exactly ``expected_base + 1`` so the publish CAS itself
         detects any commit that landed between the caller's read and this
-        publish and raises ConcurrentCommitError (retry by re-reading).
-        Without it the version comes from a FRESH listing, so an
-        interleaved commit was silently merged-over: reader pins v5, writer
-        X commits v6, reader publishes its v5+delta as v7 — v6's changes
-        (a GDPR delete_where, another stream's batch) resurrected/lost with
-        no error (code-review r4, streaming pass).  Blind appends that
-        don't read the current snapshot may keep the fresh-listing form.
+        publish and raises ConcurrentCommitError (retry by re-reading),
+        instead of merging over it.  Blind appends that don't read the
+        current snapshot may keep the fresh-listing form.
 
-        The data dir carries a per-writer random suffix: two writers racing
-        to the same version previously both wrote ``data_v<N>`` with
-        mode('overwrite'), so the LOSER's in-flight write clobbered the
-        winner's already-published snapshot bytes (code-review r4 — the
-        exact torn state the CAS log exists to prevent).  With unique dirs
-        the loser's bytes are garbage the loser itself deletes on
-        ConcurrentCommitError; the manifest is the only name readers follow."""
-        import uuid
-
+        The data dir carries a per-writer random suffix, so two writers
+        racing to one version never write the same dir: the loser's bytes
+        are garbage the loser itself deletes on ConcurrentCommitError, and
+        the manifest is the only name readers follow."""
+        if meta and "schema" in meta:
+            raise ValueError(
+                "commit meta key 'schema' is reserved: the manifest records "
+                "the snapshot's own schema"
+            )
+        self._cas_fs()  # a scheme that cannot publish fails before the write
         if expected_base is not None:
             version = expected_base + 1
         else:
-            # one listing, not two: latest_version() re-lists the commits
-            # dir history() just walked (code-review r4 — at 10k commits
-            # every redundant listStatus is 10k driver RPC entries per
-            # trigger)
             h = self.history()
             version = (h[-1] if h else -1) + 1
         data_dir = f"data_v{version:08d}_{uuid.uuid4().hex[:8]}"
         df.write.mode("overwrite").parquet(f"{self.path}/{data_dir}")
+        meta = {**(meta or {}), "schema": df.schema.json()}
         try:
             self._publish(version, data_dir, meta)
         except ConcurrentCommitError:
@@ -293,14 +337,15 @@ class SnapshotTable:
         return self.commit(self.read().filter(keep))
 
     def rollback(self, version: int) -> int:
-        """Re-publish an old snapshot as the new latest (history preserved);
-        returns the new version number.
+        """Re-publish an old snapshot as the new latest (history preserved),
+        with the target version's schema line; returns the new version
+        number.
 
         Raises if the target's data dir has been vacuumed: its manifest
         still lists in history(), but re-publishing the deleted dir would
         make the dangling path the table's LATEST and break every
-        subsequent read (code-review r4)."""
-        data_dir = self._manifest(version)
+        subsequent read."""
+        data_dir, meta = self._entry(version)
         _, fs = _fs(self.spark, self.path)
         if not fs.exists(self._jpath(f"{self.path}/{data_dir}")):
             raise ValueError(
@@ -309,18 +354,25 @@ class SnapshotTable:
                 "vacuum retention window are restorable"
             )
         new_version = (self.latest_version() or 0) + 1
-        self._publish(new_version, data_dir)
+        schema = {"schema": meta["schema"]} if "schema" in meta else None
+        self._publish(new_version, data_dir, schema)
         return new_version
 
     # --- read -----------------------------------------------------------
 
     def read(self, version: int | None = None) -> DataFrame:
-        """The table as of ``version`` (default: latest)."""
+        """The table as of ``version`` (default: latest).  A manifest with
+        a schema line is read with that schema, so building the frame runs
+        no Spark job; one without it infers the schema from the files."""
         if version is None:
             version = self.latest_version()
             if version is None:
                 raise ValueError(f"no commits yet at {self.path}")
-        return self.spark.read.parquet(f"{self.path}/{self._manifest(version)}")
+        data_dir, meta = self._entry(version)
+        reader = self.spark.read
+        if "schema" in meta:
+            reader = reader.schema(StructType.fromJson(json.loads(meta["schema"])))
+        return reader.parquet(f"{self.path}/{data_dir}")
 
     def diff(
         self,

@@ -1,15 +1,18 @@
 """The flagship emissions ETL — reference operators O1..O11 re-expressed
 Spark-first (SURVEY.md §2.1, reference scripts/etl_process.py:67-102).
 
-The chain is a single narrow (shuffle-free) DataFrame pipeline:
+The chain is a single narrow (shuffle-free) DataFrame pipeline of one
+filter and one projection, both SQL expression strings:
 
-    scan -> project(6) -> null-drop -> filter(eq + isin) -> derive Unit
-         -> recode Gas -> rename -> dim-decode -> final project -> sink
+    scan -> filter(null-drop AND Gas = total AND CountryCode IN codes)
+         -> project(decode Country, cast Year, Scenario, Category,
+                    constant Gas, cast ReportedValue, constant Unit)
+         -> sink
 
 Dim decode (O9, reference scripts/etl_process.py:67,92) is the reference's
-literal ``create_map(...)[col]`` lookup: the dimension is the 30-entry
-``COUNTRY_CODE_MAP``, which the optimizer folds into one map literal, so the
-decode adds no join, no broadcast build and no Python-worker task.
+literal ``map(...)[CountryCode]`` lookup: the dimension is the 30-entry
+``COUNTRY_CODE_MAP``, written as one map literal, so the decode adds no
+join, no broadcast build and no Python-worker task.
 
 Differences from the reference, on purpose (SURVEY.md §1.2):
 - explicit typed schema at ingest instead of all-strings;
@@ -21,8 +24,6 @@ Differences from the reference, on purpose (SURVEY.md §1.2):
 """
 
 from __future__ import annotations
-
-from itertools import chain
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -47,46 +48,50 @@ UNIT_KT_CO2E = "kt CO2 equivalent"
 OUTPUT_COLUMNS = ["Country", "Year", "Scenario", "Category", "Gas", "ReportedValue", "Unit"]
 
 
+# clean_emissions as SQL expression strings, built once at import: the
+# whole chain is two DataFrame calls, so a drop's plan costs a handful of
+# driver-to-JVM calls instead of one per column function and literal.
+_NOT_NULL = " AND ".join(f"`{c}` IS NOT NULL" for c in RAW_COLUMNS)
+_CODES = ", ".join(f"'{c}'" for c in COUNTRY_CODE_MAP)
+_DECODE = "map({})[CountryCode]".format(
+    ", ".join(f"'{k}', '{v}'" for k, v in COUNTRY_CODE_MAP.items())
+)
+_IS_TOTAL = f"Gas = '{TOTAL_GHG_RAW}'"
+_KEEP = f"{_NOT_NULL} AND {_IS_TOTAL} AND CountryCode IN ({_CODES})"
+_OUTPUT = [
+    f"{_DECODE} AS Country",
+    "CAST(Year AS INT) AS Year",
+    "Scenario",
+    "Category",
+    f"CASE WHEN {_IS_TOTAL} THEN '{TOTAL_GHG}' ELSE Gas END AS Gas",
+    "CAST(`Reported Value` AS DOUBLE) AS ReportedValue",
+    f"CASE WHEN {_IS_TOTAL} THEN '{UNIT_KT_CO2E}' END AS Unit",
+]
+
+
 def clean_emissions(raw: DataFrame) -> DataFrame:
     """O2..O10: the transformation chain of the Glue job
-    (reference scripts/etl_process.py:81-93), typed, with the O9 country
-    decode as a map-literal lookup.  Typing uses plain casts under ANSI
+    (reference scripts/etl_process.py:81-93), typed, as one filter and one
+    projection:
+
+    - filter: O3 null-drop over ``RAW_COLUMNS`` (etl_process.py:83) and O4
+      equality + IN-list (etl_process.py:84-85);
+    - projection, in ``OUTPUT_COLUMNS`` order: O9 country decode as the
+      reference's map literal (etl_process.py:67,92), the typed Year, O6
+      Gas recoded to ``TOTAL_GHG`` and O5 Unit derived as ``UNIT_KT_CO2E``
+      (etl_process.py:86-89), O8 rename to ReportedValue, typed.  O4 keeps
+      only the raw total label, so Gas and Unit are constants; they keep
+      the reference's conditional form, whose dead branches leave both
+      columns nullable as before.
+
+    O7 (etl_process.py:90) renames a non-existent column, a documented
+    no-op, and is not replicated.  Typing uses plain casts under ANSI
     deliberately: a malformed Year/ReportedValue ABORTS the job, the same
     behavior as the reference's Postgres COPY
     (lambda_handler_warehouse.py:85-92) — use analytics' try_cast pattern
     when lenient import is wanted.
     """
-    mapping = F.create_map([F.lit(x) for x in chain(*COUNTRY_CODE_MAP.items())])
-    return (
-        raw.select(*RAW_COLUMNS)  # O2 projection
-        .na.drop(how="any", subset=RAW_COLUMNS)  # O3 null-drop (etl_process.py:83)
-        .filter(  # O4 equality + IN-list (etl_process.py:84-85)
-            (F.col("Gas") == TOTAL_GHG_RAW)
-            & F.col("CountryCode").isin(list(COUNTRY_CODE_MAP))
-        )
-        # O5 conditional derive — evaluated while Gas still holds the raw
-        # label, and O4 already restricted Gas, so the otherwise(None) branch
-        # is dead (etl_process.py:86-87; SURVEY.md §2.1 semantics note).
-        .withColumn(
-            "Unit",
-            F.when(F.col("Gas") == TOTAL_GHG_RAW, F.lit(UNIT_KT_CO2E)).otherwise(F.lit(None)),
-        )
-        # O6 conditional recode — strip the "(ktCO2e)" suffix (etl_process.py:88-89)
-        .withColumn(
-            "Gas",
-            F.when(F.col("Gas") == TOTAL_GHG_RAW, F.lit(TOTAL_GHG)).otherwise(F.col("Gas")),
-        )
-        # O7 (etl_process.py:90) renames a non-existent column — documented
-        # no-op, intentionally not replicated.
-        .withColumnRenamed("Reported Value", "ReportedValue")  # O8
-        # typed output (the reference defers typing to the Postgres COPY,
-        # lambda_handler_warehouse.py:85-92; we type here)
-        .withColumn("Year", F.col("Year").cast("int"))
-        .withColumn("ReportedValue", F.col("ReportedValue").cast("double"))
-        # O9 dim decode: the reference's literal expression (etl_process.py:67,92)
-        .withColumn("Country", mapping[F.col("CountryCode")])
-        .select(*OUTPUT_COLUMNS)  # O10 final projection / column order
-    )
+    return raw.filter(F.expr(_KEEP)).select(*[F.expr(e) for e in _OUTPUT])
 
 
 def write_warehouse(df: DataFrame, path: str) -> None:

@@ -9,6 +9,14 @@ on local[N] while remaining the right baseline for a large cluster:
 - Arrow on — every pandas UDF / mapInPandas path is Arrow-batched.
 - A modest autoBroadcastJoinThreshold: dimension tables (nation/region/
   supplier and the 30-row country dim) must broadcast, never shuffle.
+- Python call-site capture off (``spark.python.sql.dataFrameDebugging.
+  enabled=false``).  With PySpark 4's default every Column or function
+  call makes about five extra driver-to-JVM round trips to attach its
+  Python ``file:line`` to Spark's error context, which dominates the plan
+  build of a small per-drop query.  Errors keep Spark's error class and
+  message and lose only that Python location; to get it back, pass
+  ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
+  to ``get_session``.
 """
 
 from __future__ import annotations
@@ -63,6 +71,8 @@ def get_session(
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         "spark.sql.files.maxPartitionBytes": "134217728",
         "spark.sql.session.timeZone": "UTC",
+        # no Python call-site capture per Column call (module docstring)
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
         # Python DataSources (sources/synthetic.py) declare pushFilters;
         # Spark 4 refuses to plan them unless pushdown is explicitly on.
         "spark.sql.python.filterPushdown.enabled": "true",

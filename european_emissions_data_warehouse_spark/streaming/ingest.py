@@ -87,13 +87,13 @@ def run_snapshot_ingest(
     time-travelable snapshot per micro-batch, with rollback and vacuum from
     operators/snapshots.py for free.
 
-    Publish is the commit log's rename-CAS: concurrent writers conflict
-    cleanly (ConcurrentCommitError) instead of clobbering, and readers pin
-    a version and never observe a half-written table.  Each commit records
-    its micro-batch id in the manifest, so a batch replayed after a crash
-    between snapshot commit and checkpoint commit is recognized and
-    skipped — the version history is identical across failure replays,
-    not merely content-identical."""
+    Publish is the commit log's compare-and-swap: concurrent writers
+    conflict cleanly (ConcurrentCommitError) instead of clobbering, and
+    readers pin a version and never observe a half-written table.  Each
+    commit records its micro-batch id in the manifest, so a batch replayed
+    after a crash between snapshot commit and checkpoint commit is
+    recognized and skipped — the version history is identical across
+    failure replays, not merely content-identical."""
     key = list(key)
     _run_ledgered_stream(
         stream,
@@ -114,9 +114,7 @@ def _run_ledgered_stream(
 ) -> None:
     """THE ledgered-commit protocol for streaming snapshot maintenance —
     run_snapshot_ingest, run_sketch_stream, and run_hll_stream all run
-    through it (three hand-synced copies of the gen probe / replay skip /
-    merge / stamp sequence previously had to stay identical by hand, and
-    the CMS stream's guard ordering diverged once; code-review r4).
+    through it.
 
     Per micro-batch: probe the checkpoint generation, skip batches at or
     below the generation's newest committed batch id (crash replays — a
@@ -127,8 +125,7 @@ def _run_ledgered_stream(
     foreign generations), build the batch delta, merge it into the current
     snapshot, and commit with batch_id/ckpt_gen stamped in the manifest.
     The commits-dir history is listed ONCE per trigger and threaded
-    through every probe (code-review r4: each redundant listStatus is
-    O(commits) driver RPC per micro-batch).
+    through every probe (each listStatus is O(commits) driver RPC).
 
     ``delta_fn(batch) -> DataFrame``; ``merge_fn(current, delta) ->
     DataFrame`` (only called when the table has history); ``guard(table,
@@ -160,11 +157,12 @@ def _run_ledgered_stream(
             return  # crash-replay of an already-committed batch
         if guard is not None:
             guard(table, gen, hist)
-        # materialized: upsert-style merge_fns reference the delta TWICE
-        # (anti-join key build + union) and Spark performs no common-
-        # subtree reuse, so the batch's file scan and dedupe window ran
-        # twice per trigger (code-review r4, streaming scale pass)
-        delta = delta_fn(batch).localCheckpoint(eager=False)
+        # not checkpointed: upsert_anti_join references the delta twice
+        # (anti-join keys + union), but its expensive part, the file scan
+        # and dedupe_last's key exchange, sits below an Exchange that AQE
+        # reuses, so only the per-partition window runs twice; the sketch
+        # and HLL merges reference it once (CHECKPOINT_POLICY.md class 2)
+        delta = delta_fn(batch)
         base = hist[-1] if hist else -1
         merged = merge_fn(table.read(base), delta) if hist else delta
         meta = {"batch_id": str(batch_id)}
@@ -379,8 +377,8 @@ def run_sketch_stream(
     a batch replayed after a crash between sketch publish and checkpoint
     commit is recognized and SKIPPED instead of double-counted (sketch
     counters are sums — re-merging a replay would silently inflate every
-    cell); and publish is the log's rename-without-overwrite CAS, so no
-    crash window ever leaves the previous table deleted-but-unreplaced.
+    cell); and publish is the log's compare-and-swap, so no crash window
+    ever leaves the previous table deleted-but-unreplaced.
     The ledger is scoped to the CHECKPOINT GENERATION (the query id Spark
     pins in the checkpoint): batch ids restart at 0 in a fresh checkpoint
     over a possibly different file chop, so another generation's ledger
@@ -455,7 +453,7 @@ def run_hll_stream(
     Same exactly-once discipline as run_sketch_stream: the table is a
     SnapshotTable, each commit records its micro-batch id, replayed
     batches are skipped (a re-merge would be harmless for HLL's max — but
-    version history stays replay-stable), and publish is rename-CAS."""
+    version history stays replay-stable), and publish is the log's CAS."""
     keys = list(key_cols)
     # HLL union is a register-wise max (idempotent on re-union), so a
     # cross-generation re-merge cannot inflate estimates — no

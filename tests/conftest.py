@@ -49,3 +49,33 @@ def _restore_scoped_confs(request):
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(fn)`` runs ``fn()`` and returns ``(result, jobs)``:
+    the number of Spark jobs started while it ran, jobs of streaming
+    queries included.  Job ids are dense, so a status-tracker watermark
+    counts them: a one-job probe in its own job group marks the last id
+    in use, and the walk runs forward from there after ``fn``."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    group = "test-job-watermark"
+
+    def count(fn):
+        sc.setJobGroup(group, "job-id watermark probe")
+        try:
+            spark.range(1).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        bus.waitUntilEmpty()
+        start = end = max(tracker.getJobIdsForGroup(group)) + 1
+        out = fn()
+        bus.waitUntilEmpty()
+        while tracker.getJobInfo(end) is not None:
+            end += 1
+        return out, end - start
+
+    return count

@@ -363,3 +363,138 @@ def test_commit_expected_base_detects_interleaved_commit(spark, nation, tmp_path
     v = t.commit(t.read(fresh).limit(3), expected_base=fresh)
     assert v == fresh + 1
     assert t.history() == [0, 1, 2]
+
+
+def test_publish_race_has_one_winner(spark, tmp_path):
+    """Two writers publish every version at once with different data dirs:
+    each version gets exactly one winner, the other writer gets
+    ConcurrentCommitError, and the manifest names the winner's dir.
+    Hadoop's local rename is check-then-rename, so racing renames could
+    both return true and the later manifest silently replaced the
+    earlier one."""
+    import sys
+    import threading
+
+    t = SnapshotTable(spark, str(tmp_path / "tbl"))
+    rounds = 300
+    barrier = threading.Barrier(2, timeout=120)
+    outcome: dict[tuple[int, str], str] = {}
+    errors: list[BaseException] = []
+
+    def writer(name: str) -> None:
+        try:
+            for v in range(rounds):
+                barrier.wait()
+                try:
+                    t._publish(v, f"data_{name}_{v}")
+                    outcome[v, name] = "won"
+                except ConcurrentCommitError:
+                    outcome[v, name] = "lost"
+        except Exception as exc:  # surface it, and free the other thread
+            errors.append(exc)
+            barrier.abort()
+
+    threads = [threading.Thread(target=writer, args=(n,)) for n in "ab"]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=600)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(th.is_alive() for th in threads)
+    assert not errors, errors
+    bad = []
+    for v in range(rounds):
+        got = {n: outcome[v, n] for n in "ab"}
+        winners = [n for n, r in got.items() if r == "won"]
+        if len(winners) != 1 or t._manifest(v) != f"data_{winners[0]}_{v}":
+            bad.append((v, got, t._manifest(v)))
+    assert not bad, f"{len(bad)} of {rounds} versions without one winner: {bad[:5]}"
+    assert t.history() == list(range(rounds))
+    # the staged bodies and their checksums are gone
+    assert not [p.name for p in (tmp_path / "tbl" / "_commits").iterdir() if ".tmp_" in p.name]
+
+
+def test_publish_refuses_a_scheme_without_atomic_create(spark, nation, tmp_path, monkeypatch):
+    """A filesystem without an atomic create-if-absent fails loudly, naming
+    its scheme, before any data is written."""
+    from european_emissions_data_warehouse_spark.operators import snapshots
+
+    class ObjectStore:
+        def getScheme(self):
+            return "s3a"
+
+    monkeypatch.setattr(snapshots, "_fs", lambda spark, path: (spark._jvm, ObjectStore()))
+    t = SnapshotTable(spark, str(tmp_path / "tbl"))
+    with pytest.raises(NotImplementedError, match="'s3a'"):
+        t.commit(nation)
+    assert not (tmp_path / "tbl").exists()
+
+
+def test_read_builds_without_a_job(spark, nation, tmp_path, count_jobs):
+    """The manifest carries the snapshot's schema, so building a read of a
+    committed version launches no schema-inference job."""
+    t = SnapshotTable(spark, str(tmp_path / "tbl"))
+    v = t.commit(nation)
+    df, jobs = count_jobs(lambda: t.read(v))
+    assert jobs == 0
+    assert df.count() == nation.count()
+
+
+def test_read_schema_matches_written_schema(spark, tmp_path):
+    """Array, binary (an HLL sketch) and struct columns read back with the
+    schema Spark infers from the files, and the manifest records the
+    committed frame's own schema."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    df = (
+        spark.range(6)
+        .groupBy((F.col("id") % 2).alias("k"))
+        .agg(
+            F.collect_list("id").alias("ids"),
+            F.hll_sketch_agg("id").alias("hll"),
+            F.struct(F.min("id").alias("lo"), F.max("id").alias("hi")).alias("span"),
+        )
+    )
+    t = SnapshotTable(spark, str(tmp_path / "tbl"))
+    v = t.commit(df)
+    assert StructType.fromJson(json.loads(t.commit_meta(v)["schema"])) == df.schema
+    inferred = spark.read.parquet(str(tmp_path / "tbl" / t._manifest(v))).schema
+    assert t.read(v).schema == inferred
+    assert dict(t.read(v).select("k", F.hll_sketch_estimate("hll")).collect()) == {0: 3, 1: 3}
+
+
+def test_manifest_without_schema_line_still_reads(spark, nation, tmp_path):
+    """Tables written before manifests carried a schema line still read,
+    by inference."""
+    root = tmp_path / "tbl"
+    nation.write.parquet(str(root / "data_v00000000_legacy"))
+    (root / "_commits").mkdir()
+    (root / "_commits" / "00000000").write_text("data_v00000000_legacy\nbatch_id=0")
+    t = SnapshotTable(spark, str(root))
+    assert "schema" not in t.commit_meta(0)
+    assert t.read().count() == nation.count()
+    assert t.read().columns == nation.columns
+
+
+def test_rollback_and_optimize_versions_carry_the_schema(spark, nation, tmp_path):
+    t = SnapshotTable(spark, str(tmp_path / "tbl"))
+    t.commit(nation.select("n_nationkey", "n_name"))
+    t.commit(nation)
+    back = t.rollback(0)
+    assert t.commit_meta(back)["schema"] == t.commit_meta(0)["schema"]
+    assert t.read(back).columns == ["n_nationkey", "n_name"]
+    packed = t.optimize()
+    assert t.commit_meta(packed)["schema"] == t.commit_meta(0)["schema"]
+
+
+def test_commit_rejects_the_reserved_schema_key(spark, nation, tmp_path):
+    t = SnapshotTable(spark, str(tmp_path / "tbl"))
+    with pytest.raises(ValueError, match="reserved"):
+        t.commit(nation, meta={"schema": "{}"})
+    assert t.history() == []

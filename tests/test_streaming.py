@@ -802,3 +802,100 @@ def test_ledgered_stream_rejects_table_deleted_under_live_checkpoint(
     with pytest.raises(Exception, match="no commit history"):
         run_snapshot_ingest(stream2, table, ckpt, key=["event_id"], order_by=["ts"])
     shutil.rmtree(str(tmp_path), ignore_errors=True)
+
+
+EMISSIONS_KEY = ["Country", "Year", "Scenario", "Category", "Gas", "Unit"]
+
+
+def _land_emissions_drop(landing, name: str, rows) -> None:
+    """Land one raw EEA CSV drop atomically (staged as a dot-file, which
+    the file source does not list, then renamed)."""
+    import csv
+    import os
+
+    from european_emissions_data_warehouse_spark.sources.schemas import (
+        EMISSIONS_RAW_SCHEMA,
+    )
+
+    os.makedirs(landing, exist_ok=True)
+    staged = os.path.join(landing, f".{name}")
+    with open(staged, "w", newline="") as f:
+        w = csv.writer(f)
+        w.writerow(EMISSIONS_RAW_SCHEMA.fieldNames())
+        w.writerows(rows)
+    os.replace(staged, os.path.join(landing, name))
+
+
+def _emissions_rows(years, value: float):
+    gas = "Total GHG emissions (ktCO2e)"
+    return [
+        (code, str(y), "WEM", "Energy", gas, str(value + y), "", "")
+        for code in ("AT", "DE", "FR")
+        for y in years
+    ]
+
+
+def _ingest_emissions(spark, landing: str, table: str, ckpt: str) -> None:
+    from european_emissions_data_warehouse_spark.plans.emissions import clean_emissions
+    from european_emissions_data_warehouse_spark.sources.schemas import (
+        EMISSIONS_RAW_SCHEMA,
+    )
+    from european_emissions_data_warehouse_spark.streaming.ingest import (
+        run_snapshot_ingest,
+    )
+
+    raw = stream_from_directory(spark, landing, EMISSIONS_RAW_SCHEMA, fmt="csv")
+    run_snapshot_ingest(
+        clean_emissions(raw), table, ckpt, EMISSIONS_KEY, ["ReportedValue"]
+    )
+
+
+def test_snapshot_ingest_trigger_runs_three_jobs(spark, tmp_path, count_jobs):
+    """One trigger into a non-empty table runs three Spark jobs: the
+    delta's scan and dedupe shuffle stage, the broadcast of its keys for
+    the anti join, and the commit's write.  Neither an eager stage for a
+    checkpointed delta nor a schema-inference job for the current
+    version's read is among them."""
+    from european_emissions_data_warehouse_spark.operators.snapshots import SnapshotTable
+
+    landing, table, ckpt = (str(tmp_path / d) for d in ("landing", "table", "ckpt"))
+    _land_emissions_drop(landing, "d0.csv", _emissions_rows(range(2020, 2030), 1.0))
+    _ingest_emissions(spark, landing, table, ckpt)
+    # revises 2025-2029 and adds 2030-2034
+    _land_emissions_drop(landing, "d1.csv", _emissions_rows(range(2025, 2035), 5.0))
+    _, jobs = count_jobs(lambda: _ingest_emissions(spark, landing, table, ckpt))
+    assert jobs == 3
+    t = SnapshotTable(spark, table)
+    assert t.history() == [0, 1]
+    got = {(r.Country, r.Year): r.ReportedValue for r in t.read().collect()}
+    assert len(got) == 3 * 15
+    assert got["Germany", 2024] == 2025.0 and got["Germany", 2025] == 2030.0
+
+
+def test_snapshot_ingest_delta_scans_its_files_once(spark, tmp_path, monkeypatch):
+    """The upsert references the delta twice (anti-join keys and union),
+    but the delta's file scan runs once: its dedupe exchange is reused, so
+    the executed plan of what the trigger commits holds one scan of the
+    micro-batch (foreachBatch hands it over as an RDD over the CSV file
+    source) and a ReusedExchange."""
+    from european_emissions_data_warehouse_spark.operators.snapshots import SnapshotTable
+
+    landing, table, ckpt = (str(tmp_path / d) for d in ("landing", "table", "ckpt"))
+    _land_emissions_drop(landing, "d0.csv", _emissions_rows(range(2020, 2030), 1.0))
+    _ingest_emissions(spark, landing, table, ckpt)
+    _land_emissions_drop(landing, "d1.csv", _emissions_rows(range(2025, 2035), 5.0))
+
+    plans = []
+    commit = SnapshotTable.commit
+
+    def traced_commit(self, df, *args, **kwargs):
+        df.collect()
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return commit(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(SnapshotTable, "commit", traced_commit)
+    _ingest_emissions(spark, landing, table, ckpt)
+    (plan,) = plans
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("Scan ExistingRDD") == 1, final
+    assert "ReusedExchange" in final, final
