@@ -850,6 +850,16 @@ def _ingest_emissions(spark, landing: str, table: str, ckpt: str) -> None:
     )
 
 
+def _lake_with_pending_drop(spark, tmp_path) -> tuple[str, str, str]:
+    """A table holding one ingested drop, plus a landed second drop that
+    revises 2025-2029 and adds 2030-2034; returns (landing, table, ckpt)."""
+    landing, table, ckpt = (str(tmp_path / d) for d in ("landing", "table", "ckpt"))
+    _land_emissions_drop(landing, "d0.csv", _emissions_rows(range(2020, 2030), 1.0))
+    _ingest_emissions(spark, landing, table, ckpt)
+    _land_emissions_drop(landing, "d1.csv", _emissions_rows(range(2025, 2035), 5.0))
+    return landing, table, ckpt
+
+
 def test_snapshot_ingest_trigger_runs_three_jobs(spark, tmp_path, count_jobs):
     """One trigger into a non-empty table runs three Spark jobs: the
     delta's scan and dedupe shuffle stage, the broadcast of its keys for
@@ -858,11 +868,7 @@ def test_snapshot_ingest_trigger_runs_three_jobs(spark, tmp_path, count_jobs):
     version's read is among them."""
     from european_emissions_data_warehouse_spark.operators.snapshots import SnapshotTable
 
-    landing, table, ckpt = (str(tmp_path / d) for d in ("landing", "table", "ckpt"))
-    _land_emissions_drop(landing, "d0.csv", _emissions_rows(range(2020, 2030), 1.0))
-    _ingest_emissions(spark, landing, table, ckpt)
-    # revises 2025-2029 and adds 2030-2034
-    _land_emissions_drop(landing, "d1.csv", _emissions_rows(range(2025, 2035), 5.0))
+    landing, table, ckpt = _lake_with_pending_drop(spark, tmp_path)
     _, jobs = count_jobs(lambda: _ingest_emissions(spark, landing, table, ckpt))
     assert jobs == 3
     t = SnapshotTable(spark, table)
@@ -880,11 +886,7 @@ def test_snapshot_ingest_delta_scans_its_files_once(spark, tmp_path, monkeypatch
     source) and a ReusedExchange."""
     from european_emissions_data_warehouse_spark.operators.snapshots import SnapshotTable
 
-    landing, table, ckpt = (str(tmp_path / d) for d in ("landing", "table", "ckpt"))
-    _land_emissions_drop(landing, "d0.csv", _emissions_rows(range(2020, 2030), 1.0))
-    _ingest_emissions(spark, landing, table, ckpt)
-    _land_emissions_drop(landing, "d1.csv", _emissions_rows(range(2025, 2035), 5.0))
-
+    landing, table, ckpt = _lake_with_pending_drop(spark, tmp_path)
     plans = []
     commit = SnapshotTable.commit
 
