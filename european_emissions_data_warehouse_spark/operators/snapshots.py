@@ -136,6 +136,13 @@ class SnapshotTable:
         h = self.history()
         return h[-1] if h else None
 
+    def _current_version(self) -> int:
+        """The latest version; raises ValueError on a table with no commits."""
+        version = self.latest_version()
+        if version is None:
+            raise ValueError(f"no commits yet at {self.path}")
+        return version
+
     def _manifest_text(self, version: int) -> str:
         text = read_small_text(self.spark, f"{self.commits_dir}/{version:08d}")
         if text is None:
@@ -330,11 +337,14 @@ class SnapshotTable:
         dirs, exactly like Delta/Iceberg's delete+vacuum contract; until
         then time travel can still reach the old bytes, which is the
         auditable retention window.  Rows where the predicate evaluates
-        NULL are kept (three-valued logic must not silently erase)."""
-        from pyspark.sql import functions as F
+        NULL are kept (three-valued logic must not silently erase).
 
+        The commit is pinned to the version read, so a commit that lands in
+        between raises ConcurrentCommitError instead of being published
+        over (retry by calling again)."""
+        current = self._current_version()
         keep = ~F.coalesce(condition, F.lit(False))
-        return self.commit(self.read().filter(keep))
+        return self.commit(self.read(current).filter(keep), expected_base=current)
 
     def rollback(self, version: int) -> int:
         """Re-publish an old snapshot as the new latest (history preserved),
@@ -365,9 +375,7 @@ class SnapshotTable:
         a schema line is read with that schema, so building the frame runs
         no Spark job; one without it infers the schema from the files."""
         if version is None:
-            version = self.latest_version()
-            if version is None:
-                raise ValueError(f"no commits yet at {self.path}")
+            version = self._current_version()
         data_dir, meta = self._entry(version)
         reader = self.spark.read
         if "schema" in meta:
@@ -504,15 +512,15 @@ class SnapshotTable:
         (operators/maintenance.z_value, over its full 31-bit domain), so
         each output file covers a disjoint z range and min/max footer stats
         turn predicates on either column into file skips.
-        Returns the new version number."""
+        Returns the new version number.  Like ``delete_where``, the commit
+        is pinned to the version read: an interleaved commit raises
+        ConcurrentCommitError."""
         from european_emissions_data_warehouse_spark.operators.maintenance import (
             _target_file_count,
             z_value,
         )
 
-        current = self.latest_version()
-        if current is None:
-            raise ValueError(f"no commits yet at {self.path}")
+        current = self._current_version()
         data_dir = f"{self.path}/{self._manifest(current)}"
         _jvm, fs = _fs(self.spark, data_dir)
         n_files = _target_file_count(fs, [self._jpath(data_dir)], target_file_mb)
@@ -529,26 +537,31 @@ class SnapshotTable:
             )
         else:
             df = df.repartition(n_files)
-        return self.commit(df)
+        return self.commit(df, expected_base=current)
 
     def vacuum(self, keep_last: int = 2) -> list[str]:
         """Delete data dirs referenced only by commits older than the last
         ``keep_last``; returns the deleted dir names.  Time travel reaches
-        only retained versions afterwards.
+        only retained versions afterwards.  ``keep_last`` must be at least 1:
+        the latest version stays readable (as ``rollback`` also ensures), so
+        a smaller value raises ValueError before anything is deleted.
 
         Also collects ORPHANED data dirs — written by a writer that crashed
         before publishing (or before its ConcurrentCommitError cleanup ran)
-        and therefore named by NO manifest.  Scanning only manifests left
-        each such crash stranding a table-sized directory forever
-        (code-review r4, second pass); the physical listing catches them.
+        and therefore named by NO manifest; the physical listing catches
+        them.
         An orphan is collectable only once its CAS slot is burned: a dir at
         version N <= the latest committed version can never be published
         (``_publish`` would raise ConcurrentCommitError), while an orphan
         at version > latest may be an IN-FLIGHT writer's dir and is left
         alone — no mtime heuristics, the log itself decides."""
+        if keep_last < 1:
+            raise ValueError(
+                f"vacuum(keep_last={keep_last}) would delete the latest "
+                f"version of {self.path}; keep_last must be at least 1"
+            )
         history = self.history()
-        keep_versions = history[-keep_last:] if keep_last > 0 else []
-        keep_dirs = {self._manifest(v) for v in keep_versions}
+        keep_dirs = {self._manifest(v) for v in history[-keep_last:]}
         referenced = {self._manifest(v) for v in history}
         latest = history[-1] if history else -1
         jvm, fs = _fs(self.spark, self.path)
@@ -566,9 +579,8 @@ class SnapshotTable:
                 if not ver.isdigit() or int(ver) > latest:
                     continue  # in-flight writer (or foreign dir): keep
             # report only dirs that existed and were deleted NOW: referenced
-            # dirs of already-vacuumed versions are not on disk, and blindly
-            # appending them re-reported the same phantom deletions on every
-            # vacuum run (code-review r4)
+            # dirs of already-vacuumed versions are not on disk, and
+            # reporting them would repeat the same deletions on every run
             if fs.delete(self._jpath(f"{self.path}/{d}"), True):
                 removed.append(d)
         # stale manifest-staging files: a writer that crashed between

@@ -3626,7 +3626,7 @@ def q_recursive_ancestry(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 2e9 ceiling.  Spark reads the conf at EXECUTION time (after this
     function returns), so a try/finally around the build alone cannot
     restore it; instead the override is recorded via set_scoped_conf and
-    every shared-session harness (bench.py, the pytest fixture,
+    every shared-session harness (the pytest fixture,
     tools/layout_fuzz.py, tools/determinism_sweep.py) restores the prior
     value with restore_scoped_confs once the query has executed."""
     set_scoped_conf(spark, "spark.sql.cteRecursionRowLimit", "2000000000")

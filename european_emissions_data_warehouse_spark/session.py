@@ -61,11 +61,9 @@ def get_session(
         # component queries — 32 near-empty tasks per round); at production
         # shuffle sizes (>= 256 KB x parallelism) the floor is not binding
         # and coalescing behaves exactly as before — a scale-adaptive
-        # default, not a local[32] tune (guide §2.2/§2.5; env-overridable
-        # like every other knob).
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize": os.environ.get(
-            "SPARK_GRAFT_MIN_PARTITION_SIZE", "256k"
-        ),
+        # default, not a local[32] tune (guide §2.2/§2.5).  A fixed value;
+        # ``extra_conf`` overrides it for one session.
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize": "256k",
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
@@ -95,9 +93,9 @@ def get_session(
 # --- call-site-scoped session conf overrides (ADVICE r7) -------------------
 #
 # ``spark.conf.set`` at plan-build time is session-sticky: in shared-session
-# runs (bench.py, the pytest spark fixture, tools/layout_fuzz.py's parity
-# loop, tools/determinism_sweep.py) every query built AFTER an overriding
-# one inherits the override, silently negating engine-wide defaults the
+# runs (the pytest spark fixture, tools/layout_fuzz.py's parity loop,
+# tools/determinism_sweep.py) every query built AFTER an overriding one
+# inherits the override, silently negating engine-wide defaults the
 # override was scoped away from (the recursive-CTE 1M-row fail-fast brake).
 # A try/finally around build alone cannot fix this — Spark reads the conf at
 # EXECUTION, which happens after the query function returns — so the scoping

@@ -70,15 +70,3 @@ def test_no_query_is_left_ungraded_outside_the_window():
     assert ungraded_total > 50 or not deferred, (
         "deferrals are only legitimate when ungraded queries exceed the window"
     )
-
-
-def test_bench_headline_names_all_resolve():
-    """bench.py skips unknown names silently (qs.get) — a renamed query
-    would quietly vanish from BENCH_r{N}.  Every HEADLINE entry must be a
-    registered query."""
-    import bench
-
-    qs = set(entry_mod.queries())
-    missing = [n for n in bench.HEADLINE if n not in qs]
-    assert not missing, f"bench entries not in queries(): {missing}"
-    assert len(set(bench.HEADLINE)) == len(bench.HEADLINE), "duplicate bench entries"

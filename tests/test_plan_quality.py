@@ -574,8 +574,8 @@ def test_round7_recursion_row_brake_scoped_to_call_site(spark, sf_dir):
     assert level > 0, "level brake disabled — infinite recursion unguarded"
     # (d) ADVICE r7: the override must be RESTORABLE — restore_scoped_confs
     # returns the session to its prior brake, so shared-session harnesses
-    # (bench.py, layout_fuzz, determinism_sweep, this very fixture via the
-    # autouse conftest restore) don't leak the 2e9 ceiling into queries
+    # (layout_fuzz, determinism_sweep, this very fixture via the autouse
+    # conftest restore) don't leak the 2e9 ceiling into queries
     # built after recursive_ancestry.
     from european_emissions_data_warehouse_spark.session import (
         restore_scoped_confs,

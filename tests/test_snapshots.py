@@ -498,3 +498,46 @@ def test_commit_rejects_the_reserved_schema_key(spark, nation, tmp_path):
     with pytest.raises(ValueError, match="reserved"):
         t.commit(nation, meta={"schema": "{}"})
     assert t.history() == []
+
+
+def _interleave_before_commit(t: SnapshotTable, df) -> None:
+    """Make ``t``'s next ``commit`` first let another writer commit ``df``:
+    the window between a read-modify-write's read and its own publish."""
+    own_commit = t.commit
+
+    def commit(*args, **kwargs):
+        t.commit = own_commit
+        SnapshotTable(t.spark, t.path).commit(df)
+        return own_commit(*args, **kwargs)
+
+    t.commit = commit
+
+
+@pytest.mark.parametrize(
+    "rewrite",
+    [lambda t: t.optimize(), lambda t: t.delete_where(F.col("id") == 1)],
+    ids=["optimize", "delete_where"],
+)
+def test_rewrite_refuses_to_publish_over_an_interleaved_commit(spark, tmp_path, rewrite):
+    """optimize and delete_where read the latest snapshot and commit a
+    rewrite of it; a commit landing in between must fail the publish CAS,
+    not be published over (which dropped its rows from the latest
+    snapshot)."""
+    t = SnapshotTable(spark, str(tmp_path / "tbl"))
+    t.commit(spark.createDataFrame([(1,), (2,)], "id long"))
+    _interleave_before_commit(t, spark.createDataFrame([(1,), (2,), (3,)], "id long"))
+    with pytest.raises(ConcurrentCommitError):
+        rewrite(t)
+    assert t.history() == [0, 1]
+    assert sorted(r["id"] for r in t.read().collect()) == [1, 2, 3]
+
+
+@pytest.mark.parametrize("keep_last", [0, -1])
+def test_vacuum_keeps_the_latest_version_readable(spark, nation, tmp_path, keep_last):
+    t = SnapshotTable(spark, str(tmp_path / "tbl"))
+    t.commit(nation.limit(3))
+    t.commit(nation)
+    with pytest.raises(ValueError, match="keep_last"):
+        t.vacuum(keep_last=keep_last)
+    assert t.read().count() == nation.count()
+    assert t.read(0).count() == 3

@@ -1,0 +1,49 @@
+"""Every engine name a ``tools/*.py`` script imports still exists.
+
+The tools run only by hand, so an engine function deleted or renamed
+without updating them would otherwise surface only at the next manual run.
+The check parses each script (no Spark session starts), imports every
+``from european_emissions_data_warehouse_spark... import name`` module,
+top-level or inside a function, and looks the name up on it."""
+
+from __future__ import annotations
+
+import ast
+import importlib
+import os
+
+import pytest
+
+_PKG = "european_emissions_data_warehouse_spark"
+_TOOLS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+
+
+def _engine_imports(path: str) -> list[tuple[int, str, str]]:
+    with open(path) as f:
+        tree = ast.parse(f.read(), filename=path)
+    return [
+        (node.lineno, node.module, alias.name)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.ImportFrom)
+        and node.level == 0
+        and node.module
+        and (node.module == _PKG or node.module.startswith(_PKG + "."))
+        for alias in node.names
+    ]
+
+
+@pytest.mark.parametrize(
+    "tool",
+    sorted(
+        f
+        for f in os.listdir(_TOOLS)
+        if f.endswith(".py") and _engine_imports(os.path.join(_TOOLS, f))
+    ),
+)
+def test_tool_engine_imports_resolve(tool):
+    missing = [
+        f"line {lineno}: {module}.{name}"
+        for lineno, module, name in _engine_imports(os.path.join(_TOOLS, tool))
+        if not hasattr(importlib.import_module(module), name)
+    ]
+    assert not missing, f"tools/{tool} imports names the engine no longer has: {missing}"

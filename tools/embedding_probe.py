@@ -69,7 +69,7 @@ def main() -> None:
     )
 
     emb = spark.read.parquet(f"{args.fixture}/embeddings.parquet")
-    n_vecs = emb.count()  # also warms the JVM/codegen like bench.py does
+    n_vecs = emb.count()  # also warms the JVM/codegen before the timed runs
 
     def run_once() -> float:
         t0 = time.perf_counter()
