@@ -924,16 +924,15 @@ def chunk_dedup(
 
 def _band_from_sigs(sigs: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     """(id, sig) -> (id, sig, band, bucket): the banding step, shared by
-    minhash_lsh_pairs and the persisted-store table so the bucket hash can
-    never drift between the full and incremental paths (code-review r4 —
-    the two copies previously had to stay bit-identical by hand).
+    minhash_lsh_pairs, the persisted store and the near-dup stream, so the
+    bucket hash can never drift between the full and incremental paths.
 
     ``bands`` must divide ``num_hashes`` exactly: slicing b bands of
     r = num_hashes//bands rows silently DISCARDED the trailing
     num_hashes %% bands signature slots — candidate recall quietly fell
     below the 1-(1-j^r)^b tuning math, and a store built under one
     remainder convention would not protect against a probe built under
-    another (code-review r4, second pass; same guard as lsh_topk)."""
+    another (same guard as lsh_topk)."""
     if num_hashes % bands != 0:
         raise ValueError(
             f"bands={bands} must divide num_hashes={num_hashes}: the "
@@ -963,7 +962,7 @@ def _sig_estimate(num_hashes: int):
     of equal minhash slots.  THE single implementation — the full-batch
     pair verifier and the incremental probe both call it, so the
     'signatures estimate identically' contract between them cannot drift
-    by hand-sync (code-review r4, same factoring as _band_from_sigs)."""
+    (same factoring as _band_from_sigs)."""
     return F.size(
         F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda eq: eq)
     ) / F.lit(num_hashes)
@@ -980,7 +979,7 @@ def _write_minhash_params(
     probed under a different k/unit/num_hashes/bands convention computes
     different gram identities or bucket hashes and silently detects NO
     duplicates — the exact failure class _band_from_sigs' divisibility
-    guard exists to prevent (code-review r4)."""
+    guard exists to prevent."""
     from european_emissions_data_warehouse_spark.operators.snapshots import (
         write_small_text,
     )
@@ -993,31 +992,13 @@ def _write_minhash_params(
 
 
 def _read_minhash_params(spark, store_path: str) -> dict[str, str] | None:
-    """The store's recorded convention, or None for a legacy store.  Looks
-    at the store root and one level down (the streaming layout keeps each
-    batch's slice in a batch_id= partition, each written by
-    minhash_store_init with its own params file)."""
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(store_path.rstrip("/"))
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    cands = [jvm.org.apache.hadoop.fs.Path(f"{store_path.rstrip('/')}/{_MINHASH_PARAMS_FILE}")]
-    if fs.exists(root):
-        for st in fs.listStatus(root):
-            if st.isDirectory():
-                cands.append(
-                    jvm.org.apache.hadoop.fs.Path(
-                        f"{st.getPath().toString()}/{_MINHASH_PARAMS_FILE}"
-                    )
-                )
+    """The store's recorded convention, or None for a legacy store."""
     from european_emissions_data_warehouse_spark.operators.snapshots import read_small_text
 
-    for p in cands:
-        text = read_small_text(spark, p.toString())
-        if text is not None:
-            return dict(
-                ln.split("=", 1) for ln in text.strip().splitlines() if "=" in ln
-            )
-    return None
+    text = read_small_text(spark, f"{store_path.rstrip('/')}/{_MINHASH_PARAMS_FILE}")
+    if text is None:
+        return None
+    return dict(ln.split("=", 1) for ln in text.strip().splitlines() if "=" in ln)
 
 
 def _minhash_band_table(
@@ -1059,6 +1040,50 @@ def minhash_store_init(
     _write_minhash_params(docs.sparkSession, store_path, k, unit, num_hashes, bands)
 
 
+def _minhash_probe(
+    new_b: DataFrame, old_b: DataFrame | None, num_hashes: int, threshold: float
+) -> DataFrame:
+    """(new_id, dup_of, est_jaccard): every doc of the band table ``new_b``
+    whose signature estimate clears ``threshold`` against a doc of
+    ``old_b`` (dup_of = the old id) or against an earlier-id doc of
+    ``new_b`` itself (intra-batch dedup, first-id-wins like dedup_exact).  Both are (id, sig, band, bucket) tables from
+    _band_from_sigs, so the old side is touched only through (band, bucket)
+    equality joins; ``old_b`` None (no standing corpus) leaves the
+    intra-batch pairs.  THE probe of minhash_dedup_incremental and
+    streaming/ingest.run_neardup_dedup_stream.
+
+    A doc is never a duplicate of ITSELF: a doc whose id already sits in
+    ``old_b`` (a re-delivered document) does not match its own stored
+    copy at est_jaccard 1.0, which would drop it from the corpus."""
+    n = new_b.select(
+        F.col("id").alias("id_b"), F.col("sig").alias("sig_b"), "band", "bucket"
+    )
+
+    def pairs_with(other: DataFrame, keep) -> DataFrame:
+        o = other.select(
+            F.col("id").alias("id_a"), F.col("sig").alias("sig_a"), "band", "bucket"
+        )
+        return (
+            n.join(o, ["band", "bucket"])
+            .filter(keep)
+            .select("id_b", "id_a", "sig_a", "sig_b")
+            .distinct()
+        )
+
+    pairs = pairs_with(new_b, F.col("id_a") < F.col("id_b"))
+    if old_b is not None:
+        pairs = pairs_with(old_b, F.col("id_a") != F.col("id_b")).unionByName(pairs)
+    return (
+        pairs.withColumn("est_jaccard", _sig_estimate(num_hashes))
+        .filter(F.col("est_jaccard") >= threshold)
+        .select(
+            F.col("id_b").alias("new_id"),
+            F.col("id_a").alias("dup_of"),
+            "est_jaccard",
+        )
+    )
+
+
 def minhash_dedup_incremental(
     new_docs: DataFrame,
     store_path: str,
@@ -1070,7 +1095,6 @@ def minhash_dedup_incremental(
     bands: int = 8,
     threshold: float = 0.5,
     update_store: bool = True,
-    with_band_table: bool = False,
 ) -> DataFrame:
     """Dedup a NEW batch against the standing corpus without re-pairing the
     corpus against itself — the production shape for a corpus that grows
@@ -1079,37 +1103,29 @@ def minhash_dedup_incremental(
     through bucket-equality joins keyed on (band, bucket), so per-batch
     cost is O(new·bands + matching buckets).
 
-    Returns (new_id, dup_of, est_jaccard) — or, with ``with_band_table``,
-    the tuple (pairs, new_band_table): the eagerly-materialized band table
-    of the WHOLE batch, so callers that persist survivors' band rows
-    themselves (the streaming twin) can filter it by survivor id instead
-    of re-running the dominant tokenize+grams+32-permutation signature
-    stage over raw text a second time (code-review r4, streaming scale
-    pass).  Each pair: every new doc whose signature
-    estimate clears ``threshold`` against an existing doc (dup_of = the
-    stored id) or an earlier-id doc within the same batch (intra-batch
-    dedup, first-id-wins like dedup_exact).  With ``update_store``, the
-    SURVIVING new docs' band rows append to the store so the next batch
-    sees them — duplicates never enter the store, keeping it one row per
-    retained doc per band.  Exactly the pair set the full-batch
-    ``minhash_lsh_pairs`` would emit for pairs touching the new batch
-    (asserted by test), because signatures and banding hash identically.
+    Returns (new_id, dup_of, est_jaccard) from :func:`_minhash_probe`: every
+    new doc whose signature estimate clears ``threshold`` against an
+    existing doc (dup_of = the stored id) or an earlier-id doc within the
+    same batch.  With ``update_store``, the SURVIVING new docs' band rows
+    append to the store so the next batch sees them — duplicates never
+    enter the store, keeping it one row per retained doc per band.
+    Exactly the pair set the full-batch ``minhash_lsh_pairs`` would emit
+    for pairs touching the new batch (asserted by test), because
+    signatures and banding hash identically.
 
     The ``update_store`` append is NOT crash-replay idempotent: re-running
     a batch that already appended duplicates its band rows (downstream
     ``.distinct()`` keeps answers right, but the store grows and bucket
-    joins fan out).  Orchestrated callers should pass update_store=False
-    and own the store write — streaming/ingest.run_neardup_dedup_stream
-    does exactly that with per-batch partition OVERWRITE, which is the
-    replay-safe layout (code-review r4)."""
+    joins fan out).  A stream needs a ledger instead:
+    streaming/ingest.run_neardup_dedup_stream keeps its corpus in a
+    SnapshotTable whose commit log skips replayed batches."""
     spark = new_docs.sparkSession
     # convention check BEFORE any join: a store built under different
     # k/unit/num_hashes/bands computes different gram identities or bucket
     # hashes, so a mismatched probe silently admits every cross-batch
     # duplicate (and null-padded zip_with corrupts est_jaccard on a
     # num_hashes mismatch).  Recorded params fail loudly; a legacy store
-    # without them falls back to a row-level signature-width guard
-    # (code-review r4).
+    # without them falls back to a row-level signature-width guard.
     stored = _read_minhash_params(spark, store_path)
     if stored is not None:
         declared = {"k": k, "unit": unit, "num_hashes": num_hashes, "bands": bands}
@@ -1139,55 +1155,18 @@ def minhash_dedup_incremental(
                         F.size("sig").cast("string"),
                         F.lit(
                             f" != probe num_hashes={num_hashes} — the store was "
-                            "built under a different convention (code-review r4)"
+                            "built under a different convention"
                         ),
                     )
                 )
             ),
         )
-
-    est = _sig_estimate(num_hashes)
-
-    n = new_b.select(
-        F.col("id").alias("id_b"), F.col("sig").alias("sig_b"), "band", "bucket"
-    )
-    o = old_b.select(
-        F.col("id").alias("id_a"), F.col("sig").alias("sig_a"), "band", "bucket"
-    )
-    # id_a != id_b: a doc is never a duplicate of ITSELF — without this, a
-    # crash-replayed batch whose survivors already reached the store would
-    # self-match at est_jaccard 1.0 and flag every survivor as a duplicate,
-    # permanently dropping the documents from the output corpus (ADVICE r3)
-    vs_old = (
-        n.join(o, ["band", "bucket"])
-        .filter(F.col("id_a") != F.col("id_b"))
-        .select("id_b", "id_a", "sig_a", "sig_b")
-        .distinct()
-    )
-    n2 = new_b.select(
-        F.col("id").alias("id_a"), F.col("sig").alias("sig_a"), "band", "bucket"
-    )
-    vs_new = (
-        n.join(n2, ["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_b", "id_a", "sig_a", "sig_b")
-        .distinct()
-    )
-    pairs = (
-        vs_old.unionByName(vs_new)
-        .withColumn("est_jaccard", est)
-        .filter(F.col("est_jaccard") >= threshold)
-        .select(
-            F.col("id_b").alias("new_id"),
-            F.col("id_a").alias("dup_of"),
-            "est_jaccard",
-        )
-        .localCheckpoint(eager=True)
+    # the caller and the store update below both read the pairs
+    pairs = _minhash_probe(new_b, old_b, num_hashes, threshold).localCheckpoint(
+        eager=True
     )
     if update_store:
         dup_ids = pairs.select(F.col("new_id").alias("id")).distinct()
         survivors = new_b.join(dup_ids, "id", "left_anti")
         survivors.write.mode("append").parquet(store_path)
-    if with_band_table:
-        return pairs, new_b
     return pairs

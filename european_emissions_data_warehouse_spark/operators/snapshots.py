@@ -9,17 +9,22 @@ data.
 Layout:
 
     <table>/_commits/00000042        the manifest of version 42
-    <table>/data_v00000042_ab12cd34/ immutable parquet snapshot (per-writer
+    <table>/data_v00000042_ab12cd34/ immutable parquet dir (per-writer
                                      random suffix — racing writers never
                                      share a dir; the manifest is the only
                                      name readers follow)
 
-A manifest is text: line 1 is the snapshot's data dir, and every later
-line is ``key=value`` metadata (``commit_meta``).  Every publisher records
-``schema=<the snapshot's schema as one line of JSON>``, so ``read`` hands
-Spark the schema and reading a version runs no schema-inference job;
-manifests written before the schema line existed still read, by
-inference.  Streaming ingest adds ``batch_id`` and ``ckpt_gen``.
+A manifest is text: line 1 is the comma-separated list of the snapshot's
+data dirs, and every later line is ``key=value`` metadata
+(``commit_meta``).  A copy-on-write commit names one dir; an append commit
+(``commit(..., append=True)``) names its base version's dirs plus the one
+new dir it wrote, so an append writes only its own rows, and ``optimize``
+folds the list back into one dir.  One-dir manifests are the one-element
+case.  Every publisher records ``schema=<the snapshot's schema as one line
+of JSON>``, so ``read`` hands Spark the schema and reading a version runs
+no schema-inference job; manifests written before the schema line existed
+still read, by inference.  Streaming ingest adds ``batch_id`` and
+``ckpt_gen``.
 
 A commit writes its data dir, then publishes its manifest by creating the
 version's name only if it does not exist yet — a compare-and-swap: two
@@ -67,7 +72,7 @@ class ConcurrentCommitError(RuntimeError):
 
 def _fs(spark: SparkSession, path: str):
     # the PATH's filesystem, not the default one — a table on s3a:// with
-    # an hdfs:// default otherwise throws "Wrong FS" (code-review r4)
+    # an hdfs:// default otherwise throws "Wrong FS"
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
     return jvm, jvm.org.apache.hadoop.fs.Path(path).getFileSystem(conf)
@@ -75,11 +80,8 @@ def _fs(spark: SparkSession, path: str):
 
 def read_small_text(spark: SparkSession, path: str) -> str | None:
     """Driver-side read of one small text file through the path's Hadoop
-    filesystem; None if the file does not exist.  THE shared helper for
-    manifest/marker/metadata reads — the open + IOUtils.toString +
-    close-in-finally sequence previously existed as four hand-synced
-    copies across snapshots/ingest/dedup (code-review r4, streaming
-    pass)."""
+    filesystem; None if the file does not exist.  The one helper for
+    manifest and metadata reads."""
     jvm, fs = _fs(spark, path)
     p = jvm.org.apache.hadoop.fs.Path(path)
     if not fs.exists(p):
@@ -94,7 +96,7 @@ def read_small_text(spark: SparkSession, path: str) -> str | None:
 def write_small_text(spark: SparkSession, path: str, body: str) -> None:
     """Driver-side overwrite-write of one small text file through the
     path's Hadoop filesystem — read_small_text's write twin.  THE shared
-    helper for manifest/marker/metadata writes.  Callers that need atomic
+    helper for manifest and metadata writes.  Callers that need atomic
     visibility write to a temp name and publish it (SnapshotTable._publish)
     — this helper only writes."""
     jvm, fs = _fs(spark, path)
@@ -149,14 +151,14 @@ class SnapshotTable:
             raise ValueError(f"version {version} does not exist at {self.path}")
         return text.strip()
 
-    def _entry(self, version: int) -> tuple[str, dict[str, str]]:
-        """A commit's data dir and its key=value metadata, from one
+    def _entry(self, version: int) -> tuple[list[str], dict[str, str]]:
+        """A commit's data dirs and its key=value metadata, from one
         manifest read (layout in the module docstring)."""
         first, *lines = self._manifest_text(version).splitlines()
-        return first, dict(ln.split("=", 1) for ln in lines if "=" in ln)
+        return first.split(","), dict(ln.split("=", 1) for ln in lines if "=" in ln)
 
-    def _manifest(self, version: int) -> str:
-        """The snapshot data dir named by a commit (manifest line 1)."""
+    def _dirs(self, version: int) -> list[str]:
+        """The data dirs a commit's snapshot reads."""
         return self._entry(version)[0]
 
     def commit_meta(self, version: int) -> dict[str, str]:
@@ -179,19 +181,21 @@ class SnapshotTable:
             )
         return jvm, fs, scheme
 
-    def _publish(self, version: int, data_dir: str, meta: dict[str, str] | None = None) -> None:
-        """Publish ``version``'s manifest as a compare-and-swap: stage the
-        body under a per-writer temp name, then create the version's name
-        only if it is absent (``link(2)`` on ``file:``, ``rename`` on
-        ``hdfs:``).  The loser of a race gets ConcurrentCommitError.  The
-        temp name is unique per writer, so a racing writer can never
-        overwrite the winner's staged body."""
+    def _publish(
+        self, version: int, data_dirs: str, meta: dict[str, str] | None = None
+    ) -> None:
+        """Publish ``version``'s manifest (``data_dirs`` is its line 1) as a
+        compare-and-swap: stage the body under a per-writer temp name, then
+        create the version's name only if it is absent (``link(2)`` on
+        ``file:``, ``rename`` on ``hdfs:``).  The loser of a race gets
+        ConcurrentCommitError.  The temp name is unique per writer, so a
+        racing writer can never overwrite the winner's staged body."""
         jvm, fs, scheme = self._cas_fs()
         Path = jvm.org.apache.hadoop.fs.Path
         fs.mkdirs(Path(self.commits_dir))
         tmp = Path(f"{self.commits_dir}/.tmp_{version:08d}_{uuid.uuid4().hex[:8]}")
         final = Path(f"{self.commits_dir}/{version:08d}")
-        body = data_dir + "".join(f"\n{k}={v}" for k, v in (meta or {}).items())
+        body = data_dirs + "".join(f"\n{k}={v}" for k, v in (meta or {}).items())
         write_small_text(self.spark, tmp.toString(), body)
         if scheme == "hdfs":
             won = fs.rename(tmp, final)
@@ -220,6 +224,7 @@ class SnapshotTable:
         df: DataFrame,
         meta: dict[str, str] | None = None,
         expected_base: int | None = None,
+        append: bool = False,
     ) -> int:
         """Write ``df`` as the next snapshot; returns its version.  ``meta``
         key=value pairs are recorded in the commit manifest — streaming
@@ -233,8 +238,14 @@ class SnapshotTable:
         publishes at exactly ``expected_base + 1`` so the publish CAS itself
         detects any commit that landed between the caller's read and this
         publish and raises ConcurrentCommitError (retry by re-reading),
-        instead of merging over it.  Blind appends that don't read the
-        current snapshot may keep the fresh-listing form.
+        instead of merging over it.  A version that is already published
+        raises before anything is written.  Blind writes that don't read
+        the current snapshot may keep the fresh-listing form.
+
+        ``append``: ``df`` holds only rows to ADD to the base version (the
+        latest, or ``expected_base``).  The commit writes them as one new
+        dir and publishes the base's dirs plus that dir, pinned to the base
+        like ``expected_base``; ``df`` must have the base's schema.
 
         The data dir carries a per-writer random suffix, so two writers
         racing to one version never write the same dir: the loser's bytes
@@ -245,19 +256,31 @@ class SnapshotTable:
                 "commit meta key 'schema' is reserved: the manifest records "
                 "the snapshot's own schema"
             )
-        self._cas_fs()  # a scheme that cannot publish fails before the write
-        if expected_base is not None:
-            version = expected_base + 1
-        else:
+        _, fs, _ = self._cas_fs()  # a scheme that cannot publish fails first
+        if expected_base is None:
             h = self.history()
-            version = (h[-1] if h else -1) + 1
+            expected_base = h[-1] if h else -1
+        version = expected_base + 1
+        if fs.exists(self._jpath(f"{self.commits_dir}/{version:08d}")):
+            raise ConcurrentCommitError(
+                f"version {version} of {self.path} was committed concurrently"
+            )
+        schema = df.schema.json()
+        dirs = []
+        if append and expected_base >= 0:
+            dirs, base_meta = self._entry(expected_base)
+            if base_meta.get("schema", schema) != schema:
+                raise ValueError(
+                    f"append to {self.path}: the rows' schema {schema} is not "
+                    f"version {expected_base}'s {base_meta['schema']}"
+                )
         data_dir = f"data_v{version:08d}_{uuid.uuid4().hex[:8]}"
         df.write.mode("overwrite").parquet(f"{self.path}/{data_dir}")
-        meta = {**(meta or {}), "schema": df.schema.json()}
         try:
-            self._publish(version, data_dir, meta)
+            self._publish(
+                version, ",".join([*dirs, data_dir]), {**(meta or {}), "schema": schema}
+            )
         except ConcurrentCommitError:
-            _, fs = _fs(self.spark, self.path)
             fs.delete(self._jpath(f"{self.path}/{data_dir}"), True)
             raise
         return version
@@ -270,8 +293,8 @@ class SnapshotTable:
         pins in the checkpoint's metadata file).  Micro-batch ids are only
         meaningful WITHIN one checkpoint — a fresh checkpoint restarts at
         batch 0 with a possibly different file chop, so skipping its
-        batches against another generation's ledger silently drops data
-        (code-review r4).  When given, only commits stamped with the same
+        batches against another generation's ledger silently drops data.
+        When given, only commits stamped with the same
         ``ckpt_gen`` count as applied; commits WITHOUT a stamp never match
         a concrete generation — treating them as wildcards made a fresh
         checkpoint over an unstamped table silently skip its first batches
@@ -299,11 +322,11 @@ class SnapshotTable:
         ``applied_batch_ids(gen)`` while reading manifests newest-first and
         stopping at the first match, instead of O(full history) per batch
         — at 10k micro-batches the full scan made every trigger do 10k
-        driver round-trips before any data work (code-review r4).  Same
-        stamp rule as applied_batch_ids: unstamped commits never match a
-        concrete generation.  ``history``: pass a pre-listed history to
-        avoid re-listing the commits dir (per-trigger callers list once
-        and thread it through; code-review r4)."""
+        driver round-trips before any data work.  Same stamp rule as
+        applied_batch_ids: unstamped commits never match a concrete
+        generation.  ``history``: pass a pre-listed history to avoid
+        re-listing the commits dir (per-trigger callers list once and
+        thread it through)."""
         for v in reversed(self.history() if history is None else history):
             meta = self.commit_meta(v)
             b = meta.get("batch_id")
@@ -317,14 +340,19 @@ class SnapshotTable:
     def newest_generation(self, history: list[int] | None = None) -> str | None:
         """The ``ckpt_gen`` stamp of the newest stamped commit (None when
         no commit carries one).  For tables whose stream REFUSES foreign
-        generations (the CMS sketch), the newest stamp is the only one that
-        can exist, so the per-batch guard reads one manifest, not the whole
-        history.  ``history``: optional pre-listed history, as in
-        last_applied_batch."""
+        generations (the CMS sketch, the near-dup corpus), the newest stamp
+        is the only one that can exist, so the per-batch guard reads one
+        manifest, not the whole history.  ``history``: optional pre-listed
+        history, as in last_applied_batch."""
+        return self._newest_meta("ckpt_gen", history)
+
+    def _newest_meta(self, key: str, history: list[int] | None = None) -> str | None:
+        """``key``'s value in the newest commit that records it (None when
+        none does); rewrites such as optimize and rollback record none."""
         for v in reversed(self.history() if history is None else history):
-            g = self.commit_meta(v).get("ckpt_gen")
-            if g is not None:
-                return g
+            value = self.commit_meta(v).get(key)
+            if value is not None:
+                return value
         return None
 
     def delete_where(self, condition) -> int:
@@ -351,21 +379,22 @@ class SnapshotTable:
         with the target version's schema line; returns the new version
         number.
 
-        Raises if the target's data dir has been vacuumed: its manifest
-        still lists in history(), but re-publishing the deleted dir would
-        make the dangling path the table's LATEST and break every
+        Raises if any of the target's data dirs has been vacuumed: its
+        manifest still lists in history(), but re-publishing a deleted dir
+        would make the dangling path the table's LATEST and break every
         subsequent read."""
-        data_dir, meta = self._entry(version)
+        dirs, meta = self._entry(version)
         _, fs = _fs(self.spark, self.path)
-        if not fs.exists(self._jpath(f"{self.path}/{data_dir}")):
+        gone = [d for d in dirs if not fs.exists(self._jpath(f"{self.path}/{d}"))]
+        if gone:
             raise ValueError(
                 f"cannot rollback {self.path} to version {version}: its data "
-                f"dir {data_dir!r} was vacuumed — only versions within the "
+                f"dirs {gone!r} were vacuumed — only versions within the "
                 "vacuum retention window are restorable"
             )
         new_version = (self.latest_version() or 0) + 1
         schema = {"schema": meta["schema"]} if "schema" in meta else None
-        self._publish(new_version, data_dir, schema)
+        self._publish(new_version, ",".join(dirs), schema)
         return new_version
 
     # --- read -----------------------------------------------------------
@@ -376,11 +405,11 @@ class SnapshotTable:
         no Spark job; one without it infers the schema from the files."""
         if version is None:
             version = self._current_version()
-        data_dir, meta = self._entry(version)
+        dirs, meta = self._entry(version)
         reader = self.spark.read
         if "schema" in meta:
             reader = reader.schema(StructType.fromJson(json.loads(meta["schema"])))
-        return reader.parquet(f"{self.path}/{data_dir}")
+        return reader.parquet(*[f"{self.path}/{d}" for d in dirs])
 
     def diff(
         self,
@@ -406,7 +435,7 @@ class SnapshotTable:
         The CDF row contract REQUIRES ``key`` unique within each snapshot
         — duplicate keys would fan the full-outer join out m×n and emit
         change rows with wrong multiplicities, silently corrupting the
-        apply_cdf algebra downstream (ADVICE r3).  Each side therefore
+        apply_cdf algebra downstream.  Each side therefore
         carries a per-key count window that raises at execution on the
         first duplicate (the check is folded into the payload column the
         join consumes, so the optimizer cannot prune it; the window
@@ -461,8 +490,8 @@ class SnapshotTable:
         ).filter(F.col("_kind").isNotNull())
         # the preimage and postimage branches BOTH consume `joined`; without
         # a checkpoint each branch re-ran the full-outer join and both
-        # snapshot scans, doubling the promised one-join cost envelope
-        # (code-review r4, second pass).  The checkpoint holds only the
+        # snapshot scans, doubling the promised one-join cost envelope.
+        # The checkpoint holds only the
         # CHANGE rows — unchanged keys are already filtered out.
         joined = joined.localCheckpoint(eager=False)
         unchanged_key_cols = [F.col(f"_k.{k}").alias(k) for k in key]
@@ -504,9 +533,10 @@ class SnapshotTable:
 
         Streaming ingest is the canonical caller: one commit per
         micro-batch accretes many small snapshots whose final one still
-        carries per-batch file sizing; a periodic optimize folds the
-        current state into ~``target_file_mb`` files (sized from the
-        snapshot's parquet bytes, operators/maintenance._target_file_count).
+        carries per-batch file sizing, and an appended table accretes one
+        dir per append; a periodic optimize folds the current state into
+        one dir of ~``target_file_mb`` files (sized from the snapshot's
+        parquet bytes, operators/maintenance._target_file_count).
         With ``zorder_by``, rows are range-partitioned and sorted on the
         interleaved z-value of the two named non-negative integer columns
         (operators/maintenance.z_value, over its full 31-bit domain), so
@@ -521,9 +551,9 @@ class SnapshotTable:
         )
 
         current = self._current_version()
-        data_dir = f"{self.path}/{self._manifest(current)}"
-        _jvm, fs = _fs(self.spark, data_dir)
-        n_files = _target_file_count(fs, [self._jpath(data_dir)], target_file_mb)
+        _jvm, fs = _fs(self.spark, self.path)
+        dirs = [self._jpath(f"{self.path}/{d}") for d in self._dirs(current)]
+        n_files = _target_file_count(fs, dirs, target_file_mb)
         df = self.read(current)
         if zorder_by is not None:
             cols = list(zorder_by)
@@ -541,7 +571,8 @@ class SnapshotTable:
 
     def vacuum(self, keep_last: int = 2) -> list[str]:
         """Delete data dirs referenced only by commits older than the last
-        ``keep_last``; returns the deleted dir names.  Time travel reaches
+        ``keep_last`` (an appended version keeps every dir it lists);
+        returns the deleted dir names.  Time travel reaches
         only retained versions afterwards.  ``keep_last`` must be at least 1:
         the latest version stays readable (as ``rollback`` also ensures), so
         a smaller value raises ValueError before anything is deleted.
@@ -561,8 +592,9 @@ class SnapshotTable:
                 f"version of {self.path}; keep_last must be at least 1"
             )
         history = self.history()
-        keep_dirs = {self._manifest(v) for v in history[-keep_last:]}
-        referenced = {self._manifest(v) for v in history}
+        dirs_of = [self._dirs(v) for v in history]
+        keep_dirs = {d for dirs in dirs_of[-keep_last:] for d in dirs}
+        referenced = {d for dirs in dirs_of for d in dirs}
         latest = history[-1] if history else -1
         jvm, fs = _fs(self.spark, self.path)
         root = self._jpath(self.path)

@@ -19,9 +19,10 @@ Exactly-once story: the file-source checkpoint deduplicates *inputs* across
 restarts; each commit records its micro-batch id and checkpoint generation
 in the manifest, so a batch replayed after a crash between the table commit
 and the checkpoint commit is recognised and skipped
-(:func:`_run_ledgered_stream`).  The merge is also idempotent on the key,
-which matches the reference's at-least-once delivery + idempotent upsert
-(SURVEY.md §2.2 streaming row).
+(:func:`_run_ledgered_stream`, the one commit protocol of the snapshot
+ingest, CMS, HLL and near-dup streams).  The merge is also idempotent on
+the key, which matches the reference's at-least-once delivery + idempotent
+upsert (SURVEY.md §2.2 streaming row).
 
 At scale: maxFilesPerTrigger bounds micro-batch size; the merge's anti-join
 broadcasts the (small) incoming batch against the warehouse, so steady-state
@@ -30,6 +31,7 @@ transactional format (Delta/Iceberg MERGE) to avoid even that rewrite."""
 
 from __future__ import annotations
 
+import json
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -47,12 +49,9 @@ def _checkpoint_generation(spark: SparkSession, checkpoint_path: str) -> str | N
     stable across restarts FROM THE SAME checkpoint, different for a fresh
     one.  Micro-batch ids are only unique within a generation: a new
     checkpoint restarts numbering at 0 over a possibly different file
-    chop, so a batch-id replay ledger must be generation-scoped
-    (code-review r4).  Returns None if the metadata file does not exist
-    yet (foreachBatch always runs after Spark writes it, so None only
-    happens outside a live query)."""
-    import json
-
+    chop, so a batch-id replay ledger must be generation-scoped.  Returns
+    None if the metadata file does not exist yet (foreachBatch always runs
+    after Spark writes it, so None only happens outside a live query)."""
     from european_emissions_data_warehouse_spark.operators.snapshots import read_small_text
 
     text = read_small_text(spark, f"{checkpoint_path}/metadata")
@@ -111,10 +110,12 @@ def _run_ledgered_stream(
     delta_fn,
     merge_fn,
     guard=None,
+    meta: dict[str, str] | None = None,
+    append: bool = False,
 ) -> None:
     """THE ledgered-commit protocol for streaming snapshot maintenance —
-    run_snapshot_ingest, run_sketch_stream, and run_hll_stream all run
-    through it.
+    run_snapshot_ingest, run_sketch_stream, run_hll_stream and
+    run_neardup_dedup_stream all run through it.
 
     Per micro-batch: probe the checkpoint generation, skip batches at or
     below the generation's newest committed batch id (crash replays — a
@@ -129,7 +130,11 @@ def _run_ledgered_stream(
 
     ``delta_fn(batch) -> DataFrame``; ``merge_fn(current, delta) ->
     DataFrame`` (only called when the table has history); ``guard(table,
-    gen, history) -> None`` raises to refuse the batch."""
+    gen, history) -> None`` raises to refuse the batch; ``meta``: extra
+    key=value pairs recorded on every commit.  With ``append`` the table
+    only grows: ``merge_fn`` returns just the rows to add, runs on the
+    first batch too (``current`` None), and each batch commits as an
+    append (operators/snapshots.py)."""
     from european_emissions_data_warehouse_spark.operators.snapshots import SnapshotTable
 
     spark = stream.sparkSession
@@ -144,7 +149,7 @@ def _run_ledgered_stream(
             # history — someone deleted/reset the table under a live
             # checkpoint.  The file source will never re-read those
             # batches, so continuing would silently rebuild from only the
-            # remaining input (code-review r4, streaming pass).
+            # remaining input.
             raise RuntimeError(
                 f"ledgered stream at {table_path}: checkpoint "
                 f"{checkpoint_path} is at batch {batch_id} but the table "
@@ -161,19 +166,22 @@ def _run_ledgered_stream(
         # (anti-join keys + union), but its expensive part, the file scan
         # and dedupe_last's key exchange, sits below an Exchange that AQE
         # reuses, so only the per-partition window runs twice; the sketch
-        # and HLL merges reference it once (CHECKPOINT_POLICY.md class 2)
+        # and HLL merges reference it once, and the near-dup delta_fn
+        # checkpoints its own narrow signature stage (CHECKPOINT_POLICY.md
+        # class 2)
         delta = delta_fn(batch)
         base = hist[-1] if hist else -1
-        merged = merge_fn(table.read(base), delta) if hist else delta
-        meta = {"batch_id": str(batch_id)}
+        current = table.read(base) if hist else None
+        rows = delta if current is None and not append else merge_fn(current, delta)
+        stamp = {**(meta or {}), "batch_id": str(batch_id)}
         if gen is not None:
-            meta["ckpt_gen"] = gen
+            stamp["ckpt_gen"] = gen
         # expected_base pins the merge's read version: a commit landing
         # between the history() above and this publish (another stream, a
         # GDPR delete_where) fails the CAS with ConcurrentCommitError
         # instead of being silently merged-over; the failed batch is
-        # retried from a fresh read (code-review r4, streaming pass)
-        table.commit(merged, meta=meta, expected_base=base)
+        # retried from a fresh read
+        table.commit(rows, meta=stamp, expected_base=base, append=append)
 
     (
         stream.writeStream.foreachBatch(commit_batch)
@@ -183,6 +191,29 @@ def _run_ledgered_stream(
         .start()
         .awaitTermination()
     )
+
+
+def _refuse_foreign_generation(table, gen: str | None, hist: list[int]) -> None:
+    """Ledger guard for streams whose merge is not idempotent (the CMS
+    sketch sums counters; the near-dup corpus appends rows): a fresh
+    checkpoint re-reads all input, and merging it into state built by
+    another generation would count every row twice.  Checkpoint and table
+    live and die together, so refuse loudly.  The guard has held since
+    the table's first commit, so only ONE generation can be stamped: the
+    newest stamp is the whole check (O(1) per trigger)."""
+    newest = table.newest_generation(history=hist)
+    if gen is not None and hist and newest != gen:
+        origin = (
+            f"checkpoint generation {newest!r}"
+            if newest is not None
+            else "commits without a generation stamp (provenance unprovable)"
+        )
+        raise RuntimeError(
+            f"table {table.path} was built by {origin} but this query runs "
+            f"generation {gen!r}; a fresh checkpoint re-reads all input and "
+            "would merge every row a second time. Restore the original "
+            "checkpoint or start a fresh table."
+        )
 
 
 def purchase_view_stream_join(
@@ -371,47 +402,22 @@ def run_sketch_stream(
     cardinality is irrelevant to memory.
 
     The sketch lives in a :class:`SnapshotTable` (one version per merged
-    batch; read it with ``SnapshotTable(spark, path).read()``), which
-    closes both at-least-once holes ADVICE r3 found in the old
-    delete-then-rename layout: each commit records its micro-batch id, so
-    a batch replayed after a crash between sketch publish and checkpoint
-    commit is recognized and SKIPPED instead of double-counted (sketch
-    counters are sums — re-merging a replay would silently inflate every
-    cell); and publish is the log's compare-and-swap, so no crash window
-    ever leaves the previous table deleted-but-unreplaced.
+    batch; read it with ``SnapshotTable(spark, path).read()``): each commit
+    records its micro-batch id, so a batch replayed after a crash between
+    sketch publish and checkpoint commit is recognized and SKIPPED instead
+    of double-counted (sketch counters are sums — re-merging a replay would
+    silently inflate every cell); and publish is the log's
+    compare-and-swap, so no crash window ever leaves the table half
+    replaced.
     The ledger is scoped to the CHECKPOINT GENERATION (the query id Spark
     pins in the checkpoint): batch ids restart at 0 in a fresh checkpoint
     over a possibly different file chop, so another generation's ledger
     must never suppress them — and since re-merging would double-count,
     a fresh checkpoint against an existing sketch table raises instead
-    of doing either silently (checkpoint and table live and die
-    together)."""
+    of doing either silently (:func:`_refuse_foreign_generation`)."""
     from european_emissions_data_warehouse_spark.operators.sketches import (
         count_min_build,
     )
-
-    def refuse_foreign_generation(table, gen, hist):
-        # CMS counters are SUMS: merging a new checkpoint generation into
-        # state built by an old one double-counts everything the new
-        # generation re-reads.  Checkpoint and sketch table live and die
-        # together — refuse loudly instead of silently inflating.  This
-        # guard has held since the table's first commit, so only ONE
-        # generation can ever be stamped: the newest commit's stamp is the
-        # whole check (O(1) per trigger).
-        newest = table.newest_generation(history=hist)
-        if gen is not None and hist and newest != gen:
-            origin = (
-                f"checkpoint generation {newest!r}"
-                if newest is not None
-                else "commits without a generation stamp (provenance unprovable)"
-            )
-            raise RuntimeError(
-                f"run_sketch_stream: sketch table {sketch_path} was built by "
-                f"{origin} but this query runs generation {gen!r}; a fresh "
-                "checkpoint re-reads all input and would double-count every "
-                "counter. Restore the original checkpoint or start a fresh "
-                "sketch table."
-            )
 
     _run_ledgered_stream(
         stream,
@@ -425,7 +431,7 @@ def run_sketch_stream(
             .groupBy("row_j", "bucket")
             .agg(F.sum("cnt").alias("cnt"))
         ),
-        guard=refuse_foreign_generation,
+        guard=_refuse_foreign_generation,
     )
 
 
@@ -476,8 +482,7 @@ def run_hll_stream(
 
 def run_neardup_dedup_stream(
     stream: DataFrame,
-    store_path: str,
-    out_path: str,
+    table_path: str,
     checkpoint_path: str,
     id_col: str = "doc_id",
     text_col: str = "text",
@@ -487,162 +492,91 @@ def run_neardup_dedup_stream(
     num_hashes: int = 32,
     bands: int = 8,
 ) -> None:
-    """Continuous corpus ingestion with NEAR-duplicate suppression: each
-    micro-batch runs operators/dedup.minhash_dedup_incremental against the
-    standing band-bucket store, adds only surviving docs to the output
-    corpus, and lets the store grow by exactly those survivors.
+    """Continuous corpus ingestion with NEAR-duplicate suppression into a
+    :class:`SnapshotTable` at ``table_path`` holding the surviving
+    documents plus their MinHash signature (column ``minhash_sig``, NULL
+    for token-less docs).  Each micro-batch is probed against the whole
+    corpus (operators/dedup._minhash_probe, the probe
+    minhash_dedup_incremental runs), and only the survivors are appended.
 
     Contrast with dedup_stream (exact content keys, state bounded by a
-    watermark): here the "state" is the persisted LSH store, so a
-    duplicate is caught no matter how far apart the copies arrive — the
-    trade is a bucket-equality join per batch instead of in-memory
-    dropDuplicates state.  Per-batch cost is O(batch·bands + matching
-    buckets); the old corpus is never re-paired (the incremental
-    contract).  First batch bootstraps the store from its own survivors.
+    watermark): here the corpus itself is the state, so a duplicate is
+    caught no matter how far apart the copies arrive — the trade is a
+    bucket-equality join per batch instead of in-memory dropDuplicates
+    state.  Per batch, the corpus's band table is derived from the stored
+    signatures (a narrow explode, never re-hashing text), so the cost is
+    O(batch·bands + corpus scan + matching buckets); the old corpus is
+    never re-paired.  The first batch dedups against itself only.
 
-    Crash safety (ADVICE r3): foreachBatch is at-least-once, and the old
-    append-to-store-then-append-to-out sequence had TWO unrecoverable
-    windows — a replay after the store append would self-match every
-    survivor (est_jaccard 1.0) and append nothing to the corpus, silently
-    LOSING documents; a replay after the out append would duplicate
-    output rows.  The batch function is now idempotent end-to-end:
-    (a) the store join excludes self-id matches (a doc is never its own
-    duplicate), so a replayed batch recomputes the identical survivor
-    set even when its own survivors already sit in the store; and
-    (b) both the store and the corpus are laid out as ``batch_id=N``
-    partition directories written with per-partition OVERWRITE, so a
-    replay rewrites its own partition with identical content instead of
-    appending a second copy.  Re-running any suffix of batches converges
-    to the same store and corpus — no ledger required, and readers see
-    the standard partition-discovery layout (the ``batch_id`` column is
-    free ingest lineage).
-
-    The store carries a ``_generation`` marker (hidden from partition
-    discovery) stamped at bootstrap: batch-id-keyed partition OVERWRITE is
-    only replay-safe within ONE checkpoint generation — a fresh checkpoint
-    restarts numbering at 0 and would overwrite the original batch-0
-    corpus slice and its LSH state with different documents (code-review
-    r4), so a generation mismatch refuses loudly, like run_sketch_stream.
-    The marker is also the store's commit point: it is written AFTER the
-    bootstrap store write, so a crash mid-bootstrap replays the bootstrap
-    instead of treating a partial store as the standing corpus.
+    Exactly-once comes from the shared ledger (:func:`_run_ledgered_stream`):
+    each batch is one append commit stamped with its batch id, so a batch
+    replayed after a crash between the commit and the checkpoint is
+    skipped and the history stays identical; a fresh checkpoint against an
+    existing corpus is refused (:func:`_refuse_foreign_generation`), since
+    re-reading the input would append documents a second time; and a
+    corpus deleted under a live checkpoint is refused too.  Appends write
+    only their own rows; ``SnapshotTable.optimize`` folds the accreted
+    dirs into one and ``vacuum`` reclaims the rest.
 
     The MinHash parameters (``k``/``unit``/``num_hashes``/``bands``) are
-    threaded from THIS signature through every call site — the bootstrap
-    band tables, the ``eq / num_hashes`` estimate, the store init, the
-    incremental probe, and the store-update band table — so a tuning
-    change cannot leave the store with mismatched signature widths that
-    silently stop detecting duplicates (code-review r4).  They must match
-    whatever an existing store at ``store_path`` was built with."""
+    recorded in every commit and checked against the newest recorded
+    ones: a corpus probed under another convention computes different
+    gram identities or bucket hashes and silently detects no duplicates."""
     from european_emissions_data_warehouse_spark.operators.dedup import (
-        _minhash_band_table,
-        _write_minhash_params,
-        minhash_dedup_incremental,
-        minhash_store_init,
+        _band_from_sigs,
+        _minhash_probe,
+        minhash_signatures,
     )
 
-    spark = stream.sparkSession
+    sig = "minhash_sig"
+    params = json.dumps({"k": k, "unit": unit, "num_hashes": num_hashes, "bands": bands})
 
-    def _marker(jvm, conf):
-        p = jvm.org.apache.hadoop.fs.Path(f"{store_path}/_generation")
-        return p, p.getFileSystem(conf)
+    def with_signature(batch: DataFrame) -> DataFrame:
+        # the probe's band self-join and the commit both read it
+        sigs = minhash_signatures(batch, id_col, text_col, k, unit, num_hashes)
+        return (
+            batch.join(
+                sigs.select(F.col("id").alias(id_col), F.col("sig").alias(sig)),
+                id_col,
+                "left",
+            )
+            .select(*batch.columns, sig)
+            .localCheckpoint(eager=True)
+        )
 
-    def dedup_batch(batch: DataFrame, batch_id: int) -> None:
-        batch = batch.localCheckpoint(eager=True)  # multiple consumers below
-        store_part = f"{store_path}/batch_id={batch_id}"
-        out_part = f"{out_path}/batch_id={batch_id}"
-        gen = _checkpoint_generation(spark, checkpoint_path)
-        jvm = spark._jvm
-        marker_p, fs = _marker(jvm, spark._jsc.hadoopConfiguration())
-        # the marker IS the store-exists probe: an FS stat, never a Spark
-        # read whose transient failure would silently flip the batch into
-        # the bootstrap branch and skip dedup against the standing corpus
-        # (code-review r4)
-        store_exists = fs.exists(marker_p)
-        if store_exists:
-            from european_emissions_data_warehouse_spark.operators.snapshots import (
-                read_small_text,
+    def band_table(docs: DataFrame) -> DataFrame:
+        return _band_from_sigs(
+            docs.filter(F.col(sig).isNotNull()).select(
+                F.col(id_col).alias("id"), F.col(sig).alias("sig")
+            ),
+            num_hashes,
+            bands,
+        )
+
+    def survivors(corpus: DataFrame | None, delta: DataFrame) -> DataFrame:
+        old = None if corpus is None else band_table(corpus)
+        dups = _minhash_probe(band_table(delta), old, num_hashes, threshold)
+        return delta.join(
+            dups.select(F.col("new_id").alias(id_col)).distinct(), id_col, "left_anti"
+        )
+
+    def guard(table, gen, hist) -> None:
+        _refuse_foreign_generation(table, gen, hist)
+        recorded = table._newest_meta("minhash", hist)
+        if recorded is not None and recorded != params:
+            raise ValueError(
+                f"run_neardup_dedup_stream: {table_path} was built with MinHash "
+                f"{recorded}, this stream runs {params} — the bucket join "
+                "would silently detect no duplicates"
             )
 
-            stored_gen = (read_small_text(spark, marker_p.toString()) or "").strip()
-            if gen is not None and stored_gen != gen:
-                raise RuntimeError(
-                    f"run_neardup_dedup_stream: store {store_path} belongs to "
-                    f"checkpoint generation {stored_gen!r} but this query runs "
-                    f"{gen!r}; batch-id partitions would overwrite another "
-                    "generation's corpus slices. Restore the original "
-                    "checkpoint or start a fresh store/output."
-                )
-        if not store_exists:
-            # bootstrap = an EMPTY store slice + marker, then the one
-            # incremental path below: its vs_new self-join already does
-            # first-id-wins intra-batch dedup under the same _sig_estimate,
-            # so the former ~30-line hand-copy of that pair logic (which
-            # had to stay synced with dedup.py by comment discipline) is
-            # gone (code-review r4, streaming pass).  Crash between the
-            # init and the marker: replay re-inits (overwrite, idempotent).
-            # Crash after the marker: replay routes through the incremental
-            # branch against the empty slice — same survivors, and the
-            # store/out overwrites below are idempotent.
-            minhash_store_init(
-                batch.limit(0), store_part, id_col=id_col, text_col=text_col,
-                k=k, unit=unit, num_hashes=num_hashes, bands=bands,
-            )
-            from european_emissions_data_warehouse_spark.operators.snapshots import (
-                write_small_text,
-            )
-
-            write_small_text(spark, marker_p.toString(), gen or "")
-        # with_band_table: the probe already built and checkpointed the
-        # whole batch's band table — reuse it for the store write below
-        # instead of re-running the dominant signature stage over raw text
-        # (code-review r4, streaming scale pass)
-        dups, batch_bands = minhash_dedup_incremental(
-            batch, store_path, id_col=id_col, text_col=text_col,
-            k=k, unit=unit, num_hashes=num_hashes, bands=bands,
-            threshold=threshold, update_store=False, with_band_table=True,
-        )
-        dup_ids = dups.select(F.col("new_id").alias(id_col)).distinct()
-        survivors = batch.join(dup_ids, id_col, "left_anti").localCheckpoint(
-            eager=True
-        )
-        # survivors' band rows land in THIS batch's store partition —
-        # replay overwrites it with identical content (idempotent),
-        # and duplicates never enter the store.  The rows come from the
-        # probe's already-materialized band table (filtered by survivor
-        # id), not a second signature build.  The params file is
-        # re-stamped after the overwrite: a bootstrap replay routed
-        # through THIS branch rewrites batch_id=0, which is where
-        # minhash_store_init put the convention record — without the
-        # re-stamp the overwrite silently downgraded the store's
-        # params-mismatch guard forever (code-review r4)
-        batch_bands.join(
-            dup_ids.withColumnRenamed(id_col, "id"), "id", "left_anti"
-        ).write.mode("overwrite").parquet(store_part)
-        _write_minhash_params(
-            spark, store_part, k, unit, num_hashes, bands
-        )
-        survivors.write.mode("overwrite").parquet(out_part)
-
-    # Heal any crashed compact_batch_store BEFORE the first trigger: a
-    # mid-compact crash leaves folded band rows invisible (moved into the
-    # underscore-prefixed trash/stage), and probing that store would
-    # silently admit near-duplicates of every folded document into the
-    # committed corpus — the same silent-state-loss class the _generation
-    # guard above refuses loudly (code-review r9).  No-op on clean stores;
-    # the output corpus shares the batch_id layout, so heal it too.
-    from european_emissions_data_warehouse_spark.operators.maintenance import (
-        recover_interrupted_compaction,
-    )
-
-    recover_interrupted_compaction(spark, store_path)
-    recover_interrupted_compaction(spark, out_path)
-
-    (
-        stream.writeStream.foreachBatch(dedup_batch)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _run_ledgered_stream(
+        stream,
+        table_path,
+        checkpoint_path,
+        delta_fn=with_signature,
+        merge_fn=survivors,
+        guard=guard,
+        meta={"minhash": params},
+        append=True,
     )

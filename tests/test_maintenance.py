@@ -1,5 +1,5 @@
-"""Maintenance: the z-order key, z-ordered optimize layout, and the
-batch-store fold."""
+"""Maintenance: the z-order key, z-ordered optimize layout, and optimize
+in the middle of a near-dup stream."""
 
 from __future__ import annotations
 
@@ -60,7 +60,7 @@ def test_zorder_cluster_preserves_data_with_disjoint_file_ranges(spark, tmp_path
     want = sorted(map(tuple, ev.collect()))
 
     v = t.optimize(target_file_mb=1, zorder_by=["user_id", "day"])
-    out_dir = str(tmp_path / "zfrag" / t._manifest(v))
+    out_dir = str(tmp_path / "zfrag" / t._dirs(v)[0])
     assert len([f for f in os.listdir(out_dir) if f.endswith(".parquet")]) >= 2
     got_df = t.read(v)
     assert sorted(map(tuple, got_df.collect())) == want
@@ -96,68 +96,12 @@ def test_z_value_rejects_bad_bits_and_null_inputs(spark):
         df.select(z_value(F.col("a"), F.col("b"), bits=8)).collect()
 
 
-# --- compact_batch_store: the streaming store's commit-count retention lever
-
-
-def _fake_batch_store(spark, root, n_parts, rows_per=50):
-    for n in range(n_parts):
-        spark.range(n * rows_per, (n + 1) * rows_per).withColumn(
-            "val", F.col("id") * 2
-        ).repartition(3).write.mode("overwrite").parquet(f"{root}/batch_id={n}")
-
-
-def test_compact_batch_store_folds_committed_partitions(spark, tmp_path):
-    from european_emissions_data_warehouse_spark.operators.maintenance import (
-        compact_batch_store,
-    )
-
-    store = str(tmp_path / "store")
-    _fake_batch_store(spark, store, 6)
-    want = sorted(
-        map(tuple, spark.read.parquet(store).select("id", "val").collect())
-    )
-
-    res = compact_batch_store(spark, store, upto_batch_id=4)
-    assert res["folded"] == 5
-    assert res["partitions_before"] == 6
-    assert res["partitions_after"] == 2  # batch_id=0 (folded) + batch_id=5
-    assert res["files_after"] < res["files_before"]
-
-    got = spark.read.parquet(store)
-    assert sorted(map(tuple, got.select("id", "val").collect())) == want
-    # folded rows landed in the LOWEST folded id; the newest partition is
-    # untouched and stays individually overwritable
-    ids = {r["batch_id"] for r in got.select("batch_id").distinct().collect()}
-    assert ids == {0, 5}
-
-
-def test_compact_batch_store_guards(spark, tmp_path):
-    import pytest as _pytest
-
-    from european_emissions_data_warehouse_spark.operators.maintenance import (
-        compact_batch_store,
-    )
-
-    store = str(tmp_path / "store")
-    _fake_batch_store(spark, store, 3)
-    # the newest partition must stay replay-overwritable
-    with _pytest.raises(ValueError, match="replay-overwritable"):
-        compact_batch_store(spark, store, upto_batch_id=2)
-    # fewer than two foldable partitions: free no-op
-    res = compact_batch_store(spark, store, upto_batch_id=0)
-    assert res["folded"] == 0
-    assert res["partitions_after"] == 3
-    with _pytest.raises(FileNotFoundError):
-        compact_batch_store(spark, str(tmp_path / "nope"), upto_batch_id=0)
-
-
-def test_compact_batch_store_keeps_neardup_stream_semantics(
-    spark, sf_dir, tmp_path
-):
-    """End-to-end: fold the LSH store mid-stream, then prove a later batch
-    still suppresses near-dups of docs whose band rows were folded."""
-    from european_emissions_data_warehouse_spark.operators.maintenance import (
-        compact_batch_store,
+def test_optimize_keeps_neardup_stream_semantics(spark, sf_dir, tmp_path):
+    """End-to-end: fold the near-dup corpus's appended dirs with optimize
+    mid-stream, then prove a later batch still suppresses near-dups of the
+    folded documents."""
+    from european_emissions_data_warehouse_spark.operators.snapshots import (
+        SnapshotTable,
     )
     from european_emissions_data_warehouse_spark.streaming.ingest import (
         run_neardup_dedup_stream,
@@ -165,8 +109,7 @@ def test_compact_batch_store_keeps_neardup_stream_semantics(
     )
 
     landing = str(tmp_path / "landing")
-    store = str(tmp_path / "store")
-    out = str(tmp_path / "corpus")
+    corpus = str(tmp_path / "corpus")
     ck = str(tmp_path / "ckpt")
     docs = load_table(spark, sf_dir, "documents").limit(60).localCheckpoint()
     # three disjoint 20-doc slices -> three micro-batches
@@ -177,174 +120,24 @@ def test_compact_batch_store_keeps_neardup_stream_semantics(
     schema = spark.read.parquet(landing).schema
     run_neardup_dedup_stream(
         stream_from_directory(spark, landing, schema, max_files_per_trigger=1),
-        store, out, ck,
+        corpus, ck,
     )
-    kept1 = {r["doc_id"] for r in spark.read.parquet(out).collect()}
-    store_rows = spark.read.parquet(store).count()
+    t = SnapshotTable(spark, corpus)
+    kept1 = {r["doc_id"] for r in t.read().collect()}
+    assert len(t._dirs(t.latest_version())) == 3
 
-    res = compact_batch_store(spark, store, upto_batch_id=1)
-    assert res["folded"] == 2
-    assert spark.read.parquet(store).count() == store_rows
+    v = t.optimize()
+    assert len(t._dirs(v)) == 1
+    assert {r["doc_id"] for r in t.read(v).collect()} == kept1
 
     # fourth batch: same content as the WHOLE corpus under shifted ids ->
-    # every doc is a near-dup of something already in the (folded) store
+    # every doc is a near-dup of something already in the (folded) corpus
     docs.withColumn("doc_id", F.col("doc_id") + 1000).coalesce(1).write.mode(
         "append"
     ).parquet(landing)
     run_neardup_dedup_stream(
         stream_from_directory(spark, landing, schema, max_files_per_trigger=1),
-        store, out, ck,
+        corpus, ck,
     )
-    kept2 = {r["doc_id"] for r in spark.read.parquet(out).collect()}
-    assert kept2 == kept1, "folded store must still suppress its duplicates"
-
-
-def test_compact_batch_store_recovery_windows(spark, tmp_path):
-    import json as _json
-    import os
-    import shutil as _shutil
-
-    from european_emissions_data_warehouse_spark.operators.maintenance import (
-        compact_batch_store,
-        recover_interrupted_compaction,
-    )
-
-    store = str(tmp_path / "store")
-    _fake_batch_store(spark, store, 4)
-    want = sorted(
-        map(tuple, spark.read.parquet(store).select("id", "val").collect())
-    )
-
-    # window A: stage written, crash BEFORE the manifest -> roll back
-    os.makedirs(f"{store}/_compact_stage")
-    with open(f"{store}/_compact_stage/junk.parquet", "w") as f:
-        f.write("partial")
-    recover_interrupted_compaction(spark, store)
-    assert not os.path.exists(f"{store}/_compact_stage")
-    assert sorted(
-        map(tuple, spark.read.parquet(store).select("id", "val").collect())
-    ) == want
-
-    # window B: manifest + stage + sources partially moved -> roll forward.
-    # Build the stage the same way the real fold does (batches 0 and 1).
-    spark.read.parquet(
-        f"{store}/batch_id=0", f"{store}/batch_id=1"
-    ).repartition(1).write.mode("overwrite").parquet(f"{store}/_compact_stage")
-    with open(f"{store}/_compact_manifest", "w") as f:
-        f.write(_json.dumps({"lo": 0, "ids": [0, 1]}))
-    os.makedirs(f"{store}/_compact_trash")
-    os.rename(f"{store}/batch_id=0", f"{store}/_compact_trash/batch_id=0")
-    # crash here: batch_id=1 not yet moved, stage not yet published
-    recover_interrupted_compaction(spark, store)
-    assert not os.path.exists(f"{store}/_compact_manifest")
-    assert not os.path.exists(f"{store}/_compact_trash")
-    assert sorted(
-        map(tuple, spark.read.parquet(store).select("id", "val").collect())
-    ) == want
-
-    # window C: published but trash+manifest linger -> cleanup only
-    with open(f"{store}/_compact_manifest", "w") as f:
-        f.write(_json.dumps({"lo": 0, "ids": [0, 1]}))
-    os.makedirs(f"{store}/_compact_trash/batch_id=9")
-    recover_interrupted_compaction(spark, store)
-    assert not os.path.exists(f"{store}/_compact_manifest")
-    assert not os.path.exists(f"{store}/_compact_trash")
-    assert sorted(
-        map(tuple, spark.read.parquet(store).select("id", "val").collect())
-    ) == want
-
-    # and a straight-through compact still works on the healed store:
-    # window B's roll-forward already folded 0+1 into batch_id=0, so the
-    # foldable set at upto=2 is {0, 2}
-    res = compact_batch_store(spark, store, upto_batch_id=2)
-    assert res["folded"] == 2
-    assert sorted(
-        map(tuple, spark.read.parquet(store).select("id", "val").collect())
-    ) == want
-    _shutil.rmtree(store)
-
-
-def test_compact_manifest_publish_is_atomic_and_tmp_is_healed(spark, tmp_path):
-    """A half-written manifest temp (crash mid-write, pre-commit) must be
-    discarded by recovery, and a completed compact leaves neither the temp
-    nor the manifest behind (code-review r9: the manifest used to be
-    created in place, so a torn write wedged every later recover)."""
-    import os
-
-    from european_emissions_data_warehouse_spark.operators.maintenance import (
-        compact_batch_store,
-        recover_interrupted_compaction,
-    )
-
-    store = str(tmp_path / "store")
-    _fake_batch_store(spark, store, 3)
-    want = sorted(
-        map(tuple, spark.read.parquet(store).select("id", "val").collect())
-    )
-    with open(f"{store}/_compact_manifest__tmp", "w") as f:
-        f.write('{"lo": 0, "ids"')  # torn json
-    recover_interrupted_compaction(spark, store)
-    assert not os.path.exists(f"{store}/_compact_manifest__tmp")
-
-    res = compact_batch_store(spark, store, upto_batch_id=1)
-    assert res["folded"] == 2
-    assert not os.path.exists(f"{store}/_compact_manifest__tmp")
-    assert not os.path.exists(f"{store}/_compact_manifest")
-    assert sorted(
-        map(tuple, spark.read.parquet(store).select("id", "val").collect())
-    ) == want
-
-
-def test_neardup_stream_heals_interrupted_compaction(spark, sf_dir, tmp_path):
-    """A stream restarted over a mid-compact crash must NOT probe the
-    partial store (folded band rows invisible -> near-dups silently
-    admitted); run_neardup_dedup_stream heals via
-    recover_interrupted_compaction before its first trigger
-    (code-review r9)."""
-    import json as _json
-    import os
-
-    from european_emissions_data_warehouse_spark.streaming.ingest import (
-        run_neardup_dedup_stream,
-        stream_from_directory,
-    )
-
-    landing = str(tmp_path / "landing")
-    store = str(tmp_path / "store")
-    out = str(tmp_path / "corpus")
-    ck = str(tmp_path / "ckpt")
-    docs = load_table(spark, sf_dir, "documents").limit(60).localCheckpoint()
-    for i in range(2):
-        docs.filter((F.col("doc_id") % 2) == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(landing)
-    schema = spark.read.parquet(landing).schema
-    run_neardup_dedup_stream(
-        stream_from_directory(spark, landing, schema, max_files_per_trigger=1),
-        store, out, ck,
-    )
-    kept1 = {r["doc_id"] for r in spark.read.parquet(out).collect()}
-
-    # simulate the worst crash window: batch 0's rows staged+moved aside,
-    # stage not yet published — the store is missing batch-0 band rows
-    spark.read.parquet(f"{store}/batch_id=0").repartition(1).write.mode(
-        "overwrite"
-    ).parquet(f"{store}/_compact_stage")
-    with open(f"{store}/_compact_manifest", "w") as f:
-        f.write(_json.dumps({"lo": 0, "ids": [0]}))
-    os.makedirs(f"{store}/_compact_trash")
-    os.rename(f"{store}/batch_id=0", f"{store}/_compact_trash/batch_id=0")
-
-    # third batch: near-dups of the WHOLE corpus (shifted ids) — without
-    # the heal, every dup of a batch-0 doc would be admitted
-    docs.withColumn("doc_id", F.col("doc_id") + 1000).coalesce(1).write.mode(
-        "append"
-    ).parquet(landing)
-    run_neardup_dedup_stream(
-        stream_from_directory(spark, landing, schema, max_files_per_trigger=1),
-        store, out, ck,
-    )
-    kept2 = {r["doc_id"] for r in spark.read.parquet(out).collect()}
-    assert kept2 == kept1, "healed store must suppress all re-streamed docs"
-    assert not os.path.exists(f"{store}/_compact_manifest")
-    assert not os.path.exists(f"{store}/_compact_trash")
+    kept2 = {r["doc_id"] for r in t.read().collect()}
+    assert kept2 == kept1, "folded corpus must still suppress its duplicates"

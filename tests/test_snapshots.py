@@ -264,7 +264,7 @@ def test_optimize_compacts_into_new_version(spark, tmp_path):
     t.commit(df.repartition(16))
 
     def n_files(version):
-        d = str(tmp_path / "tbl" / t._manifest(version))
+        d = str(tmp_path / "tbl" / t._dirs(version)[0])
         return len([f for f in os.listdir(d) if f.endswith(".parquet")])
 
     assert n_files(0) == 16
@@ -279,7 +279,7 @@ def test_optimize_compacts_into_new_version(spark, tmp_path):
     assert t.history() == [0, 1, 2]
     # the small-file version is reclaimable without touching the optimized one
     removed = t.vacuum(keep_last=1)
-    assert t._manifest(0) in removed and t.read(v2).count() == 2000
+    assert t._dirs(0)[0] in removed and t.read(v2).count() == 2000
 
 
 def test_optimize_zorders_values_past_16_bits(spark, tmp_path):
@@ -324,7 +324,7 @@ def test_commit_data_dirs_are_writer_unique(spark, nation, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "tbl"))
     t.commit(nation.limit(2))
     t.commit(nation.limit(4))
-    dirs = {t._manifest(v) for v in t.history()}
+    dirs = {t._dirs(v)[0] for v in t.history()}
     assert len(dirs) == 2
     assert all("_" in d.replace("data_v", "") for d in dirs)
 
@@ -410,8 +410,8 @@ def test_publish_race_has_one_winner(spark, tmp_path):
     for v in range(rounds):
         got = {n: outcome[v, n] for n in "ab"}
         winners = [n for n, r in got.items() if r == "won"]
-        if len(winners) != 1 or t._manifest(v) != f"data_{winners[0]}_{v}":
-            bad.append((v, got, t._manifest(v)))
+        if len(winners) != 1 or t._dirs(v) != [f"data_{winners[0]}_{v}"]:
+            bad.append((v, got, t._dirs(v)))
     assert not bad, f"{len(bad)} of {rounds} versions without one winner: {bad[:5]}"
     assert t.history() == list(range(rounds))
     # the staged bodies and their checksums are gone
@@ -464,7 +464,7 @@ def test_read_schema_matches_written_schema(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "tbl"))
     v = t.commit(df)
     assert StructType.fromJson(json.loads(t.commit_meta(v)["schema"])) == df.schema
-    inferred = spark.read.parquet(str(tmp_path / "tbl" / t._manifest(v))).schema
+    inferred = spark.read.parquet(str(tmp_path / "tbl" / t._dirs(v)[0])).schema
     assert t.read(v).schema == inferred
     assert dict(t.read(v).select("k", F.hll_sketch_estimate("hll")).collect()) == {0: 3, 1: 3}
 
@@ -501,13 +501,17 @@ def test_commit_rejects_the_reserved_schema_key(spark, nation, tmp_path):
 
 
 def _interleave_before_commit(t: SnapshotTable, df) -> None:
-    """Make ``t``'s next ``commit`` first let another writer commit ``df``:
-    the window between a read-modify-write's read and its own publish."""
+    """Make ``t``'s next ``commit`` first let another writer publish ``df``:
+    the window between a read-modify-write's read and its own publish.
+    ``df`` is written here, so the interleaved publish runs no Spark job."""
+    version = t.latest_version() + 1
+    data_dir = f"data_v{version:08d}_other"
+    df.write.parquet(f"{t.path}/{data_dir}")
     own_commit = t.commit
 
     def commit(*args, **kwargs):
         t.commit = own_commit
-        SnapshotTable(t.spark, t.path).commit(df)
+        t._publish(version, data_dir, {"schema": df.schema.json()})
         return own_commit(*args, **kwargs)
 
     t.commit = commit
@@ -518,17 +522,28 @@ def _interleave_before_commit(t: SnapshotTable, df) -> None:
     [lambda t: t.optimize(), lambda t: t.delete_where(F.col("id") == 1)],
     ids=["optimize", "delete_where"],
 )
-def test_rewrite_refuses_to_publish_over_an_interleaved_commit(spark, tmp_path, rewrite):
+def test_rewrite_refuses_to_publish_over_an_interleaved_commit(
+    spark, tmp_path, rewrite, count_jobs
+):
     """optimize and delete_where read the latest snapshot and commit a
     rewrite of it; a commit landing in between must fail the publish CAS,
     not be published over (which dropped its rows from the latest
-    snapshot)."""
+    snapshot).  The losing commit finds its version taken before it
+    writes, so it runs no Spark job and leaves no orphan dir."""
+    import os
+
     t = SnapshotTable(spark, str(tmp_path / "tbl"))
     t.commit(spark.createDataFrame([(1,), (2,)], "id long"))
     _interleave_before_commit(t, spark.createDataFrame([(1,), (2,), (3,)], "id long"))
-    with pytest.raises(ConcurrentCommitError):
-        rewrite(t)
+
+    def lose():
+        with pytest.raises(ConcurrentCommitError):
+            rewrite(t)
+
+    _, jobs = count_jobs(lose)
+    assert jobs == 0
     assert t.history() == [0, 1]
+    assert len([d for d in os.listdir(t.path) if d.startswith("data_v")]) == 2
     assert sorted(r["id"] for r in t.read().collect()) == [1, 2, 3]
 
 
@@ -541,3 +556,83 @@ def test_vacuum_keeps_the_latest_version_readable(spark, nation, tmp_path, keep_
         t.vacuum(keep_last=keep_last)
     assert t.read().count() == nation.count()
     assert t.read(0).count() == 3
+
+
+# --- append commits -----------------------------------------------------
+
+
+def _ids(df) -> list[int]:
+    return sorted(r["id"] for r in df.collect())
+
+
+def _appended(spark, tmp_path, n_appends: int) -> SnapshotTable:
+    """A table whose v0 holds ids 0-1 and whose v1..vN each append two
+    more ids."""
+    t = SnapshotTable(spark, str(tmp_path / "tbl"))
+    t.commit(spark.range(0, 2))
+    for i in range(1, n_appends + 1):
+        t.commit(spark.range(2 * i, 2 * i + 2), append=True)
+    return t
+
+
+def test_append_writes_only_the_appended_rows(spark, tmp_path):
+    """An append publishes its base's dirs plus one new dir that holds
+    only the appended rows; older versions read as before, and rows of
+    another schema are refused."""
+    t = _appended(spark, tmp_path, 1)
+    assert t.history() == [0, 1]
+    dirs = t._dirs(1)
+    assert dirs[:-1] == t._dirs(0)
+    assert _ids(spark.read.parquet(f"{t.path}/{dirs[-1]}")) == [2, 3]
+    assert _ids(t.read(1)) == [0, 1, 2, 3]
+    assert _ids(t.read(0)) == [0, 1]
+    with pytest.raises(ValueError, match="schema"):
+        t.commit(spark.range(1).selectExpr("id", "id AS x"), append=True)
+    assert t.history() == [0, 1]
+
+
+def test_vacuum_keeps_the_dirs_of_retained_appended_versions(spark, tmp_path):
+    """Every dir an appended version lists survives vacuum while the
+    version is retained; once a copy-on-write commit supersedes them,
+    they go."""
+    t = _appended(spark, tmp_path, 2)
+    assert t.vacuum(keep_last=1) == []
+    assert _ids(t.read()) == list(range(6))
+    appended_dirs = t._dirs(2)
+    v = t.commit(t.read().filter("id < 3"))
+    assert sorted(t.vacuum(keep_last=1)) == sorted(appended_dirs)
+    assert _ids(t.read(v)) == [0, 1, 2]
+
+
+def test_optimize_folds_appended_dirs_into_one(spark, tmp_path):
+    t = _appended(spark, tmp_path, 3)
+    assert len(t._dirs(3)) == 4
+    v = t.optimize()
+    assert len(t._dirs(v)) == 1
+    assert _ids(t.read(v)) == list(range(8))
+
+
+def test_rollback_to_an_appended_version(spark, tmp_path):
+    t = _appended(spark, tmp_path, 2)
+    back = t.rollback(1)
+    assert t._dirs(back) == t._dirs(1)
+    assert _ids(t.read(back)) == [0, 1, 2, 3]
+    assert t.history() == [0, 1, 2, 3]
+
+
+def test_append_with_a_stale_expected_base_raises(spark, tmp_path, count_jobs):
+    """An append pinned to a superseded version is refused by the log
+    before it writes anything."""
+    import os
+
+    t = _appended(spark, tmp_path, 1)
+
+    def stale():
+        with pytest.raises(ConcurrentCommitError):
+            t.commit(spark.range(10, 12), expected_base=0, append=True)
+
+    _, jobs = count_jobs(stale)
+    assert jobs == 0
+    assert t.history() == [0, 1]
+    assert _ids(t.read()) == [0, 1, 2, 3]
+    assert len([d for d in os.listdir(t.path) if d.startswith("data_v")]) == 2

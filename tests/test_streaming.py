@@ -609,24 +609,30 @@ def test_neardup_dedup_stream_suppresses_across_batches(spark, sf_dir, tmp_path)
     from european_emissions_data_warehouse_spark.operators.dedup import (
         minhash_lsh_pairs,
     )
+    from european_emissions_data_warehouse_spark.operators.snapshots import (
+        SnapshotTable,
+    )
     from european_emissions_data_warehouse_spark.streaming.ingest import (
         run_neardup_dedup_stream,
         stream_from_directory,
     )
 
     landing = str(tmp_path / "landing")
-    store = str(tmp_path / "store")
-    out = str(tmp_path / "corpus")
+    corpus = str(tmp_path / "corpus")
     ck = str(tmp_path / "ckpt")
     docs = load_table(spark, sf_dir, "documents").limit(60).localCheckpoint()
     docs.coalesce(1).write.mode("overwrite").parquet(landing)
     schema = spark.read.parquet(landing).schema
 
-    run_neardup_dedup_stream(
-        stream_from_directory(spark, landing, schema, max_files_per_trigger=1),
-        store, out, ck,
-    )
-    kept1 = spark.read.parquet(out)
+    def drain():
+        run_neardup_dedup_stream(
+            stream_from_directory(spark, landing, schema, max_files_per_trigger=1),
+            corpus, ck,
+        )
+
+    drain()
+    t = SnapshotTable(spark, corpus)
+    kept1 = t.read()
     # batch truth: docs minus later-id members of LSH pairs
     pairs = minhash_lsh_pairs(docs).collect()
     dup_ids = {r["id_b"] for r in pairs}
@@ -638,34 +644,70 @@ def test_neardup_dedup_stream_suppresses_across_batches(spark, sf_dir, tmp_path)
     docs.withColumn("doc_id", F.col("doc_id") + 1000).coalesce(1).write.mode(
         "append"
     ).parquet(landing)
-    run_neardup_dedup_stream(
-        stream_from_directory(spark, landing, schema, max_files_per_trigger=1),
-        store, out, ck,
-    )
-    kept2 = spark.read.parquet(out)
+    drain()
+    kept2 = t.read()
     assert kept2.count() == kept1.count(), "re-streamed content must all be suppressed"
 
-    # within-checkpoint crash replay stays idempotent (same generation:
-    # self-id exclusion + per-batch partition OVERWRITE); checkpoint LOSS
-    # is a NEW generation whose batch numbering restarts at 0 over a
-    # possibly different chop — partitions from the old generation would
-    # be overwritten with different doc sets and stale ones would linger
-    # as duplicates, so the stream refuses via the store's _generation
-    # marker instead of converging-by-luck (code-review r4).
+    # checkpoint LOSS is a new generation whose batch numbering restarts
+    # at 0 and re-reads every drop: appending its survivors would admit
+    # each document a second time, so the stream refuses and the corpus
+    # keeps its history and rows
+    history_before = t.history()
     kept_ids_before = {r["doc_id"] for r in kept2.collect()}
-    store_rows_before = spark.read.parquet(store).count()
     shutil.rmtree(ck, ignore_errors=True)
     with pytest.raises(Exception, match="checkpoint generation"):
-        run_neardup_dedup_stream(
-            stream_from_directory(spark, landing, schema, max_files_per_trigger=1),
-            store, out, ck,
-        )
-    spark.catalog.refreshByPath(out)
-    spark.catalog.refreshByPath(store)
-    kept3_rows = spark.read.parquet(out).collect()
+        drain()
+    assert t.history() == history_before
+    kept3_rows = t.read().collect()
     assert {r["doc_id"] for r in kept3_rows} == kept_ids_before
     assert len(kept3_rows) == len(kept_ids_before)
-    assert spark.read.parquet(store).count() == store_rows_before
+    shutil.rmtree(str(tmp_path), ignore_errors=True)
+
+
+def test_neardup_stream_replay_after_a_lost_checkpoint_commit(spark, sf_dir, tmp_path):
+    """A crash after the corpus commit but before the checkpoint commit
+    replays that batch on restart: the batch id recorded in the manifest
+    skips it, so the history and the corpus are identical afterwards."""
+    import os
+
+    from european_emissions_data_warehouse_spark.operators.snapshots import (
+        SnapshotTable,
+    )
+    from european_emissions_data_warehouse_spark.streaming.ingest import (
+        run_neardup_dedup_stream,
+        stream_from_directory,
+    )
+
+    landing = str(tmp_path / "landing")
+    corpus = str(tmp_path / "corpus")
+    ck = str(tmp_path / "ckpt")
+    docs = load_table(spark, sf_dir, "documents").limit(40).localCheckpoint()
+    for i in range(2):
+        docs.filter((F.col("doc_id") % 2) == i).coalesce(1).write.mode(
+            "append"
+        ).parquet(landing)
+    schema = spark.read.parquet(landing).schema
+
+    def drain():
+        run_neardup_dedup_stream(
+            stream_from_directory(spark, landing, schema, max_files_per_trigger=1),
+            corpus, ck,
+        )
+
+    drain()
+    t = SnapshotTable(spark, corpus)
+    history = t.history()
+    assert history == [0, 1]
+    assert [t.commit_meta(v)["batch_id"] for v in history] == ["0", "1"]
+    rows = sorted(map(tuple, t.read().drop("minhash_sig").collect()))
+
+    # forget the checkpoint's commit of batch 1: its offsets stay, so the
+    # restarted query re-runs batch 1 under the same id
+    for name in ("1", ".1.crc"):
+        os.remove(os.path.join(ck, "commits", name))
+    drain()
+    assert t.history() == history
+    assert sorted(map(tuple, t.read().drop("minhash_sig").collect())) == rows
     shutil.rmtree(str(tmp_path), ignore_errors=True)
 
 

@@ -1,4 +1,4 @@
-"""Streaming-family decade probe (VERDICT r7 item #3) — the committed rig
+"""Streaming-family decade probe — the committed rig
 behind SCALING.md's streaming section, protocol-matched to
 tools/embedding_probe.py (one fresh process per invocation; the caller
 loops invocations for isolation).
@@ -9,10 +9,10 @@ GROWING standing state:
 - run_hll_stream / run_sketch_stream: state is a fixed set of sketches
   (per-key HLL registers / one depth x width CMS table), so a micro-batch
   costs O(batch) regardless of how much history the store has absorbed.
-- run_neardup_dedup_stream: the standing LSH store grows with the corpus,
+- run_neardup_dedup_stream: the standing corpus grows with every batch,
   but a batch touches it only through bucket-equality joins — per-batch
-  cost O(new x bands + matching buckets + one store scan), NOT the
-  O(store x new) re-pairing a naive full-batch LSH would do per trigger.
+  cost O(new x bands + matching buckets + one corpus scan), NOT the
+  O(corpus x new) re-pairing a naive full-batch LSH would do per trigger.
 - the ledgered-commit protocol itself (generation probe + replay skip)
   must stay O(1)-ish per trigger as commits accumulate.
 
@@ -33,11 +33,11 @@ Prints one JSON line:
     {"arm", "scale", "probe_rows", "bootstrap_sec",
      "probe_secs": [s1, s2, s3], "probe_min", "state_rows"}
 
-Commit-count ladder mode (VERDICT r8 item #4) — the decade the standard
-protocol can't see: per-trigger cost as COMMITS accumulate (store
-batch_id partitions + checkpoint history), with an optional mid-ladder
-compaction of the LSH store (operators/maintenance.compact_batch_store)
-to show the O(n_batches) partition-discovery term recovering:
+Commit-count ladder mode — the decade the standard protocol can't see:
+per-trigger cost as COMMITS accumulate (the corpus's appended data dirs,
+its commit log and the checkpoint history), with an optional mid-ladder
+``SnapshotTable.optimize`` of the corpus, which folds the appended dirs into
+one, to show the O(n_batches) dir-listing term recovering:
 
     python tools/streaming_probe.py neardup --scale 100000 \
         --ladder 400 [--ladder-probe 500] [--compact-at 200]
@@ -47,8 +47,8 @@ fixed-size trigger slices (fresh ids/tokens per trigger, so every drain
 measures probing, not an all-duplicates batch); each drain is timed
 wall-clock like the standard protocol.  Prints one JSON line:
     {"arm": "neardup", "mode": "ladder", "scale", "ladder", "probe_rows",
-     "bootstrap_sec", "walls": [...], "store_partitions": [...],
-     "compact": {"at", "sec", ...compact_batch_store result} | null,
+     "bootstrap_sec", "walls": [...], "data_dirs": [...],
+     "compact": {"at", "sec", "dirs_before", "dirs_after", "version"} | null,
      "state_rows"}
 
 Each drain includes ~1-2 s of structured-streaming query startup (constant,
@@ -119,8 +119,8 @@ def main() -> None:
                     help="rows per ladder trigger (default 500, the r8 "
                          "40-drain ladder's size)")
     ap.add_argument("--compact-at", type=int, default=None,
-                    help="after this 0-based ladder trigger, compact the "
-                         "LSH store's committed batch partitions and time it")
+                    help="after this 0-based ladder trigger, optimize the "
+                         "corpus table (one data dir) and time it")
     args = ap.parse_args()
     if args.ladder is not None and args.arm != "neardup":
         raise SystemExit("--ladder is the LSH-store commit ladder: neardup only")
@@ -196,7 +196,6 @@ def main() -> None:
     landing = f"{run}/landing"
     ckpt = f"{run}/ckpt"
     state = f"{run}/state"
-    out = f"{run}/out"
     os.makedirs(landing)
 
     from european_emissions_data_warehouse_spark.streaming.ingest import (
@@ -204,6 +203,9 @@ def main() -> None:
         run_neardup_dedup_stream,
         run_sketch_stream,
         stream_from_directory,
+    )
+    from european_emissions_data_warehouse_spark.operators.snapshots import (
+        SnapshotTable,
     )
 
     schema = spark.read.parquet(boot_src).schema
@@ -227,7 +229,7 @@ def main() -> None:
                 state, ckpt,
             )
         else:
-            run_neardup_dedup_stream(stream, state, out, ckpt)
+            run_neardup_dedup_stream(stream, state, ckpt)
         return time.perf_counter() - t0
 
     # Warm the streaming machinery (micro-batch planner, file-source
@@ -258,42 +260,34 @@ def main() -> None:
     bootstrap_sec = drain()
 
     if args.ladder is not None:
-        from european_emissions_data_warehouse_spark.operators.maintenance import (
-            compact_batch_store,
-        )
+        corpus = SnapshotTable(spark, state)
 
-        def store_partition_count() -> int:
-            return sum(
-                1 for d in os.listdir(state) if d.startswith("batch_id=")
-            )
+        def data_dir_count() -> int:
+            return len(corpus._dirs(corpus.latest_version()))
 
         walls: list[float] = []
-        store_parts: list[int] = []
+        data_dirs: list[int] = []
         compact_rec = None
         for t in range(args.ladder):
             land(f"{ladder_split}/trig={t}", f"l{t}")
             walls.append(round(drain(), 3))
-            store_parts.append(store_partition_count())
+            data_dirs.append(data_dir_count())
             if (t + 1) % 50 == 0:
                 print(
                     f"ladder {t + 1}/{args.ladder}: wall {walls[-1]}s, "
-                    f"store partitions {store_parts[-1]}",
+                    f"data dirs {data_dirs[-1]}",
                     file=sys.stderr, flush=True,
                 )
             if args.compact_at is not None and t == args.compact_at:
-                newest = max(
-                    int(d.split("=", 1)[1])
-                    for d in os.listdir(state)
-                    if d.startswith("batch_id=")
-                )
+                dirs_before = data_dir_count()
                 t0 = time.perf_counter()
-                res = compact_batch_store(
-                    spark, state, upto_batch_id=newest - 1
-                )
+                version = corpus.optimize()
                 compact_rec = {
                     "at": t,
                     "sec": round(time.perf_counter() - t0, 3),
-                    **res,
+                    "dirs_before": dirs_before,
+                    "dirs_after": data_dir_count(),
+                    "version": version,
                 }
                 print(f"compact @{t}: {compact_rec}", file=sys.stderr,
                       flush=True)
@@ -305,9 +299,9 @@ def main() -> None:
             "probe_rows": args.ladder_probe,
             "bootstrap_sec": round(bootstrap_sec, 3),
             "walls": walls,
-            "store_partitions": store_parts,
+            "data_dirs": data_dirs,
             "compact": compact_rec,
-            "state_rows": spark.read.parquet(state).count(),
+            "state_rows": corpus.read().count(),
         }))
         spark.stop()
         return
@@ -317,14 +311,7 @@ def main() -> None:
         land(src_path, f"p{i}")
         probe_secs.append(round(drain(), 3))
 
-    if args.arm == "neardup":
-        state_rows = spark.read.parquet(state).count()
-    else:
-        from european_emissions_data_warehouse_spark.operators.snapshots import (
-            SnapshotTable,
-        )
-
-        state_rows = SnapshotTable(spark, state).read().count()
+    state_rows = SnapshotTable(spark, state).read().count()
 
     print(json.dumps({
         "arm": args.arm,
