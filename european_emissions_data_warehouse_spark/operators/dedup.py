@@ -24,9 +24,10 @@ sketch-based variants and full oracle checks for exact/ngram.
 
 from __future__ import annotations
 
+import json
 from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DataType,
@@ -57,11 +58,11 @@ def dedup_exact(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     """Exact dedup: one row per distinct text, keeping the smallest id.
 
     Output: (keep_id, n_copies).  Groups on the 128-bit :func:`content_keys`
-    identity so the shuffle moves 16-byte keys instead of document bodies
-    (VERDICT r2 item #2 — previously a full-text groupBy).  Equality within
-    hash groups is re-verified with the cheapest necessary condition that
-    survives aggregation — min/max text length must agree — and any
-    violation fails the job loudly rather than merging distinct texts.
+    identity so the shuffle moves 16-byte keys instead of document bodies,
+    not a full-text groupBy.  Equality within hash groups is re-verified
+    with the cheapest necessary condition that survives aggregation —
+    min/max text length must agree — and any violation fails the job
+    loudly rather than merging distinct texts.
     """
     h1, h2 = content_keys(F.col(text_col))
     keyed = docs.select(
@@ -70,10 +71,10 @@ def dedup_exact(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
         # -1 sentinel for NULL text (no real length is negative): the bare
         # length() made _lmin/_lmax NULL, NULL == NULL is NULL, and the
         # when() fell into raise_error — one NULL-text doc aborted the
-        # whole corpus dedup claiming a hash collision that never happened
-        # (code-review r4, final pass).  xxhash64 hashes all NULL texts to
-        # one group (the seed), so they dedup together — NULL content is
-        # one identity, distinct from '' (different hash, length 0 vs -1).
+        # whole corpus dedup claiming a hash collision that never happened.
+        # xxhash64 hashes all NULL texts to one group (the seed), so they
+        # dedup together — NULL content is one identity, distinct from ''
+        # (different hash, length 0 vs -1).
         F.coalesce(F.length(F.col(text_col)), F.lit(-1)).alias("_len"),
         F.col(id_col).cast("long").alias("_id"),
     )
@@ -107,30 +108,34 @@ def _split_tokens(text_col, unit: str):
     # \t/\n injected phantom ''-token grams and changed the shingle set —
     # two docs differing only by a trailing newline failed to pair as
     # duplicates; matches functions/text.ws_tokens and every oracle's
-    # list_filter convention (code-review r4).  array_remove, not a lambda
-    # HOF (interpreted) and not an edge-strip regexp (double-evaluated):
+    # list_filter convention.  array_remove, not a lambda HOF
+    # (interpreted) and not an edge-strip regexp (double-evaluated):
     # bench-measured fastest of the element-identical forms.
     if unit == "word":
         return F.array_remove(F.split(F.trim(text_col), r"\s+"), "")
     return F.split(text_col, "")
 
 
-def _rolling_grams(docs: DataFrame, id_col: str, text_col: str, k: int, unit: str) -> DataFrame:
+def _rolling_grams(
+    docs: DataFrame, id_col: str | Column, text_col: str, k: int, unit: str
+) -> DataFrame:
     """(id, n_toks, hs array<long>) — one 31-bit gram per k-gram position,
-    as an in-row array (narrow, no shuffle).  ``n_toks`` is the token count
-    (0 for empty/whitespace/NULL text) — token-less docs still carry the
-    content-free [0]-fold in ``hs``, so consumers that must not pair them
-    filter ``n_toks > 0`` (the gram VALUE can't distinguish them: a real
-    doc may legitimately fold to 0).  For operators that *aggregate* the
-    array in place (MinHash's array_min) — never explode this array: Spark
-    evaluates an interpreted higher-order-function child once per generated
-    row, turning explode(transform(...)) into O(n²) work.  Exploding
-    consumers use :func:`shingle_index`'s window form instead."""
+    as an in-row array (narrow, no shuffle).  ``id_col`` is a column name
+    or a Column: :func:`_with_minhash_sig` passes the struct of all the
+    documents' columns, so they ride along in the row.  ``n_toks`` is the
+    token count (0 for empty/whitespace/NULL text) — token-less docs still
+    carry the content-free [0]-fold in ``hs``, so consumers that must not
+    pair them filter ``n_toks > 0`` (the gram VALUE can't distinguish them:
+    a real doc may legitimately fold to 0).  For operators that *aggregate*
+    the array in place (MinHash's array_min) — never explode this array:
+    Spark evaluates an interpreted higher-order-function child once per
+    generated row, turning explode(transform(...)) into O(n²) work.
+    Exploding consumers use :func:`shingle_index`'s window form instead."""
     # Token hashes materialized in their own projection: inlining the
     # transform into every element_at reference below would re-evaluate it
     # per reference (no CSE in interpreted HOF eval).
     hashed = docs.select(
-        F.col(id_col).alias("id"),
+        (F.col(id_col) if isinstance(id_col, str) else id_col).alias("id"),
         F.transform(_split_tokens(F.col(text_col), unit), lambda t: _fold31(F.xxhash64(t))).alias("th"),
     )
     th = F.col("th")
@@ -140,9 +145,9 @@ def _rolling_grams(docs: DataFrame, id_col: str, text_col: str, k: int, unit: st
         # try_element_at, NOT element_at: under Spark 4's default ANSI mode
         # element_at past the array end ABORTS the job, so any doc shorter
         # than k tokens killed the whole MinHash family (tests passed only
-        # because no fixture doc is that short; code-review r4).  Null pads
-        # fold to 0 — the same convention shingle_index's window form uses
-        # for leads past the end, so both gram forms agree on short docs.
+        # because no fixture doc is that short).  Null pads fold to 0 — the
+        # same convention shingle_index's window form uses for leads past
+        # the end, so both gram forms agree on short docs.
         acc = F.coalesce(F.try_element_at(th, i), F.lit(0))
         for j in range(1, k):
             nxt = F.coalesce(F.try_element_at(th, i + F.lit(j)), F.lit(0))
@@ -173,15 +178,14 @@ def shingle_index(
     ``groupBy(id).collect_set`` on the window's own partitioning, then
     explode the set — not ``distinct()`` + count-over-window, whose
     count window re-SORTED the whole distinct gram stream by id after the
-    distinct aggregate destroyed the window's sort order (r9 optimization:
-    Sort+Window -> Generate, ~7% off every consumer of the index; the
-    r9 in-row explode(transform) alternative re-measured 86x SLOWER —
-    interpreted-HOF generator children are evaluated per OUTPUT row).
+    distinct aggregate destroyed the window's sort order (Sort+Window ->
+    Generate, ~7% off every consumer of the index; the in-row
+    explode(transform) alternative measured 86x SLOWER — interpreted-HOF
+    generator children are evaluated per OUTPUT row).
 
-    Memory bound (VERDICT r9 item #4): the ``collect_set`` buffer holds
-    ONE document's distinct shingles on the task heap (~40 B per boxed
-    long), i.e. ~40 MB per million distinct shingles — not spillable,
-    unlike the old sort.  This is NOT a new ceiling: every text path in
+    Memory bound: the ``collect_set`` buffer holds ONE document's distinct
+    shingles on the task heap (~40 B per boxed long), i.e. ~40 MB per
+    million distinct shingles — not spillable, unlike the old sort.  This is NOT a new ceiling: every text path in
     the engine already materializes per-document token arrays in one row
     (``_rolling_grams``' hash array, chunk_dedup's ``_toks``, the window
     itself buffers one doc's token partition), so a document must fit in
@@ -198,7 +202,7 @@ def shingle_index(
         spread_small_scan,
     )
 
-    # Spread the DOC rows before exploding (r9): the gram windows need
+    # Spread the DOC rows before exploding: the gram windows need
     # hashpartitioning(id) anyway, so repartitioning the (id, text) rows on
     # id when the source is under-split (a) runs tokenize+hash at full
     # parallelism instead of at the scan's 1-2 splits, and (b) moves the
@@ -350,7 +354,7 @@ def contamination_overlap(
     corpus-proportional eval slice (q_decontaminate's %7 stand-in) would
     have hard-failed an explicit hint on the 8 GB broadcast ceiling at
     100 TB; the planner falls back to a shuffle join keyed on the 8-byte
-    gram there instead (code-review r4, scale pass).
+    gram there instead.
     """
     ti = shingle_index(train, id_col, text_col, k, unit)
     eval_grams = (
@@ -395,9 +399,9 @@ def contamination_overlap_partitioned(
     shingles the corpus twice — each side reads every row group and
     filters — where one build suffices: :func:`shingle_index` is a
     per-document operator, so filtering its OUTPUT by id is row-identical
-    to filtering its input (r9 optimization, guide §1.2: one corpus
-    scan/tokenize/window pass instead of two).  The index is materialized
-    once (lazy localCheckpoint) and both sides filter the checkpoint.
+    to filtering its input (one corpus scan/tokenize/window pass instead
+    of two).  The index is materialized once (lazy localCheckpoint) and
+    both sides filter the checkpoint.
 
     ``eval_pred`` is evaluated against the INDEX, whose id column is
     always named ``id`` (the caller's ``id_col`` is renamed by
@@ -408,7 +412,7 @@ def contamination_overlap_partitioned(
     ``F.col("doc_id")`` against a ``doc_id`` corpus got an
     AnalysisException, and a Column over any other index column
     (n_shingles/shingle) would be accepted but select gram-level rows,
-    not a doc partition at all (ADVICE r9)."""
+    not a doc partition at all."""
     if callable(eval_pred):
         eval_pred = eval_pred(F.col("id"))
     idx = shingle_index(docs, id_col, text_col, k, unit).localCheckpoint(eager=False)
@@ -641,21 +645,28 @@ def minhash_signatures(
         .filter(F.col("n_toks") > 0)
         .drop("n_toks")
     )
-    # One flat transform per slot with literal constants (odd multiplier ->
-    # bijection mod 2^31; int literals times long grams stay long and below
-    # 2^62 under ANSI), built as ONE SQL string the JVM parses: a Column
-    # tree costs a py4j round trip per operator and literal.  A single
-    # nested-lambda form is ~4x slower per row (nested HOF eval overhead).
-    # The & 2^31-1 reduction is load-bearing: without it a*h+b is monotone
-    # in h, every slot's argmin is the same gram, and the signature
-    # degenerates to one bottom-1 sketch replicated num_hashes times.
+    return sh.select("id", _minhash_slots(num_hashes).alias("sig"))
+
+
+def _minhash_slots(num_hashes: int):
+    """The signature over the gram array column ``hs``: slot i is the
+    ``array_min`` of the i-th universal hash (a_i*h + b_i) & (2^31-1).
+
+    One flat transform per slot with literal constants (odd multiplier ->
+    bijection mod 2^31; int literals times long grams stay long and below
+    2^62 under ANSI), built as ONE SQL string the JVM parses: a Column
+    tree costs a py4j round trip per operator and literal.  A single
+    nested-lambda form is ~4x slower per row (nested HOF eval overhead).
+    The & 2^31-1 reduction is load-bearing: without it a*h+b is monotone
+    in h, every slot's argmin is the same gram, and the signature
+    degenerates to one bottom-1 sketch replicated num_hashes times."""
+
     def slot(i: int) -> str:
         a = ((2 * i + 1) * 0x9E3779B9) & _MASK | 1
         b = (i * 0x85EBCA6B) & _MASK
         return f"array_min(transform(hs, h -> (h * {a} + {b}) & {_MASK}))"
 
-    sig = F.expr(f"array({', '.join(slot(i) for i in range(num_hashes))})")
-    return sh.select("id", sig.alias("sig"))
+    return F.expr(f"array({', '.join(slot(i) for i in range(num_hashes))})")
 
 
 def minhash_lsh_pairs(
@@ -719,10 +730,10 @@ def simhash(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     Tokens are Unicode word runs (``[\\p{L}\\p{N}]+``), not ASCII
     ``[a-z0-9]+`` — the ASCII class silently emitted ZERO tokens for pure
     CJK/Cyrillic/Greek documents, so whole language slices vanished from
-    the fingerprint output and were exempt from near-dup detection
-    (code-review r4).  Every input doc gets exactly one output row: docs
-    with no tokens at all (pure punctuation) carry fingerprint 0 rather
-    than disappearing, matching chunk_dedup's conservation contract."""
+    the fingerprint output and were exempt from near-dup detection.  Every
+    input doc gets exactly one output row: docs with no tokens at all (pure
+    punctuation) carry fingerprint 0 rather than disappearing, matching
+    chunk_dedup's conservation contract."""
     ids = docs.select(F.col(id_col).alias("id"))
     toks = docs.select(
         F.col(id_col).alias("id"),
@@ -850,11 +861,10 @@ def chunk_dedup(
         F.col(id_col).cast("long").alias("_id"),
         # non-empty tokens, matching _split_tokens/ws_tokens: phantom ''
         # entries from edge whitespace would enter chunks and the
-        # reassembled text (code-review r4).  NULL text coalesces to the
-        # empty token array: a NULL _toks otherwise produced no chunk rows
-        # and the inner verdict join ERASED the document, breaking the
-        # every-doc-one-row conservation contract (code-review r4, final
-        # pass).
+        # reassembled text.  NULL text coalesces to the empty token array:
+        # a NULL _toks otherwise produced no chunk rows and the inner
+        # verdict join ERASED the document, breaking the every-doc-one-row
+        # conservation contract.
         F.coalesce(
             _split_tokens(F.col(text_col), "word"),
             F.array().cast("array<string>"),
@@ -865,8 +875,8 @@ def chunk_dedup(
         # greatest(ceil, 1): a token-less doc is ONE empty chunk, kept at
         # its global first occurrence — without the floor, sequence(0, -1)
         # DESCENDS ([0, -1]) and fabricated TWO phantom chunks per empty
-        # doc, corrupting n_chunks/n_kept (code-review r4, final pass;
-        # oracle mirrors GREATEST(..., 1))
+        # doc, corrupting n_chunks/n_kept (the oracle mirrors
+        # GREATEST(..., 1))
         F.posexplode(
             F.expr(
                 f"transform(sequence(0, greatest(int(ceil(size(_toks) / {w}.0)), 1) - 1),"
@@ -924,8 +934,9 @@ def chunk_dedup(
 
 def _band_from_sigs(sigs: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     """(id, sig) -> (id, sig, band, bucket): the banding step, shared by
-    minhash_lsh_pairs, the persisted store and the near-dup stream, so the
-    bucket hash can never drift between the full and incremental paths.
+    minhash_lsh_pairs and the incremental probe (:func:`_minhash_probe`),
+    so the bucket hash can never drift between the full and incremental
+    paths.
 
     ``bands`` must divide ``num_hashes`` exactly: slicing b bands of
     r = num_hashes//bands rows silently DISCARDED the trailing
@@ -933,12 +944,7 @@ def _band_from_sigs(sigs: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     below the 1-(1-j^r)^b tuning math, and a store built under one
     remainder convention would not protect against a probe built under
     another (same guard as lsh_topk)."""
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"bands={bands} must divide num_hashes={num_hashes}: the "
-            f"trailing {num_hashes % bands} signature slots would be "
-            "silently dropped from every band bucket"
-        )
+    _check_bands(num_hashes, bands)
     r = num_hashes // bands
     return sigs.select(
         "id",
@@ -957,6 +963,15 @@ def _band_from_sigs(sigs: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     ).select("id", "sig", "bb.band", "bb.bucket")
 
 
+def _check_bands(num_hashes: int, bands: int) -> None:
+    if num_hashes % bands != 0:
+        raise ValueError(
+            f"bands={bands} must divide num_hashes={num_hashes}: the "
+            f"trailing {num_hashes % bands} signature slots would be "
+            "silently dropped from every band bucket"
+        )
+
+
 def _sig_estimate(num_hashes: int):
     """Signature Jaccard estimate over paired sig_a/sig_b columns: fraction
     of equal minhash slots.  THE single implementation — the full-batch
@@ -968,55 +983,58 @@ def _sig_estimate(num_hashes: int):
     ) / F.lit(num_hashes)
 
 
-_MINHASH_PARAMS_FILE = "_minhash_params"
+# --- Incremental MinHash store ---------------------------------------------
+# One layout, written by minhash_store_init / minhash_dedup_incremental and
+# by streaming/ingest.run_neardup_dedup_stream: a SnapshotTable of the
+# surviving documents' columns plus ``minhash_sig`` (NULL for token-less
+# docs), with the MinHash parameters as ``minhash`` in every commit's meta.
+# The band keys are derived from the signature at probe time, never stored.
+
+_SIG = "minhash_sig"
 
 
-def _write_minhash_params(
-    spark, store_path: str, k: int, unit: str, num_hashes: int, bands: int
-) -> None:
-    """Record the store's MinHash convention next to its band rows (an
-    underscore-prefixed file, invisible to parquet readers).  A store
-    probed under a different k/unit/num_hashes/bands convention computes
-    different gram identities or bucket hashes and silently detects NO
-    duplicates — the exact failure class _band_from_sigs' divisibility
-    guard exists to prevent."""
-    from european_emissions_data_warehouse_spark.operators.snapshots import (
-        write_small_text,
-    )
-
-    write_small_text(
-        spark,
-        f"{store_path.rstrip('/')}/{_MINHASH_PARAMS_FILE}",
-        f"k={k}\nunit={unit}\nnum_hashes={num_hashes}\nbands={bands}",
-    )
+def _minhash_meta(k: int, unit: str, num_hashes: int, bands: int) -> str:
+    """The parameters a store records as its ``minhash`` commit meta;
+    refuses a ``bands`` that does not divide ``num_hashes`` before any
+    store is written or probed."""
+    _check_bands(num_hashes, bands)
+    return json.dumps({"k": k, "unit": unit, "num_hashes": num_hashes, "bands": bands})
 
 
-def _read_minhash_params(spark, store_path: str) -> dict[str, str] | None:
-    """The store's recorded convention, or None for a legacy store."""
-    from european_emissions_data_warehouse_spark.operators.snapshots import read_small_text
-
-    text = read_small_text(spark, f"{store_path.rstrip('/')}/{_MINHASH_PARAMS_FILE}")
-    if text is None:
-        return None
-    return dict(ln.split("=", 1) for ln in text.strip().splitlines() if "=" in ln)
-
-
-def _minhash_band_table(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int,
-    unit: str,
-    num_hashes: int,
-    bands: int,
+def _with_minhash_sig(
+    docs: DataFrame, id_col: str, text_col: str, k: int, unit: str, num_hashes: int
 ) -> DataFrame:
-    """(id, sig, band, bucket) — the banded LSH table minhash_lsh_pairs
-    builds inline, factored out so an incremental dedup can persist it."""
-    return _band_from_sigs(
-        minhash_signatures(docs, id_col, text_col, k, unit, num_hashes),
-        num_hashes,
-        bands,
+    """``docs``' columns plus ``minhash_sig``, computed in the row: the
+    columns ride through :func:`_rolling_grams` as one struct, so the
+    documents are scanned once and never joined back to their signatures.
+    Slots match :func:`minhash_signatures`; a token-less doc keeps its row
+    with a NULL signature, which the probe never pairs.  Under-split input
+    is spread first, as minhash_signatures does."""
+    from european_emissions_data_warehouse_spark.sources.readers import (
+        spread_small_scan,
     )
+
+    grams = _rolling_grams(
+        spread_small_scan(docs, id_col), F.struct(*docs.columns), text_col, k, unit
+    )
+    sig = F.when(F.col("n_toks") > 0, _minhash_slots(num_hashes))
+    return grams.select("id.*", sig.alias(_SIG))
+
+
+def _check_minhash_meta(table, meta: str, history: list[int] | None = None) -> None:
+    """Refuse a store whose newest recorded MinHash parameters are not
+    ``meta``: probed under another k/unit/num_hashes/bands, its gram
+    identities or bucket hashes differ and the bucket join silently
+    detects no duplicates (a num_hashes mismatch also null-pads zip_with,
+    corrupting est_jaccard).  A store that records none passes.
+    ``history``: optional pre-listed history, as in SnapshotTable."""
+    recorded = table._newest_meta("minhash", history)
+    if recorded is not None and recorded != meta:
+        raise ValueError(
+            f"MinHash store {table.path} was built with {recorded}, probed "
+            f"with mismatched {meta} — the bucket join would silently "
+            "detect no duplicates"
+        )
 
 
 def minhash_store_init(
@@ -1029,32 +1047,48 @@ def minhash_store_init(
     num_hashes: int = 32,
     bands: int = 8,
 ) -> None:
-    """Materialize the corpus's banded MinHash table to parquet — the
-    standing state incremental dedup joins new batches against.  The
-    build convention is recorded alongside (see _write_minhash_params) so
-    a mismatched probe fails loudly instead of silently missing every
-    duplicate."""
-    _minhash_band_table(docs, id_col, text_col, k, unit, num_hashes, bands).write.mode(
-        "overwrite"
-    ).parquet(store_path)
-    _write_minhash_params(docs.sparkSession, store_path, k, unit, num_hashes, bands)
+    """Commit ``docs`` with their signatures as the next version of the
+    MinHash store at ``store_path`` (the layout above), the standing state
+    incremental dedup probes.  Every doc enters as given; the parameters
+    are recorded so a mismatched probe fails loudly instead of silently
+    missing every duplicate."""
+    from european_emissions_data_warehouse_spark.operators.snapshots import SnapshotTable
+
+    SnapshotTable(docs.sparkSession, store_path).commit(
+        _with_minhash_sig(docs, id_col, text_col, k, unit, num_hashes),
+        meta={"minhash": _minhash_meta(k, unit, num_hashes, bands)},
+    )
 
 
 def _minhash_probe(
-    new_b: DataFrame, old_b: DataFrame | None, num_hashes: int, threshold: float
+    batch: DataFrame,
+    store: DataFrame | None,
+    id_col: str,
+    num_hashes: int,
+    bands: int,
+    threshold: float,
 ) -> DataFrame:
-    """(new_id, dup_of, est_jaccard): every doc of the band table ``new_b``
-    whose signature estimate clears ``threshold`` against a doc of
-    ``old_b`` (dup_of = the old id) or against an earlier-id doc of
-    ``new_b`` itself (intra-batch dedup, first-id-wins like dedup_exact).  Both are (id, sig, band, bucket) tables from
-    _band_from_sigs, so the old side is touched only through (band, bucket)
-    equality joins; ``old_b`` None (no standing corpus) leaves the
-    intra-batch pairs.  THE probe of minhash_dedup_incremental and
-    streaming/ingest.run_neardup_dedup_stream.
+    """(new_id, dup_of, est_jaccard): every doc of ``batch`` whose
+    signature estimate clears ``threshold`` against a doc of ``store``
+    (dup_of = the stored id) or against an earlier-id doc of ``batch``
+    itself (intra-batch dedup, first-id-wins like dedup_exact).  Both
+    frames carry ``id_col`` and ``minhash_sig``; each side's band keys come
+    from :func:`_band_from_sigs` here, so the store is touched only through
+    (band, bucket) equality joins.  ``store`` None (no standing corpus)
+    leaves the intra-batch pairs.  THE probe of minhash_dedup_incremental
+    and streaming/ingest.run_neardup_dedup_stream.
 
     A doc is never a duplicate of ITSELF: a doc whose id already sits in
-    ``old_b`` (a re-delivered document) does not match its own stored
+    ``store`` (a re-delivered document) does not match its own stored
     copy at est_jaccard 1.0, which would drop it from the corpus."""
+
+    def banded(docs: DataFrame) -> DataFrame:
+        sigs = docs.filter(F.col(_SIG).isNotNull()).select(
+            F.col(id_col).alias("id"), F.col(_SIG).alias("sig")
+        )
+        return _band_from_sigs(sigs, num_hashes, bands)
+
+    new_b = banded(batch)
     n = new_b.select(
         F.col("id").alias("id_b"), F.col("sig").alias("sig_b"), "band", "bucket"
     )
@@ -1071,8 +1105,8 @@ def _minhash_probe(
         )
 
     pairs = pairs_with(new_b, F.col("id_a") < F.col("id_b"))
-    if old_b is not None:
-        pairs = pairs_with(old_b, F.col("id_a") != F.col("id_b")).unionByName(pairs)
+    if store is not None:
+        pairs = pairs_with(banded(store), F.col("id_a") != F.col("id_b")).unionByName(pairs)
     return (
         pairs.withColumn("est_jaccard", _sig_estimate(num_hashes))
         .filter(F.col("est_jaccard") >= threshold)
@@ -1082,6 +1116,13 @@ def _minhash_probe(
             "est_jaccard",
         )
     )
+
+
+def _minhash_survivors(batch: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
+    """``batch`` minus every doc :func:`_minhash_probe` paired as a
+    duplicate, in ``batch``'s column order (the store's schema)."""
+    dups = pairs.select(F.col("new_id").alias("_dup")).distinct()
+    return batch.join(dups, F.col(id_col) == F.col("_dup"), "left_anti")
 
 
 def minhash_dedup_incremental(
@@ -1101,72 +1142,44 @@ def minhash_dedup_incremental(
     daily: full-batch LSH is O((old+new)·bands) candidate work per run and
     repeats all old-vs-old pairs forever; this touches the store only
     through bucket-equality joins keyed on (band, bucket), so per-batch
-    cost is O(new·bands + matching buckets).
+    cost is O(new·bands + one store scan + matching buckets).
 
     Returns (new_id, dup_of, est_jaccard) from :func:`_minhash_probe`: every
-    new doc whose signature estimate clears ``threshold`` against an
-    existing doc (dup_of = the stored id) or an earlier-id doc within the
-    same batch.  With ``update_store``, the SURVIVING new docs' band rows
-    append to the store so the next batch sees them — duplicates never
-    enter the store, keeping it one row per retained doc per band.
-    Exactly the pair set the full-batch ``minhash_lsh_pairs`` would emit
-    for pairs touching the new batch (asserted by test), because
-    signatures and banding hash identically.
+    new doc whose signature estimate clears ``threshold`` against the
+    store's newest version (dup_of = the stored id) or an earlier-id doc
+    within the same batch.  With ``update_store``, the SURVIVING new docs
+    are appended to the store so the next batch sees them — duplicates
+    never enter it, keeping one row per retained doc.  Exactly the pair set
+    the full-batch ``minhash_lsh_pairs`` would emit for pairs touching the
+    new batch (asserted by test), because signatures and banding hash
+    identically.  A store with no commits yet probes the batch against
+    itself only.
 
-    The ``update_store`` append is NOT crash-replay idempotent: re-running
-    a batch that already appended duplicates its band rows (downstream
-    ``.distinct()`` keeps answers right, but the store grows and bucket
-    joins fan out).  A stream needs a ledger instead:
-    streaming/ingest.run_neardup_dedup_stream keeps its corpus in a
-    SnapshotTable whose commit log skips replayed batches."""
-    spark = new_docs.sparkSession
-    # convention check BEFORE any join: a store built under different
-    # k/unit/num_hashes/bands computes different gram identities or bucket
-    # hashes, so a mismatched probe silently admits every cross-batch
-    # duplicate (and null-padded zip_with corrupts est_jaccard on a
-    # num_hashes mismatch).  Recorded params fail loudly; a legacy store
-    # without them falls back to a row-level signature-width guard.
-    stored = _read_minhash_params(spark, store_path)
-    if stored is not None:
-        declared = {"k": k, "unit": unit, "num_hashes": num_hashes, "bands": bands}
-        mismatched = {
-            key: (stored.get(key), val)
-            for key, val in declared.items()
-            if stored.get(key) is not None and str(val) != stored[key]
-        }
-        if mismatched:
-            raise ValueError(
-                f"minhash_dedup_incremental: store {store_path} was built "
-                f"with {stored}, probed with mismatched "
-                f"{ {key: v[1] for key, v in mismatched.items()} } — the "
-                "bucket join would silently detect no duplicates"
-            )
-    new_b = _minhash_band_table(
-        new_docs, id_col, text_col, k, unit, num_hashes, bands
-    ).localCheckpoint(eager=True)
-    old_b = spark.read.parquet(store_path)
-    if stored is None:
-        old_b = old_b.withColumn(
-            "sig",
-            F.when(F.size("sig") == num_hashes, F.col("sig")).otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit("minhash_dedup_incremental: stored signature width "),
-                        F.size("sig").cast("string"),
-                        F.lit(
-                            f" != probe num_hashes={num_hashes} — the store was "
-                            "built under a different convention"
-                        ),
-                    )
-                )
-            ),
-        )
+    The append is pinned to the version probed, so a commit landing in
+    between raises ConcurrentCommitError, and it must match the store's
+    schema.  It is NOT crash-replay idempotent: re-running a batch that
+    already appended adds its docs again, since a doc never pairs with its
+    own stored copy.  A stream needs a ledger instead:
+    streaming/ingest.run_neardup_dedup_stream writes the same store and
+    its commit log skips replayed batches."""
+    from european_emissions_data_warehouse_spark.operators.snapshots import SnapshotTable
+
+    table = SnapshotTable(new_docs.sparkSession, store_path)
+    hist = table.history()
+    meta = _minhash_meta(k, unit, num_hashes, bands)
+    _check_minhash_meta(table, meta, hist)
+    base = hist[-1] if hist else -1
+    batch = _with_minhash_sig(new_docs, id_col, text_col, k, unit, num_hashes)
+    batch = batch.localCheckpoint(eager=True)
+    store = table.read(base) if hist else None
     # the caller and the store update below both read the pairs
-    pairs = _minhash_probe(new_b, old_b, num_hashes, threshold).localCheckpoint(
-        eager=True
-    )
+    pairs = _minhash_probe(batch, store, id_col, num_hashes, bands, threshold)
+    pairs = pairs.localCheckpoint(eager=True)
     if update_store:
-        dup_ids = pairs.select(F.col("new_id").alias("id")).distinct()
-        survivors = new_b.join(dup_ids, "id", "left_anti")
-        survivors.write.mode("append").parquet(store_path)
+        table.commit(
+            _minhash_survivors(batch, pairs, id_col),
+            meta={"minhash": meta},
+            expected_base=base,
+            append=True,
+        )
     return pairs

@@ -285,48 +285,32 @@ class SnapshotTable:
             raise
         return version
 
-    def applied_batch_ids(self, gen: str | None = None) -> set[int]:
-        """batch_id values recorded by streaming commits, across the whole
-        history (one tiny driver-side manifest read per version).
-
-        ``gen``: a checkpoint-generation id (the streaming query id Spark
-        pins in the checkpoint's metadata file).  Micro-batch ids are only
-        meaningful WITHIN one checkpoint — a fresh checkpoint restarts at
-        batch 0 with a possibly different file chop, so skipping its
-        batches against another generation's ledger silently drops data.
-        When given, only commits stamped with the same
-        ``ckpt_gen`` count as applied; commits WITHOUT a stamp never match
-        a concrete generation — treating them as wildcards made a fresh
-        checkpoint over an unstamped table silently skip its first batches
-        (data loss); not matching merely re-merges, which the ledgered
-        streams are content-idempotent against (the CMS stream, which is
-        not, refuses unstamped tables at the guard instead)."""
-        out = set()
-        for v in self.history():
-            meta = self.commit_meta(v)
-            b = meta.get("batch_id")
-            if b is None:
-                continue
-            if gen is not None and meta.get("ckpt_gen") != gen:
-                continue
-            out.add(int(b))
-        return out
-
     def last_applied_batch(
         self, gen: str | None = None, history: list[int] | None = None
     ) -> int | None:
         """The NEWEST batch_id committed for ``gen`` (None if none) — the
         O(recent-commits) replay probe for streaming ingest.  Micro-batch
         ids are monotonic within a checkpoint generation, so ``batch_id <=
-        last_applied_batch(gen)`` is equivalent to membership in
-        ``applied_batch_ids(gen)`` while reading manifests newest-first and
-        stopping at the first match, instead of O(full history) per batch
-        — at 10k micro-batches the full scan made every trigger do 10k
-        driver round-trips before any data work.  Same stamp rule as
-        applied_batch_ids: unstamped commits never match a concrete
-        generation.  ``history``: pass a pre-listed history to avoid
-        re-listing the commits dir (per-trigger callers list once and
-        thread it through)."""
+        last_applied_batch(gen)`` is equivalent to membership in the set of
+        the generation's committed batch ids while reading manifests
+        newest-first and stopping at the first match, instead of O(full
+        history) per batch — at 10k micro-batches the full scan made every
+        trigger do 10k driver round-trips before any data work.
+
+        ``gen``: a checkpoint-generation id (the streaming query id Spark
+        pins in the checkpoint's metadata file).  Micro-batch ids are only
+        meaningful WITHIN one checkpoint — a fresh checkpoint restarts at
+        batch 0 with a possibly different file chop, so skipping its
+        batches against another generation's ledger silently drops data.
+        When given, only commits stamped with the same ``ckpt_gen`` count;
+        commits WITHOUT a stamp never match a concrete generation —
+        treating them as wildcards made a fresh checkpoint over an
+        unstamped table silently skip its first batches (data loss); not
+        matching merely re-merges, which the ledgered streams are
+        content-idempotent against (the CMS stream, which is not, refuses
+        unstamped tables at the guard instead).  ``history``: pass a
+        pre-listed history to avoid re-listing the commits dir (per-trigger
+        callers list once and thread it through)."""
         for v in reversed(self.history() if history is None else history):
             meta = self.commit_meta(v)
             b = meta.get("batch_id")

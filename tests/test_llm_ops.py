@@ -89,17 +89,26 @@ def test_minhash_catches_ngram_pairs(spark, sf_dir):
     assert recall >= 0.7, f"minhash recall too low: {recall:.2f}"
 
 
-def test_minhash_banding_rejects_remainder(spark, sf_dir):
+def test_minhash_banding_rejects_remainder(spark, sf_dir, tmp_path):
     """bands must divide num_hashes: the band slicer silently dropped the
     trailing num_hashes %% bands signature slots from every bucket —
     recall quietly below the 1-(1-j^r)^b tuning math, and store/probe
-    could disagree on the remainder convention (code-review r4, second
-    pass; lsh_topk already had this guard, the MinHash paths did not)."""
+    could disagree on the remainder convention (lsh_topk has the same
+    guard).  A MinHash store refuses such parameters before it is
+    written."""
     import pytest
+
+    from european_emissions_data_warehouse_spark.operators.dedup import (
+        minhash_store_init,
+    )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").limit(10)
     with pytest.raises(ValueError, match="divide num_hashes"):
         minhash_lsh_pairs(docs, num_hashes=32, bands=5).collect()
+    store = tmp_path / "store"
+    with pytest.raises(ValueError, match="divide num_hashes"):
+        minhash_store_init(docs, str(store), num_hashes=32, bands=5)
+    assert not store.exists()
 
 
 def test_lsh_dim_mismatch_fails_loudly(spark, sf_dir):
@@ -728,11 +737,14 @@ def test_incremental_minhash_dedup_matches_full_batch(spark, sf_dir, tmp_path):
     """Splitting the corpus into old+new and deduping new against the store
     must find exactly the full-batch pair set restricted to pairs touching
     the new half (signatures and banding hash identically), and survivors
-    must enter the store while duplicates stay out."""
+    must enter the store, one row each, while duplicates stay out."""
     from european_emissions_data_warehouse_spark.operators.dedup import (
         minhash_dedup_incremental,
         minhash_lsh_pairs,
         minhash_store_init,
+    )
+    from european_emissions_data_warehouse_spark.operators.snapshots import (
+        SnapshotTable,
     )
 
     docs = load_table(spark, sf_dir, "documents")
@@ -740,7 +752,7 @@ def test_incremental_minhash_dedup_matches_full_batch(spark, sf_dir, tmp_path):
     new = docs.filter(F.col("doc_id") % 2 == 1)
     store = str(tmp_path / "store")
     minhash_store_init(old, store)
-    before = spark.read.parquet(store).count()
+    before = SnapshotTable(spark, store).read().count()
 
     inc = minhash_dedup_incremental(new, store)
     got = {(r["new_id"], r["dup_of"]) for r in inc.collect()}
@@ -756,10 +768,10 @@ def test_incremental_minhash_dedup_matches_full_batch(spark, sf_dir, tmp_path):
             want.add((a, b))   # a is new, b is old
     assert got == want and got, (len(got), len(want))
 
-    after = spark.read.parquet(store).count()
+    after = SnapshotTable(spark, store).read().count()
     n_new = new.count()
     n_dup_new = len({p[0] for p in got})
-    assert after - before == (n_new - n_dup_new) * 8  # bands=8 rows per survivor
+    assert after - before == n_new - n_dup_new  # one row per survivor
 
 
 def test_minhash_survives_docs_shorter_than_k(spark):
@@ -799,10 +811,11 @@ def test_minhash_survives_docs_shorter_than_k(spark):
 
 
 def test_minhash_signature_values_are_pinned(spark):
-    """Signatures are a fixed function of the text: stores written by
-    minhash_store_init are probed with freshly computed signatures, so any
-    drift in the signature expression (operator precedence, int vs long
-    literals under ANSI) would silently stop stored duplicates matching.
+    """Signatures are a fixed function of the text: the MinHash store keeps
+    each document's signature from the commit that wrote it and probes every
+    later batch with freshly computed ones, so any drift in the signature
+    expression (operator precedence, int vs long literals under ANSI) would
+    silently stop stored duplicates matching.
     Every slot is checked against a pure-Python evaluation of the
     (a_i, b_i) universal-hash family over the engine's own gram hashes,
     and a few slot values are pinned outright."""
@@ -833,9 +846,9 @@ def test_minhash_signature_values_are_pinned(spark):
 
 
 def test_incremental_minhash_rejects_mismatched_params(spark, sf_dir, tmp_path):
-    """Probing a store with a different num_hashes/bands convention must
-    fail loudly: mismatched bucket hashes silently match NOTHING, admitting
-    every cross-batch duplicate (code-review r4)."""
+    """Probing a store with a different num_hashes/k convention must fail
+    loudly: mismatched bucket hashes silently match NOTHING, admitting
+    every cross-batch duplicate."""
     from european_emissions_data_warehouse_spark.operators.dedup import (
         minhash_dedup_incremental,
         minhash_store_init,

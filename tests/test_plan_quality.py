@@ -595,7 +595,8 @@ def test_round8_incremental_store_probe_broadcasts_batch_not_store(
     spark, sf_dir, tmp_path, monkeypatch
 ):
     """The streaming decade's (SCALING.md round 8) structural claim: the
-    incremental MinHash probe touches the persisted LSH store through a
+    incremental MinHash probe touches the store (one row per document,
+    band keys derived from its ``minhash_sig`` column in the row) through a
     bucket-equality join that BROADCASTS the micro-batch's band table and
     STREAMS the store scan — the store is never shuffled per batch, so
     per-batch cost stays O(new x bands + one store scan), not O(store)
@@ -607,8 +608,8 @@ def test_round8_incremental_store_probe_broadcasts_batch_not_store(
     minhash_dedup_incremental eagerly localCheckpoints its result, which
     erases the plan — the test no-ops localCheckpoint (a materialization
     barrier, not a semantic node) to expose the REAL join the operator
-    builds (operators/dedup.py vs_old), rather than pinning a hand-mirrored
-    copy that could drift."""
+    builds (operators/dedup._minhash_probe), rather than pinning a
+    hand-mirrored copy that could drift."""
     from pyspark.sql import DataFrame
 
     from european_emissions_data_warehouse_spark.operators.dedup import (
@@ -644,8 +645,8 @@ def test_round8_incremental_store_probe_broadcasts_batch_not_store(
     # batch side (an ExistingRDD from the band build) may exchange, and
     # only as a BroadcastExchange
     lines = plan.splitlines()
-    # identify the store scan by its ReadSchema (only the persisted band
-    # table scans sig directly from parquet) — the Location path string is
+    # identify the store scan by its ReadSchema (only the store scans
+    # minhash_sig directly from parquet) — the Location path string is
     # unreliable here because toString truncates long field lists
     store_lines = [
         i for i, ln in enumerate(lines)

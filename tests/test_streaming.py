@@ -567,11 +567,11 @@ def test_sketch_stream_matches_batch_sketch(spark, sf_dir, tmp_path):
         for r in count_min_build(tokens, depth=3, width=256).collect()
     }
     assert streamed == batch
-    # crash-replay idempotence (ADVICE r3): restarting from the SAME
-    # checkpoint replays nothing new and commits nothing — the sketch is a
-    # sum, so a single double-merge would inflate every cell
+    # crash-replay idempotence: restarting from the SAME checkpoint replays
+    # nothing new and commits nothing — the sketch is a sum, so a single
+    # double-merge would inflate every cell
     versions_before = table.history()
-    assert table.applied_batch_ids() == {0, 1}
+    assert {int(table.commit_meta(v)["batch_id"]) for v in versions_before} == {0, 1}
     run_sketch_stream(
         stream_from_directory(spark, landing, schema, max_files_per_trigger=1),
         sketch_path,
@@ -708,6 +708,111 @@ def test_neardup_stream_replay_after_a_lost_checkpoint_commit(spark, sf_dir, tmp
     drain()
     assert t.history() == history
     assert sorted(map(tuple, t.read().drop("minhash_sig").collect())) == rows
+    shutil.rmtree(str(tmp_path), ignore_errors=True)
+
+
+def _drain_neardup(spark, landing, corpus, ck, **params):
+    from european_emissions_data_warehouse_spark.streaming.ingest import (
+        run_neardup_dedup_stream,
+    )
+
+    schema = spark.read.parquet(landing).schema
+    run_neardup_dedup_stream(
+        stream_from_directory(spark, landing, schema, max_files_per_trigger=1),
+        corpus, ck, **params,
+    )
+
+
+def test_neardup_stream_signs_its_batch_in_one_scan(spark, sf_dir, tmp_path, monkeypatch):
+    """The frame the near-dup stream checkpoints per batch (the batch's
+    columns plus its MinHash signature) reads the micro-batch once: the
+    signature is computed in the row, so its plan holds one scan of the
+    batch (foreachBatch hands it over as an RDD over the parquet file
+    source) and no join of the batch to its own signatures."""
+    try:
+        from pyspark.sql.classic.dataframe import DataFrame as Frame
+    except ImportError:
+        from pyspark.sql import DataFrame as Frame
+
+    landing, corpus, ck = (str(tmp_path / n) for n in ("landing", "corpus", "ckpt"))
+    spark.read.parquet(f"{sf_dir}/documents.parquet").coalesce(1).write.parquet(landing)
+    plans = []
+    checkpoint = Frame.localCheckpoint
+
+    def traced(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(Frame, "localCheckpoint", traced)
+    _drain_neardup(spark, landing, corpus, ck)
+    (plan,) = plans
+    assert plan.count("Scan ExistingRDD") + plan.count("FileScan parquet") == 1, plan
+    assert "Join" not in plan, plan
+    shutil.rmtree(str(tmp_path), ignore_errors=True)
+
+
+def test_neardup_stream_refuses_other_minhash_params(spark, sf_dir, tmp_path):
+    """A corpus built under one MinHash convention refuses a drain under
+    another before the query starts: probing it with other gram
+    identities or bucket hashes would silently detect no duplicates.  The
+    pending drop stays unread, and the history and rows are unchanged."""
+    from european_emissions_data_warehouse_spark.operators.snapshots import (
+        SnapshotTable,
+    )
+
+    landing, corpus, ck = (str(tmp_path / n) for n in ("landing", "corpus", "ckpt"))
+    docs = load_table(spark, sf_dir, "documents").limit(40).localCheckpoint()
+    docs.coalesce(1).write.parquet(landing)
+    _drain_neardup(spark, landing, corpus, ck)
+    t = SnapshotTable(spark, corpus)
+    history = t.history()
+    rows = sorted(map(tuple, t.read().drop("minhash_sig").collect()))
+
+    docs.withColumn("doc_id", F.col("doc_id") + 1000).coalesce(1).write.mode(
+        "append"
+    ).parquet(landing)
+    for params in ({"num_hashes": 64}, {"k": 7}):
+        with pytest.raises(ValueError, match="mismatched"):
+            _drain_neardup(spark, landing, corpus, ck, **params)
+    assert t.history() == history
+    assert sorted(map(tuple, t.read().drop("minhash_sig").collect())) == rows
+    shutil.rmtree(str(tmp_path), ignore_errors=True)
+
+
+def test_incremental_dedup_probes_the_stream_written_corpus(spark, sf_dir, tmp_path):
+    """The stream and minhash_dedup_incremental share one store: a corpus
+    written by run_neardup_dedup_stream is probed by
+    minhash_dedup_incremental with the pair set full-batch LSH gives for
+    pairs touching the new docs (whose other doc is new or was kept), and
+    the new survivors append to it, one row each."""
+    from european_emissions_data_warehouse_spark.operators.dedup import (
+        minhash_dedup_incremental,
+        minhash_lsh_pairs,
+    )
+    from european_emissions_data_warehouse_spark.operators.snapshots import (
+        SnapshotTable,
+    )
+
+    landing, corpus, ck = (str(tmp_path / n) for n in ("landing", "corpus", "ckpt"))
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.parquet(landing)
+    _drain_neardup(spark, landing, corpus, ck)
+    t = SnapshotTable(spark, corpus)
+    kept = {r.doc_id for r in t.read().select("doc_id").collect()}
+
+    new = docs.filter(F.col("doc_id") % 2 == 1)
+    got = {(r.new_id, r.dup_of) for r in minhash_dedup_incremental(new, corpus).collect()}
+    new_ids = {r.doc_id for r in new.select("doc_id").collect()}
+    want = set()
+    for r in minhash_lsh_pairs(docs).collect():
+        a, b = r.id_a, r.id_b
+        if b in new_ids and (a in new_ids or a in kept):
+            want.add((b, a))
+        elif a in new_ids and b in kept:
+            want.add((a, b))
+    assert got == want and got, (len(got), len(want))
+    n_dup_new = len({p[0] for p in got})
+    assert t.read().count() == len(kept) + len(new_ids) - n_dup_new
     shutil.rmtree(str(tmp_path), ignore_errors=True)
 
 
