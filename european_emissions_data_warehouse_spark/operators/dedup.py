@@ -669,6 +669,75 @@ def _minhash_slots(num_hashes: int):
     return F.expr(f"array({', '.join(slot(i) for i in range(num_hashes))})")
 
 
+# --- LSH candidates: MinHash, SimHash and similarity.lsh_topk ----------------
+
+
+def _band_from_sigs(df: DataFrame, cols: list[str], buckets: list[Column]) -> DataFrame:
+    """``df``'s ``cols`` plus (band, bucket), one row per band: band i's
+    bucket is ``buckets[i]``.  THE band explode of every LSH family:
+    minhash_lsh_pairs, both sides of :func:`_minhash_probe` and
+    similarity.lsh_topk band signature slices (:func:`_sig_buckets`), and
+    simhash_pairs bands fingerprint bit slices.  With one explode the full
+    and incremental MinHash paths can never band differently."""
+    bb = F.explode(
+        F.array(
+            *[F.struct(F.lit(i).alias("band"), b.alias("bucket")) for i, b in enumerate(buckets)]
+        )
+    )
+    return df.select(*cols, bb.alias("bb")).select(*cols, "bb.band", "bb.bucket")
+
+
+def _sig_buckets(num_hashes: int, bands: int) -> list[Column]:
+    """The bucket of each of ``bands`` bands over the array column ``sig``:
+    the hash of its r = num_hashes // bands slots.  ``bands`` must divide
+    ``num_hashes`` (:func:`_check_bands`)."""
+    _check_bands(num_hashes, bands)
+    r = num_hashes // bands
+    return [F.hash(F.slice("sig", i * r + 1, r)) for i in range(bands)]
+
+
+def _check_bands(num_hashes: int, bands: int) -> None:
+    """Refuse a ``bands`` that does not divide the signature length:
+    slicing b bands of r = num_hashes // bands slots would silently drop
+    the trailing slots, so candidate recall would fall below the
+    1-(1-j^r)^b tuning math, and a MinHash store and a probe could
+    disagree on the remainder convention."""
+    if num_hashes % bands != 0:
+        raise ValueError(
+            f"bands={bands} must divide num_hashes={num_hashes} (the signature "
+            f"length), which is not divisible by it: the trailing "
+            f"{num_hashes % bands} signature slots would be silently dropped "
+            "from every band bucket"
+        )
+
+
+def _bucket_join(a: DataFrame, b: DataFrame, keep: Column, cols: list) -> DataFrame:
+    """THE LSH candidate join: the rows of the banded sides ``a`` and ``b``
+    (their other columns aliased apart by the caller) that share a (band,
+    bucket) and satisfy ``keep``, projected to ``cols`` and deduplicated,
+    since a pair can collide in several bands."""
+    return a.join(b, ["band", "bucket"]).filter(keep).select(*cols).distinct()
+
+
+def _sig_side(banded: DataFrame, side: str) -> DataFrame:
+    """A banded (id, sig) frame as one side of a MinHash bucket join:
+    ``id_<side>``, ``sig_<side>``, band, bucket."""
+    return banded.select(
+        F.col("id").alias(f"id_{side}"), F.col("sig").alias(f"sig_{side}"), "band", "bucket"
+    )
+
+
+def _sig_verified(cand: DataFrame, num_hashes: int, threshold: float) -> DataFrame:
+    """``cand``'s sig_a/sig_b pairs with ``est_jaccard``, the fraction of
+    equal minhash slots, at or above ``threshold``.  THE verify step of
+    minhash_lsh_pairs and :func:`_minhash_probe`, so the full and
+    incremental paths estimate identically."""
+    est = F.size(
+        F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda eq: eq)
+    ) / F.lit(num_hashes)
+    return cand.withColumn("est_jaccard", est).filter(F.col("est_jaccard") >= threshold)
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -694,21 +763,14 @@ def minhash_lsh_pairs(
     sigs = minhash_signatures(
         docs, id_col, text_col, k, unit, num_hashes
     ).localCheckpoint(eager=False)
-    banded = _band_from_sigs(sigs, num_hashes, bands)
-    a = banded.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"), "band", "bucket")
-    b = banded.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"), "band", "bucket")
-    cand = (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "sig_a", "sig_b")
-        .distinct()
+    banded = _band_from_sigs(sigs, ["id", "sig"], _sig_buckets(num_hashes, bands))
+    cand = _bucket_join(
+        _sig_side(banded, "a"),
+        _sig_side(banded, "b"),
+        F.col("id_a") < F.col("id_b"),
+        ["id_a", "id_b", "sig_a", "sig_b"],
     )
-    est = _sig_estimate(num_hashes)
-    return (
-        cand.withColumn("est_jaccard", est)
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("id_a", "id_b", "est_jaccard")
-    )
+    return _sig_verified(cand, num_hashes, threshold).select("id_a", "id_b", "est_jaccard")
 
 
 # --- SimHash -----------------------------------------------------------------
@@ -791,30 +853,14 @@ def simhash_pairs(
     # materialized once: the band self-join would otherwise re-run the
     # token-explode + 63-bit-sum aggregate for each side
     fps = simhash(docs, id_col, text_col).localCheckpoint(eager=False)
-    banded = fps.select(
-        "id",
-        "fingerprint",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftright("fingerprint", i * width)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("bucket"),
-                    )
-                    for i in range(n_bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "fingerprint", "bb.band", "bb.bucket")
+    buckets = [
+        F.shiftright("fingerprint", i * width).bitwiseAND(F.lit(mask)) for i in range(n_bands)
+    ]
+    banded = _band_from_sigs(fps, ["id", "fingerprint"], buckets)
     a = banded.select(F.col("id").alias("id_a"), F.col("fingerprint").alias("fp_a"), "band", "bucket")
     b = banded.select(F.col("id").alias("id_b"), F.col("fingerprint").alias("fp_b"), "band", "bucket")
     return (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "fp_a", "fp_b")
-        .distinct()
+        _bucket_join(a, b, F.col("id_a") < F.col("id_b"), ["id_a", "id_b", "fp_a", "fp_b"])
         .withColumn("hamming", F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b"))).cast("long"))
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
@@ -932,57 +978,6 @@ def chunk_dedup(
     )
 
 
-def _band_from_sigs(sigs: DataFrame, num_hashes: int, bands: int) -> DataFrame:
-    """(id, sig) -> (id, sig, band, bucket): the banding step, shared by
-    minhash_lsh_pairs and the incremental probe (:func:`_minhash_probe`),
-    so the bucket hash can never drift between the full and incremental
-    paths.
-
-    ``bands`` must divide ``num_hashes`` exactly: slicing b bands of
-    r = num_hashes//bands rows silently DISCARDED the trailing
-    num_hashes %% bands signature slots — candidate recall quietly fell
-    below the 1-(1-j^r)^b tuning math, and a store built under one
-    remainder convention would not protect against a probe built under
-    another (same guard as lsh_topk)."""
-    _check_bands(num_hashes, bands)
-    r = num_hashes // bands
-    return sigs.select(
-        "id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.hash(F.slice("sig", i * r + 1, r)).alias("bucket"),
-                    )
-                    for i in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "sig", "bb.band", "bb.bucket")
-
-
-def _check_bands(num_hashes: int, bands: int) -> None:
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"bands={bands} must divide num_hashes={num_hashes}: the "
-            f"trailing {num_hashes % bands} signature slots would be "
-            "silently dropped from every band bucket"
-        )
-
-
-def _sig_estimate(num_hashes: int):
-    """Signature Jaccard estimate over paired sig_a/sig_b columns: fraction
-    of equal minhash slots.  THE single implementation — the full-batch
-    pair verifier and the incremental probe both call it, so the
-    'signatures estimate identically' contract between them cannot drift
-    (same factoring as _band_from_sigs)."""
-    return F.size(
-        F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda eq: eq)
-    ) / F.lit(num_hashes)
-
-
 # --- Incremental MinHash store ---------------------------------------------
 # One layout, written by minhash_store_init / minhash_dedup_incremental and
 # by streaming/ingest.run_neardup_dedup_stream: a SnapshotTable of the
@@ -1073,43 +1068,35 @@ def _minhash_probe(
     (dup_of = the stored id) or against an earlier-id doc of ``batch``
     itself (intra-batch dedup, first-id-wins like dedup_exact).  Both
     frames carry ``id_col`` and ``minhash_sig``; each side's band keys come
-    from :func:`_band_from_sigs` here, so the store is touched only through
-    (band, bucket) equality joins.  ``store`` None (no standing corpus)
-    leaves the intra-batch pairs.  THE probe of minhash_dedup_incremental
-    and streaming/ingest.run_neardup_dedup_stream.
+    from :func:`_band_from_sigs` here and the pairs from
+    :func:`_bucket_join`, so the store is touched only through (band,
+    bucket) equality joins.  ``store`` None (no standing corpus) leaves the
+    intra-batch pairs.  THE probe of minhash_dedup_incremental and
+    streaming/ingest.run_neardup_dedup_stream.
 
     A doc is never a duplicate of ITSELF: a doc whose id already sits in
     ``store`` (a re-delivered document) does not match its own stored
     copy at est_jaccard 1.0, which would drop it from the corpus."""
 
+    buckets = _sig_buckets(num_hashes, bands)
+
     def banded(docs: DataFrame) -> DataFrame:
         sigs = docs.filter(F.col(_SIG).isNotNull()).select(
             F.col(id_col).alias("id"), F.col(_SIG).alias("sig")
         )
-        return _band_from_sigs(sigs, num_hashes, bands)
+        return _band_from_sigs(sigs, ["id", "sig"], buckets)
 
     new_b = banded(batch)
-    n = new_b.select(
-        F.col("id").alias("id_b"), F.col("sig").alias("sig_b"), "band", "bucket"
-    )
+    n = _sig_side(new_b, "b")
 
     def pairs_with(other: DataFrame, keep) -> DataFrame:
-        o = other.select(
-            F.col("id").alias("id_a"), F.col("sig").alias("sig_a"), "band", "bucket"
-        )
-        return (
-            n.join(o, ["band", "bucket"])
-            .filter(keep)
-            .select("id_b", "id_a", "sig_a", "sig_b")
-            .distinct()
-        )
+        return _bucket_join(n, _sig_side(other, "a"), keep, ["id_b", "id_a", "sig_a", "sig_b"])
 
     pairs = pairs_with(new_b, F.col("id_a") < F.col("id_b"))
     if store is not None:
         pairs = pairs_with(banded(store), F.col("id_a") != F.col("id_b")).unionByName(pairs)
     return (
-        pairs.withColumn("est_jaccard", _sig_estimate(num_hashes))
-        .filter(F.col("est_jaccard") >= threshold)
+        _sig_verified(pairs, num_hashes, threshold)
         .select(
             F.col("id_b").alias("new_id"),
             F.col("id_a").alias("dup_of"),

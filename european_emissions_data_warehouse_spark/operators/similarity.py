@@ -117,7 +117,7 @@ def _width_checked(vec_col, dim: int, where: str):
     pads the shorter side with nulls, the signature fold accumulates null,
     and ``F.when(s >= 0, ...)`` emits bit 0 for EVERY plane of EVERY vector
     — all vectors land in one bucket per band and the 'bucket join'
-    silently degenerates to the full cross product (code-review r4).  The
+    silently degenerates to the full cross product.  The
     same null-collapse corrupts PQ subspace slices.  size() is O(1) on an
     array, stays in codegen, and fails loudly instead."""
     return F.when(F.size(vec_col) == dim, vec_col).otherwise(
@@ -225,10 +225,8 @@ def _rank_stratified_min_ids(
     stratification — stratum(rk) = floor((rk-1)*k/n) with the min id per
     stratum — occupying min(k, n) strata PROVABLY (each stratum's rank
     preimage has length n/k >= 1 whenever n >= k).  One helper, one
-    formula: it previously existed as four hand-synced copies (tier 3
-    init, the IVF and PQ sampled-training paths, the two-level per-list
-    init), and this file's history carries two occupancy bugs fixed in
-    exactly this logic (code-review r4, final pass).
+    formula, for tier 3 init, the IVF and PQ sampled-training paths and
+    the two-level per-list init.
 
     With ``partition_cols`` the rank window is partitioned (never
     single-partition at scale — the two-level per-list use); without, the
@@ -274,9 +272,8 @@ def _stratified_init_ids(
     corpus), so oracle replays are unchanged.  But a strided or
     content-correlated id scheme (per-source ids with stride 2, k even)
     leaves strata empty and the quantizer silently shrinks — the same
-    occupancy bug ivf_build_centroids fixed for hash samples
-    (code-review r4, this round: the even-id corpus collapsed k1=2 coarse
-    k-means to ONE centroid).
+    occupancy bug ivf_build_centroids fixed for hash samples (an even-id
+    corpus collapsed k1=2 coarse k-means to ONE centroid).
 
     Tier 2 — salted xxhash64 residue: id structure cannot correlate with
     hash residues, so for n >> k all strata are occupied with overwhelming
@@ -390,7 +387,7 @@ def ivf_build_centroids(
         ).localCheckpoint(eager=False)
         # FAISS errors on too few training points; a sample smaller than k
         # would silently shrink (or empty) the quantizer and every index
-        # built on it (code-review r4).  The count is one pass over the
+        # built on it.  The count is one pass over the
         # SAMPLE, never the corpus.
         n_train = train.count()
         if n_train < n_centroids:
@@ -401,7 +398,7 @@ def ivf_build_centroids(
             )
         # residue strata of RAW ids can be unoccupied on a hash sample
         # (expected occupancy at n=20,k=16 is ~12 — the quantizer silently
-        # shrank past the count guard; code-review r4): rank-proportional
+        # shrank past the count guard): rank-proportional
         # strata instead (_rank_stratified_min_ids — all k provably
         # occupied for n_train >= k).  The rank window is a single pass
         # over the SAMPLE (bounded by the 1/mod rate the caller chose),
@@ -427,7 +424,7 @@ def ivf_build_centroids(
         )
         sums = exploded.groupBy("centroid_id", "dim").agg(F.avg("x").alias("m"))
         # k·dim per-dim means collected and re-emitted as a LITERAL frame
-        # (r10, VERDICT r9 item #3 — the MLlib Lloyd shape): one job per
+        # (the MLlib Lloyd shape): one job per
         # iteration instead of a per-consumer broadcast DAG build, the
         # collect_list re-aggregation exchange gone, and no lineage to
         # truncate (the old per-iteration localCheckpoint is obsolete).
@@ -460,7 +457,7 @@ def ivf_assign(
     narrow pass over the corpus, zero shuffle, zero sort.
 
     In-row argmax against the centroid codebook as a LITERAL array of
-    (vector, norm, id) structs (r10, VERDICT r9 item #1): each corpus row
+    (vector, norm, id) structs: each corpus row
     folds over the k-entry array with ``array_max(transform(...))``, whose
     comparison struct (sim desc, centroid_id asc via negation) encodes
     EXACTLY the ordering the previous ``max_by`` aggregate used — winners
@@ -588,9 +585,9 @@ def exact_centroid_means(
     flat Lloyd step (centroid_id), the PQ subspace step (sub, centroid_id),
     and the two-level sub step (coarse_id, sub_id) all call it, so the
     'bit-identical cross-engine' contract cannot silently diverge between
-    paths (code-review r4).
+    paths.
 
-    Returns a LITERAL frame (r10 optimization, VERDICT r9 item #3): the
+    Returns a LITERAL frame: the
     k·dim (group, dim) integer sums — codebook-sized and corpus-
     independent, the same rows Spark MLlib's Lloyd step collects every
     iteration — are collected in ONE job and the means assembled driver-
@@ -630,7 +627,7 @@ def two_level_split(k: int) -> tuple[int, int]:
     coarse lists x k2=ceil(k/k1) sub-clusters.  The ACTUAL cluster-id space
     is [0, k1*k2), which exceeds ``k`` whenever k is not grid-exact (k=7 ->
     3x3=9 ids) — consumers checking coverage bounds must use this helper,
-    not ``k`` (code-review r4)."""
+    not ``k``."""
     import math
 
     k1 = max(1, int(math.ceil(math.sqrt(k))))
@@ -718,8 +715,7 @@ def kmeans_two_level(
     # sub-quantizer below k2 — the same occupancy bug ivf_build_centroids
     # fixes for hash samples.  stratum(rk) = floor((rk-1)*k2/n_list) occupies
     # min(k2, n_list) strata provably; the rank window is partitioned by
-    # coarse_id (never single-partition) and runs once, at init only
-    # (code-review r4).
+    # coarse_id (never single-partition) and runs once, at init only.
     # the init aggregate carries each stratum's min-id VECTOR out with it
     # (min_by — r10, same carry as the flat tier-1 init): the previous
     # broadcast fetch join here paid one extra full pass over the coarse
@@ -766,7 +762,7 @@ def semdedup_pairs_scaled(
     ``assigned``: a precomputed :func:`kmeans_two_level` result — callers
     that also inspect the clustering (coverage checks, telemetry) pass it
     here so the Lloyd passes run ONCE, not once per consumer (clustering
-    dominates the cost; code-review r4)."""
+    dominates the cost)."""
     if assigned is None:
         assigned = kmeans_two_level(
             vectors, id_col, vec_col, k=k, n_iters=n_iters
@@ -775,8 +771,7 @@ def semdedup_pairs_scaled(
         # a precomputed assignment built with a DIFFERENT k than the caller
         # declares would pair under one clustering while coverage checks
         # bound against another — no error, quietly wrong conclusions.  Pin
-        # the id space to the declared grid, row-level and lazy
-        # (code-review r4).
+        # the id space to the declared grid, row-level and lazy.
         k1, k2 = two_level_split(k)
         bound = k1 * k2
         assigned = assigned.withColumn(
@@ -855,7 +850,7 @@ def pq_reconstruct(
     # materialized: the subspace explode is referenced by the init, every
     # Lloyd assign, and the final encode pass — without the checkpoint the
     # upstream chain (for IVF-PQ: the full coarse assignment + residuals)
-    # replays per consumer (code-review r4).  Cost: m·n subvector rows of
+    # replays per consumer.  Cost: m·n subvector rows of
     # executor-local storage, the same order as the corpus itself.
     subs = vectors.select(
         F.col(id_col).alias("id"),
@@ -1027,7 +1022,7 @@ def semdedup_pairs(
     Spark re-executes the full k-means DAG per side (8 corpus scans
     observed; 1 after).
 
-    Skew cap (VERDICT r2 item #3): a hot cluster degrades Σ n_c² toward
+    Skew cap: a hot cluster degrades Σ n_c² toward
     all-pairs IN ONE TASK — the per-key fan-out, not the total work, is
     what kills a 1000-executor run.  With ``max_pair_block`` set, each
     cluster of size n_c is cut into nb = ceil(n_c / max_pair_block)
@@ -1192,7 +1187,7 @@ def ivfpq_build_index(
     )
     # materialized: the full-corpus coarse assignment (n·k cosine scoring +
     # a shuffle) feeds BOTH the residual/PQ chain and the final index join —
-    # without the checkpoint it re-executes per consumer (code-review r4)
+    # without the checkpoint it re-executes per consumer
     assigned = (
         ivf_assign(corpus, coarse, id_col, vec_col)
         .join(F.broadcast(coarse), "centroid_id")
@@ -1317,8 +1312,7 @@ def _probe_lists(queries, centroids, id_col: str, vec_col: str, n_probe: int):
     """(query_id, q_vec, _nq, centroid_id): route each query to its n_probe
     nearest coarse lists — broadcast routing table, query norm hoisted once.
     THE shared routing stanza of ivf_topk and ivfpq_search: identical
-    window specs and tie-breaks previously existed as two verbatim copies
-    that had to stay hand-synced (code-review r4, final pass)."""
+    window specs and tie-breaks exist once."""
     q_scored = (
         queries.select(
             F.col(id_col).alias("query_id"),
@@ -1362,8 +1356,8 @@ def ivf_topk(
     ``exclude_self``: drop candidates whose id equals the query id — right
     for self-search (queries ⊆ corpus), WRONG when queries and corpus are
     different collections that happen to share an id space (bitext groups
-    aligned by id: the filter silently removed the gold pair; code-review
-    r4, final pass) — cross-collection callers pass False."""
+    aligned by id: the filter silently removed the gold pair) —
+    cross-collection callers pass False."""
     from pyspark.sql import Window
 
     centroids = ivf_build_centroids(corpus, id_col, vec_col, n_centroids, n_iters)
@@ -1409,14 +1403,14 @@ def lsh_topk(
     recall collapses — recall 1-(1-p^r)^b governs the choice.
     At 100 TB the bucket join replaces the cross join — shuffle volume drops
     from |Q|x|N| to the bucket occupancy."""
-    if n_planes % bands != 0:
-        raise ValueError(
-            f"lsh_topk: n_planes={n_planes} is not divisible by bands={bands} "
-            f"— the trailing {n_planes % bands} planes would be computed and "
-            "silently discarded, weakening the signature vs the documented "
-            "1-(1-p^r)^b tuning math (code-review r4)"
-        )
-    r = n_planes // bands
+    from european_emissions_data_warehouse_spark.operators.dedup import (
+        _band_from_sigs,
+        _bucket_join,
+        _sig_buckets,
+    )
+
+    # refuses a bands that does not divide n_planes before the plane job
+    buckets = _sig_buckets(n_planes, bands)
     # plane matrix evaluated once (driver-side literals, bit-identical to
     # the per-row hash derivation — see _hyperplane_planes)
     planes = _hyperplane_planes(corpus.sparkSession, dim, n_planes)
@@ -1424,45 +1418,24 @@ def lsh_topk(
     def banded(df: DataFrame, prefix: str) -> DataFrame:
         # the norm rides the banded frame as 8 bytes (computed once per
         # input vector, not once per band-collision candidate)
-        return (
-            df.select(
-                F.col(id_col).alias(f"{prefix}_id"),
-                F.col(vec_col).alias(f"{prefix}_vec"),
-                norm(F.col(vec_col)).alias(f"_n{prefix}"),
-            )
-            .withColumn("sig", _signature_from_planes(F.col(f"{prefix}_vec"), planes))
-            .select(
-                f"{prefix}_id",
-                f"{prefix}_vec",
-                f"_n{prefix}",
-                F.explode(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.lit(i).alias("band"),
-                                F.hash(F.slice("sig", i * r + 1, r)).alias("bucket"),
-                            )
-                            for i in range(bands)
-                        ]
-                    )
-                ).alias("bb"),
-            )
-            .select(f"{prefix}_id", f"{prefix}_vec", f"_n{prefix}", "bb.band", "bb.bucket")
-        )
+        signed = df.select(
+            F.col(id_col).alias(f"{prefix}_id"),
+            F.col(vec_col).alias(f"{prefix}_vec"),
+            norm(F.col(vec_col)).alias(f"_n{prefix}"),
+        ).withColumn("sig", _signature_from_planes(F.col(f"{prefix}_vec"), planes))
+        return _band_from_sigs(signed, [f"{prefix}_id", f"{prefix}_vec", f"_n{prefix}"], buckets)
 
-    qb = banded(queries, "q")
-    cb = banded(corpus, "c")
     # the norm columns are functions of the vecs, so keeping them in the
     # distinct leaves the candidate set unchanged
-    cand = (
-        qb.join(cb, ["band", "bucket"])
-        .filter(F.col("c_id") != F.col("q_id"))
-        .select(
+    cand = _bucket_join(
+        banded(queries, "q"),
+        banded(corpus, "c"),
+        F.col("c_id") != F.col("q_id"),
+        [
             F.col("q_id").alias("query_id"),
             F.col("c_id").alias("neighbor_id"),
             "q_vec", "c_vec", "_nq", "_nc",
-        )
-        .distinct()
+        ],
     )
     # sim = dot/(|q|·|c|) — cosine()'s exact expression tree, bit-identical
     scored = cand.withColumn(
@@ -1565,8 +1538,8 @@ def mutual_nn_pairs_ann(
     margin_a = a's top-1 sim minus its runner-up within the probed
     candidates (NULL when only one candidate is seen) — the CCMatrIX-style
     filtering signal the exact form emits; omitting it broke any
-    margin-based quality cut on the scale path (code-review r4, final
-    pass).  ``exclude_self=False`` on both probes: the groups are
+    margin-based quality cut on the scale path.  ``exclude_self=False``
+    on both probes: the groups are
     DIFFERENT collections, and ivf_topk's self-id filter silently removed
     gold pairs whose aligned ids coincide across groups."""
     a = vectors.filter(F.col(group_col) == group_a).select(

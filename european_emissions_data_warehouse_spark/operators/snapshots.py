@@ -114,6 +114,7 @@ class SnapshotTable:
         self.spark = spark
         self.path = path.rstrip("/")
         self.commits_dir = f"{self.path}/_commits"
+        self._entries: dict[int, tuple[list[str], dict[str, str]]] = {}
 
     # --- log ------------------------------------------------------------
 
@@ -153,9 +154,15 @@ class SnapshotTable:
 
     def _entry(self, version: int) -> tuple[list[str], dict[str, str]]:
         """A commit's data dirs and its key=value metadata, from one
-        manifest read (layout in the module docstring)."""
-        first, *lines = self._manifest_text(version).splitlines()
-        return first.split(","), dict(ln.split("=", 1) for ln in lines if "=" in ln)
+        manifest read (layout in the module docstring).  A published
+        manifest never changes (``_publish`` only creates absent names and
+        ``vacuum`` deletes only ``.tmp_`` staging files), so each instance
+        reads and parses a version's manifest once."""
+        if version not in self._entries:
+            first, *lines = self._manifest_text(version).splitlines()
+            meta = dict(ln.split("=", 1) for ln in lines if "=" in ln)
+            self._entries[version] = (first.split(","), meta)
+        return self._entries[version]
 
     def _dirs(self, version: int) -> list[str]:
         """The data dirs a commit's snapshot reads."""
@@ -165,7 +172,7 @@ class SnapshotTable:
         """key=value metadata recorded with a commit (e.g. the streaming
         batch_id that produced it, and the snapshot ``schema``); empty for
         metadata-less commits."""
-        return self._entry(version)[1]
+        return dict(self._entry(version)[1])
 
     def _cas_fs(self):
         """The table's JVM handle, filesystem and scheme; raises for a

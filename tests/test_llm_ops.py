@@ -111,6 +111,44 @@ def test_minhash_banding_rejects_remainder(spark, sf_dir, tmp_path):
     assert not store.exists()
 
 
+def test_every_lsh_family_finds_candidates_through_one_bucket_join(
+    spark, sf_dir, monkeypatch
+):
+    """MinHash (full, and the incremental probe with and without a store),
+    SimHash and hyperplane LSH share one candidate join,
+    ``dedup._bucket_join``: a rewrite of that join changes all of them, and
+    no family joins its (band, bucket) rows through a copy of its own."""
+    from european_emissions_data_warehouse_spark.operators import dedup
+
+    calls = []
+    real = dedup._bucket_join
+
+    def counted(*args):
+        calls.append(args)
+        return real(*args)
+
+    monkeypatch.setattr(dedup, "_bucket_join", counted)
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").limit(10)
+    emb = load_table(spark, sf_dir, "embeddings").limit(10)
+    signed = spark.createDataFrame(
+        [(i, [i] * 32) for i in range(4)], "doc_id long, minhash_sig array<bigint>"
+    )
+    builds = {
+        "minhash_lsh_pairs": (lambda: minhash_lsh_pairs(docs), 1),
+        "simhash_pairs": (lambda: dedup.simhash_pairs(docs), 1),
+        "lsh_topk": (lambda: lsh_topk(emb, emb, n_planes=16, bands=8), 1),
+        "_minhash_probe": (lambda: dedup._minhash_probe(signed, None, "doc_id", 32, 8, 0.5), 1),
+        "_minhash_probe with a store": (
+            lambda: dedup._minhash_probe(signed, signed, "doc_id", 32, 8, 0.5),
+            2,
+        ),
+    }
+    for name, (build, joins) in builds.items():
+        before = len(calls)
+        build()
+        assert len(calls) - before == joins, f"{name}: {len(calls) - before} bucket joins"
+
+
 def test_lsh_dim_mismatch_fails_loudly(spark, sf_dir):
     """A declared dim that disagrees with the embedding width must raise:
     zip_with pads the short side with nulls, the signature fold goes null,

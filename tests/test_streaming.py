@@ -751,6 +751,40 @@ def test_neardup_stream_signs_its_batch_in_one_scan(spark, sf_dir, tmp_path, mon
     shutil.rmtree(str(tmp_path), ignore_errors=True)
 
 
+def test_neardup_drain_reads_each_manifest_once_per_table(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A published manifest never changes, so a SnapshotTable reads each
+    one once: a one-batch drain onto a one-version corpus reads that
+    version's manifest once for the pre-drain parameter check and once for
+    the trigger's table, however many probes consult it (the replay
+    ledger, the generation guard, the parameter guard, the read and the
+    append's schema check)."""
+    from european_emissions_data_warehouse_spark.operators import snapshots
+
+    landing, corpus, ck = (str(tmp_path / n) for n in ("landing", "corpus", "ckpt"))
+    docs = load_table(spark, sf_dir, "documents").limit(40).localCheckpoint()
+    docs.coalesce(1).write.parquet(landing)
+    _drain_neardup(spark, landing, corpus, ck)
+    docs.withColumn("doc_id", F.col("doc_id") + 1000).coalesce(1).write.mode(
+        "append"
+    ).parquet(landing)
+
+    reads = []
+    real = snapshots.read_small_text
+
+    def counted(spark_, path):
+        reads.append(path)
+        return real(spark_, path)
+
+    monkeypatch.setattr(snapshots, "read_small_text", counted)
+    _drain_neardup(spark, landing, corpus, ck)
+    assert snapshots.SnapshotTable(spark, corpus).history() == [0, 1]
+    manifest_reads = [p for p in reads if p.endswith("/_commits/00000000")]
+    assert len(manifest_reads) <= 2, manifest_reads
+    shutil.rmtree(str(tmp_path), ignore_errors=True)
+
+
 def test_neardup_stream_refuses_other_minhash_params(spark, sf_dir, tmp_path):
     """A corpus built under one MinHash convention refuses a drain under
     another before the query starts: probing it with other gram
